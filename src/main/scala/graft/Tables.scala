@@ -41,10 +41,9 @@ object Tables {
     * schema must [[invalidateSchema]] first — an explicit-schema read
     * of a changed file silently yields nulls for renamed columns
     * instead of failing (r19 ADVICE), so the hook exists to make such
-    * rewrites loud. No current caller rewrites a cached path with a
-    * new schema: the corpus and reference files are immutable per JVM
-    * and the pipeline sinks that re-land per invocation keep a fixed,
-    * code-determined schema. */
+    * rewrites loud. The corpus and reference files are immutable per
+    * JVM; the pipeline sinks that re-land per invocation
+    * (`IncrementalRunner`, `ModelArtifacts`) invalidate on every write. */
   def schemaFor(spark: SparkSession,
       path: String): org.apache.spark.sql.types.StructType =
     schemaCache.computeIfAbsent(path,

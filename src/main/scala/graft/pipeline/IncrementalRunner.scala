@@ -41,18 +41,19 @@ object IncrementalRunner {
       partCol, path)
 
   /** The materialized pipeline output across all runs so far. Schema
-    * served from the catalog cache (r19 verdict #1): the sink re-lands
-    * per invocation but its schema is code-determined and fixed per
-    * JVM, so inference (footer reads + an extra listing of the
-    * partition tree) is paid once, not per read. A pipeline change
-    * that alters the sink schema is a code change — new JVM, fresh
-    * cache. */
+    * served from the catalog cache (r19 verdict #1): inference (footer
+    * reads + an extra listing of the partition tree) is paid once per
+    * landing, not per read; every write drops the cached entry. */
   def readSink(s: SparkSession, path: String): DataFrame =
     s.read.schema(graft.Tables.schemaFor(s, path)).parquet(path)
 
-  private def write(out: DataFrame, partCol: String, path: String): Unit =
+  /** Re-lands `path`: its cached schema is dropped first, so a
+    * pipeline whose output gained a column reads it back. */
+  private def write(out: DataFrame, partCol: String, path: String): Unit = {
+    graft.Tables.invalidateSchema(path)
     out.write.mode("overwrite")
       .option("partitionOverwriteMode", "dynamic")
       .partitionBy(partCol)
       .parquet(path)
+  }
 }

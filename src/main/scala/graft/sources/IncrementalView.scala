@@ -168,8 +168,8 @@ object IncrementalView {
               })
             if (keep.isEmpty)
               TxTable.read(spark, dst).filter(lit(false))
-            else spark.read.parquet(
-              keep.map(new org.apache.hadoop.fs.Path(dst, _).toString): _*)
+            else TxTable.scanFiles(spark,
+              keep.map(new org.apache.hadoop.fs.Path(dst, _).toString))
               .filter(col(keyCol).cast("string").isin(changedKeys: _*))
           case _ => delta.select(col(keyCol), lit(0L).as("n"),
             lit(0L).as("s")).filter(lit(false))
@@ -408,8 +408,8 @@ object IncrementalView {
               })
             if (keep.isEmpty)
               TxTable.read(spark, dst).filter(lit(false))
-            else spark.read.parquet(
-              keep.map(new org.apache.hadoop.fs.Path(dst, _).toString): _*)
+            else TxTable.scanFiles(spark,
+              keep.map(new org.apache.hadoop.fs.Path(dst, _).toString))
               .filter(col(grpCol).cast("string").isin(changedGroups: _*))
           case _ => delta.select(col(grpCol), lit(0L).as("n"),
             lit(0L).as("s")).filter(lit(false))

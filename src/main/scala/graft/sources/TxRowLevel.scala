@@ -210,8 +210,8 @@ private[sources] class TxReplaceBatchWrite(path: String, schema: StructType,
         // LOGICAL contract (it re-physicalizes) — translate first
         def logical(df: org.apache.spark.sql.DataFrame) =
           mapping.fold(df)(_.toLogical(df))
-        val post = logical(spark.read.parquet(
-          files.map(f => new Path(path, f).toString): _*))
+        val post = logical(TxTable.scanFiles(spark,
+          files.map(f => new Path(path, f).toString)))
         // pre-images are the replaced files' VISIBLE rows (standing
         // deletion predicates applied), matching what the op scan fed
         // the rewrite — hidden rows must not surface as CDF deletes

@@ -681,7 +681,8 @@ private[sources] class TxSparkTable(spark: SparkSession, path: String,
     TxTable.mappingAt(spark, path, Some(snap.version))
 
   private val rawFooter: StructType = snap.files.headOption match {
-    case Some(f) => spark.read.parquet(new Path(path, f).toString).schema
+    case Some(f) =>
+      TxTable.scanFiles(spark, Seq(new Path(path, f).toString)).schema
     case None => new StructType()
   }
 

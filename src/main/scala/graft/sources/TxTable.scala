@@ -27,6 +27,14 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * (current anti updates) ++ updates as fresh files; the old files
   * stay untouched for older snapshots.
   *
+  * Readers take the schema from one parquet footer, read on the
+  * driver ([[scanFiles]]): the first file's by path name, the one
+  * Spark's own inference reads. Data, change and view files are
+  * immutable and self-describing, so that is the schema inference
+  * would give, without the Spark job it runs. Only a `mergeSchema`
+  * read (option or `spark.sql.parquet.mergeSchema`) keeps Spark's
+  * inference, which unions every file's footer.
+  *
   * At 100 TB the log is bounded by commits (not rows) and the data
   * path is ordinary distributed parquet. Production hardening beyond
   * scope here: per-partition file pruning in the manifest, log
@@ -158,15 +166,16 @@ object TxTable {
     * single plain scan, a table with one DV'd file costs exactly one
     * extra relation, and ONE DML's candidates — however many files —
     * cost one relation total. `abs` = files are already absolute
-    * (clone references); otherwise table-relative. */
+    * (clone references); otherwise table-relative. Each group's schema
+    * is its first file's footer (by path name), read on the driver
+    * ([[scanFiles]]); `mergeSchema` unions every footer through
+    * Spark's inference. */
   private[sources] def readFilesDv(spark: SparkSession, table: String,
       snap: Snapshot, files: Seq[String],
       m: Option[ColumnMapping.Mapping],
       mergeSchema: Boolean = false): DataFrame = {
-    def path(f: String) = new Path(table, f).toString
     def rd(fs: Seq[String]) =
-      spark.read.option("mergeSchema", mergeSchema.toString)
-        .parquet(fs.map(path): _*)
+      scanFiles(spark, fs.map(new Path(table, _).toString), mergeSchema)
     if (snap.dels.isEmpty)
       return toLogicalFrame(rd(files), m)
     val byFile = snap.delsByFile
@@ -177,6 +186,26 @@ object TxTable {
         applyDels(toLogicalFrame(rd(fs), m),
           byFile.getOrElse(fs.head, Nil))
     }.reduce(_.unionByName(_, allowMissingColumns = true))
+  }
+
+  /** The one scan of table-owned parquet files (data, change and view
+    * files; absolute `paths`). Without `mergeSchema` (argument or
+    * `spark.sql.parquet.mergeSchema`) Spark's inference reads just the
+    * footer of the first file by path name, in a Spark job of its own;
+    * these files are immutable, so that footer is read here on the
+    * driver instead and handed to the reader as its schema — the same
+    * schema, no job. Merging reads, no paths, or an unreadable first
+    * file keep Spark's inference (and its error reporting). */
+  private[graft] def scanFiles(spark: SparkSession, paths: Seq[String],
+      mergeSchema: Boolean = false): DataFrame = {
+    val merging = mergeSchema ||
+      spark.conf.get("spark.sql.parquet.mergeSchema", "false").toBoolean
+    val footer =
+      if (merging || paths.isEmpty) None
+      else org.apache.spark.sql.execution.datasources.parquet
+        .GraftFooterBridge.schemaOf(spark, paths)
+    footer.fold(spark.read.option("mergeSchema", merging))(spark.read.schema)
+      .parquet(paths: _*)
   }
 
   private def fs(spark: SparkSession, p: Path): FileSystem =
@@ -1009,7 +1038,7 @@ object TxTable {
   private def logicalColumns(spark: SparkSession, table: String,
       cur: Snapshot, m: ColumnMapping.Mapping): Seq[String] = {
     val fromFiles = cur.files.headOption.toSeq.flatMap(f =>
-      spark.read.parquet(new Path(table, f).toString)
+      scanFiles(spark, Seq(new Path(table, f).toString))
         .schema.fieldNames.toSeq.flatMap(m.logicalOf))
     val declared = declaredSchema(spark, table)
       .map(_.fieldNames.toSeq).getOrElse(Nil)
@@ -1388,7 +1417,7 @@ object TxTable {
     if (cons.isEmpty || files.isEmpty) return
     // staged files store PHYSICAL names; constraints speak logical
     val df = toLogicalFrame(
-      spark.read.parquet(files.map(new Path(table, _).toString): _*),
+      scanFiles(spark, files.map(new Path(table, _).toString)),
       mappingAt(spark, table))
     val flags = cons.zipWithIndex.map { case ((_, e), i) =>
       not(coalesce(expr(e), lit(true))).as(s"__viol_$i") }
@@ -1725,7 +1754,7 @@ object TxTable {
     val added = addedBetween(spark, table, sinceVersion, head)
     if (added.isEmpty) (spark.emptyDataFrame, head.version)
     else (toLogicalFrame(
-      spark.read.parquet(added.map(new Path(table, _).toString): _*),
+      scanFiles(spark, added.map(new Path(table, _).toString)),
       mappingAt(spark, table, Some(head.version))),
       head.version)
   }
@@ -1813,8 +1842,8 @@ object TxTable {
         val df = files
           .groupBy(f => delSignature(byFile.getOrElse(f, Nil))).toSeq
           .sortBy(_._2.headOption.getOrElse("")).map { case (_, fs) =>
-            applyDels(toLogicalFrame(spark.read.parquet(
-              fs.map(new Path(table, _).toString): _*), m),
+            applyDels(toLogicalFrame(scanFiles(spark,
+              fs.map(new Path(table, _).toString)), m),
               byFile.getOrElse(fs.head, Nil))
           }.reduce(_.unionByName(_))
         (if (kind == "recorded") df
@@ -2132,7 +2161,7 @@ object TxTable {
     val files = writeFiles(df.repartitionByRange(nParts, c(col)), table, next)
     val byName = files.map(f => f.split('/').last -> f).toMap
     val stats = toLogicalFrame(
-      spark.read.parquet(files.map(new Path(table, _).toString): _*),
+      scanFiles(spark, files.map(new Path(table, _).toString)),
       mappingAt(spark, table))
       .groupBy(input_file_name().as("__f"))
       .agg(fmin(c(col)).as("__mn"), fmax(c(col)).as("__mx"))
@@ -2210,7 +2239,7 @@ object TxTable {
       valueCols.map(v =>
         collect_set(c(v).cast("string")).as(s"__vs_$v"))
     val rows = toLogicalFrame(
-      spark.read.parquet(files.map(new Path(table, _).toString): _*),
+      scanFiles(spark, files.map(new Path(table, _).toString)),
       mappingAt(spark, table))
       .groupBy(input_file_name().as("__f"))
       .agg(aggs.head, aggs.tail: _*)
@@ -2341,7 +2370,7 @@ object TxTable {
     // serve both frames logical
     val dynMapping = mappingAt(spark, table)
     val freshDf = () => toLogicalFrame(
-      spark.read.parquet(fresh.map(new Path(table, _).toString): _*),
+      scanFiles(spark, fresh.map(new Path(table, _).toString)),
       dynMapping)
     // canonical string form per transform — the fileValues language.
     // Join/struct field names are index-keyed (__k0, __k1) so
@@ -2642,7 +2671,7 @@ object TxTable {
       .map(_.fieldNames.toSet)
       .orElse(cur.files.headOption.flatMap { f =>
         try {
-          val raw = spark.read.parquet(new Path(table, f).toString).schema
+          val raw = scanFiles(spark, Seq(new Path(table, f).toString)).schema
           Some(mappingAt(spark, table, Some(cur.version))
             .fold(raw)(_.logicalize(raw)).fieldNames.toSet)
         } catch { case _: Exception => None }
@@ -2904,7 +2933,7 @@ object TxTable {
       fpp: Double = 0.01): Map[String, Array[Byte]] = {
     import org.apache.spark.sql.functions.{col => c, input_file_name}
     val written = toLogicalFrame(
-      spark.read.parquet(files.map(new Path(table, _).toString): _*),
+      scanFiles(spark, files.map(new Path(table, _).toString)),
       mappingAt(spark, table))
     val total = math.max(1000L, written.count())
     val perFile = math.max(1000L, 2L * total / files.size)
@@ -3055,7 +3084,8 @@ object TxTable {
     val schema = // footer names are physical; probes are logical
       try {
         val raw =
-          spark.read.parquet(new Path(table, snap.files.head).toString).schema
+          scanFiles(spark, Seq(new Path(table, snap.files.head).toString))
+            .schema
         mappingAt(spark, table, Some(snap.version)).fold(raw)(_.logicalize(raw))
       } catch { case _: Exception => return valueEq }
     valueEq.map { case (col, v) =>
@@ -3158,7 +3188,7 @@ object TxTable {
       valueCols.map(v =>
         collect_set(PartTransform.parse(v).expr).as(s"__vs_$v"))
     val rows = toLogicalFrame(
-      spark.read.parquet(files.map(new Path(table, _).toString): _*),
+      scanFiles(spark, files.map(new Path(table, _).toString)),
       mappingAt(spark, table))
       .groupBy(input_file_name().as("__f"))
       .agg(aggs.head, aggs.tail: _*)
@@ -3308,7 +3338,7 @@ object TxTable {
       declaredSchema(spark, table).orElse(cur.files.headOption.flatMap { f =>
         try {
           val raw =
-            spark.read.parquet(new Path(table, f).toString).schema
+            scanFiles(spark, Seq(new Path(table, f).toString)).schema
           Some(mappingAt(spark, table, Some(cur.version))
             .fold(raw)(_.logicalize(raw)))
         } catch { case _: Exception => None }
@@ -3582,8 +3612,8 @@ object TxTable {
       .sortBy(_._2.headOption.getOrElse("")).map { case (_, fs) =>
         val deleted = byFile(fs.head)
           .map(d => coalesce(d.predicate, lit(false))).reduce(_ || _)
-        toLogicalFrame(spark.read.parquet(
-          fs.map(f => new Path(table, f).toString): _*), m)
+        toLogicalFrame(scanFiles(spark,
+          fs.map(f => new Path(table, f).toString)), m)
           .select(input_file_name().as("__f"),
             when(deleted, 1L).otherwise(0L).as("__hid"))
           .groupBy(col("__f"))
@@ -4037,8 +4067,7 @@ object TxTable {
           read(spark, table).repartitionByRange(targetFiles, c(idxCol)),
           table, next)
         val byName = files.map(f => f.split('/').last -> f).toMap
-        val stats = spark.read
-          .parquet(files.map(new Path(table, _).toString): _*)
+        val stats = scanFiles(spark, files.map(new Path(table, _).toString))
           .groupBy(input_file_name().as("__f"))
           .agg(fmin(c(idxCol)).as("__mn"), fmax(c(idxCol)).as("__mx"))
           .collect()

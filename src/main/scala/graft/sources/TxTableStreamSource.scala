@@ -79,8 +79,8 @@ class TxTableStreamSource extends StreamSourceProvider with DataSourceRegister {
         throw new IllegalArgumentException(
           s"txtable-stream: no committed version at $table — commit v1 " +
             "before defining the stream (the schema comes from the head)"))
-      val raw = spark.read.parquet(
-        snap.files.map(new Path(table, _).toString): _*).schema
+      val raw = TxTable.scanFiles(spark,
+        snap.files.map(new Path(table, _).toString)).schema
       // column-mapped tables stream under their LOGICAL names, with
       // the mapping PINNED at stream definition like the schema
       // itself: physical file names never change, so the pinned

@@ -1,6 +1,6 @@
 package graft
 
-import graft.pipeline.{IncrementalRunner, Pipeline, Stage}
+import graft.pipeline.{IncrementalRunner, ModelArtifacts, Pipeline, Stage}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -85,5 +85,35 @@ class IncrementalRunnerSpec extends AnyFunSuite {
     assert(
       "PartitionFilters: \\[[^\\]]*o_year[^\\]]*\\]".r.findFirstIn(e).nonEmpty,
       s"o_year not in PartitionFilters:\n$e")
+  }
+
+  test("a sink re-landed with an added column reads that column back") {
+    import spark.implicits._
+    val sink = java.nio.file.Files.createTempDirectory("graft_incr_evolve")
+      .toString + "/sink"
+    IncrementalRunner.runAll(pipe, input, "o_year", sink)
+    assert(!IncrementalRunner.readSink(spark, sink).columns.contains("max_cents"))
+    val wider = Pipeline("monthly-wider", Seq(
+      Stage("rollup")(_.groupBy($"o_year", $"o_month")
+        .agg(count(lit(1)).as("n_orders"), sum($"cents").as("cents"),
+          max($"cents").as("max_cents")))))
+    IncrementalRunner.runAll(wider, input, "o_year", sink)
+    val got = IncrementalRunner.readSink(spark, sink)
+    assert(got.columns.contains("max_cents"), got.columns.mkString(", "))
+    assert(got.filter($"max_cents".isNull).isEmpty)
+  }
+
+  test("an artifact re-landed with an added column reloads that column") {
+    import spark.implicits._
+    val store = java.nio.file.Files.createTempDirectory("graft_artifact_evolve")
+      .toString + "/store"
+    ModelArtifacts.write(Seq(("a", 1.0)).toDF("vendor", "b0"), store, "r1")
+    assert(ModelArtifacts.load(spark, store, "r1").columns.toSeq ===
+      Seq("b0", "vendor"))
+    ModelArtifacts.write(Seq(("a", 1.0, 2.0)).toDF("vendor", "b0", "b1"),
+      store, "r1")
+    val got = ModelArtifacts.load(spark, store, "r1")
+    assert(got.select("vendor", "b0", "b1").as[(String, Double, Double)]
+      .collect().toSeq === Seq(("a", 1.0, 2.0)))
   }
 }

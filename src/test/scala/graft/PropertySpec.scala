@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.functions._
 import org.scalacheck.Gen
+import org.scalacheck.rng.Seed
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Property-based checks: every hand-rolled primitive against an
@@ -14,8 +15,31 @@ import org.scalatest.funsuite.AnyFunSuite
 class PropertySpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
 
-  private def cases[A](g: Gen[A], n: Int): Seq[A] =
-    Iterator.continually(g.sample).flatten.take(n).toSeq
+  /** Base of every generator seed: `GRAFT_PROPERTY_SEED`, else fixed,
+    * so a run is repeatable and a failure replays. */
+  private val baseSeed: Long =
+    sys.env.get("GRAFT_PROPERTY_SEED").map(_.toLong).getOrElse(20261017L)
+  /** The running test's name and how many `cases` calls it has made. */
+  private var current = ("", 0)
+
+  override def withFixture(test: NoArgTest) = {
+    current = (test.name, 0)
+    super.withFixture(test)
+  }
+
+  /** `n` cases of `g`, seeded from (base seed, test name, call index):
+    * a test's cases do not depend on which other tests ran. The seed
+    * is logged with the test. */
+  private def cases[A](g: Gen[A], n: Int): Seq[A] = {
+    val (name, i) = current
+    current = (name, i + 1)
+    val seed = Seed(baseSeed).reseed(
+      scala.util.hashing.MurmurHash3.stringHash(s"$name#$i").toLong)
+    info(s"cases #$i: seed ${seed.toBase64} (GRAFT_PROPERTY_SEED=$baseSeed)")
+    Iterator.from(0)
+      .flatMap(k => g(Gen.Parameters.default, seed.reseed(k.toLong)))
+      .take(n).toSeq
+  }
 
   test("LshUtil.buckets == per-plane sign-sum reference (300 random vectors)") {
     val genVec = for {

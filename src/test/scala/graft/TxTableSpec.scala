@@ -1646,4 +1646,126 @@ class TxTableSpec extends AnyFunSuite {
     // and a consumer that lost its place is told so
     intercept[IllegalArgumentException] { feedRows(t, 0L) }
   }
+
+  /** Jobs started by `body` on this thread. Listener events arrive
+    * asynchronously, so a marker job is run after `body` and awaited:
+    * once the listener has seen it, every earlier job start has been
+    * delivered too. */
+  private def jobsDuring(body: => Unit): Int = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val sc = spark.sparkContext
+    val probe = s"construct-${java.util.UUID.randomUUID}"
+    val marker = s"$probe-marker"
+    val groups = new java.util.concurrent.ConcurrentLinkedQueue[String]
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).flatMap(p =>
+          Option(p.getProperty("spark.jobGroup.id"))).foreach(groups.add)
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(probe, "construction probe")
+      try body finally sc.clearJobGroup()
+      sc.setJobGroup(marker, "listener marker")
+      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+      val deadline = System.nanoTime() + 30000000000L
+      while (!groups.contains(marker) && System.nanoTime() < deadline)
+        Thread.sleep(10)
+      assert(groups.contains(marker), "listener never saw the marker job")
+      groups.toArray.count(_ == probe)
+    } finally sc.removeSparkListener(listener)
+  }
+
+  test("constructing read / asOf / readRange / changeFeed frames runs no job") {
+    val t = freshTable()
+    TxTable.enableChangeFeed(spark, t)
+    TxTable.overwriteIndexed((1 to 40).map(i => (i, s"v$i")).toDF("k", "v"), t, "k")
+    TxTable.append(df(41 -> "x", 42 -> "y"), t)
+    TxTable.updateWhere(spark, t, Seq(("k", 1.0, 5.0)), Nil,
+      Map("v" -> lit("u")))
+    val dv = freshTable()
+    TxTable.enableDeletionVectors(spark, dv)
+    TxTable.overwrite(df(1 -> "a", 2 -> "b", 3 -> "c"), dv)
+    TxTable.deleteWhere(spark, dv, Seq(("k", 2.0, 2.0)))
+    val built = Seq(
+      "read" -> (() => TxTable.read(spark, t)),
+      "read(asOf)" -> (() => TxTable.read(spark, t, asOf = Some(1))),
+      "readRange" -> (() => TxTable.readRange(spark, t, "k", 3.0, 12.0)),
+      "changeFeed" -> (() => TxTable.changeFeed(spark, t, 0L)),
+      "read with deletion vectors" -> (() => TxTable.read(spark, dv)))
+    built.foreach { case (name, make) =>
+      var frame: org.apache.spark.sql.DataFrame = null
+      val jobs = jobsDuring { frame = make() }
+      assert(jobs === 0, s"constructing $name started $jobs job(s)")
+      assert(frame.count() > 0, s"$name is empty — the probe is vacuous")
+    }
+  }
+
+  test("scanFiles schema == Spark's inferred schema for every table-owned file set") {
+    import graft.sources.IncrementalView
+    def abs(t: String, fs: Seq[String]) =
+      fs.map(new org.apache.hadoop.fs.Path(t, _).toString)
+    def files(t: String) = abs(t, TxTable.snapshot(spark, t).get.files)
+    def same(what: String, paths: Seq[String]) = {
+      val got = TxTable.scanFiles(spark, paths).schema
+      assert(got === spark.read.parquet(paths: _*).schema, what)
+      got
+    }
+    // plain data files
+    val plain = freshTable()
+    TxTable.overwrite(df(1 -> "a", 2 -> "b"), plain)
+    TxTable.append(df(3 -> "c"), plain)
+    same("plain", files(plain))
+    // change files carrying _change_type
+    val cdf = freshTable()
+    TxTable.enableChangeFeed(spark, cdf)
+    TxTable.append(Seq((1, "a", 10L), (2, "b", 20L)).toDF("k", "g", "v"), cdf)
+    TxTable.updateWhere(spark, cdf, Seq(("k", 1.0, 1.0)), Nil,
+      Map("v" -> lit(11L)))
+    val changes = abs(cdf, TxTable.snapshot(spark, cdf).get.changes)
+    assert(changes.nonEmpty, "update recorded no change files")
+    assert(same("change files", changes).fieldNames
+      .contains(TxTable.ChangeTypeCol))
+    // a maintainMinMax view (array tier columns)
+    val view = freshTable()
+    IncrementalView.maintainMinMax(spark, cdf, view, "g", "v")
+    same("min/max view", files(view))
+    // a column-mapped table: files speak physical names
+    val mapped = freshTable()
+    TxTable.overwrite(df(1 -> "a"), mapped)
+    TxTable.renameColumn(spark, mapped, "v", "w")
+    TxTable.append(Seq((2, "b")).toDF("k", "w"), mapped)
+    same("column-mapped", files(mapped))
+    // a table with deletion vectors
+    val dv = freshTable()
+    TxTable.enableDeletionVectors(spark, dv)
+    TxTable.overwrite(df(1 -> "a", 2 -> "b", 3 -> "c"), dv)
+    TxTable.deleteWhere(spark, dv, Seq(("k", 2.0, 2.0)))
+    assert(TxTable.snapshot(spark, dv).get.dels.nonEmpty)
+    same("deletion vectors", files(dv))
+    // an evolved table: the first file by name decides, in either order
+    val evolved = freshTable()
+    TxTable.overwrite(df(1 -> "a"), evolved)
+    TxTable.append(Seq((2, "b", 20L)).toDF("k", "v", "extra"), evolved)
+    val before = TxTable.snapshot(spark, evolved, Some(1)).get.files.toSet
+    val (oldF, newF) = TxTable.snapshot(spark, evolved).get.files
+      .partition(before)
+    val oldFirst = abs(evolved, oldF ++ newF)
+    val newFirst = abs(evolved, newF ++ oldF)
+    assert(spark.read.parquet(oldFirst.head).schema !=
+      spark.read.parquet(newFirst.head).schema, "the append did not evolve")
+    val evolvedSchema = same("evolved, old first", oldFirst)
+    assert(same("evolved, new first", newFirst) === evolvedSchema)
+    assert(evolvedSchema === spark.read.parquet(oldFirst.min).schema)
+    // mergeSchema, by argument and by session conf: Spark's union
+    Seq(oldFirst, newFirst).foreach { paths =>
+      val merged = TxTable.scanFiles(spark, paths, mergeSchema = true).schema
+      assert(merged === spark.read.option("mergeSchema", "true")
+        .parquet(paths: _*).schema)
+      assert(merged.fieldNames.contains("extra"))
+      spark.conf.set("spark.sql.parquet.mergeSchema", "true")
+      try assert(same("merge by conf", paths) === merged)
+      finally spark.conf.unset("spark.sql.parquet.mergeSchema")
+    }
+  }
 }
