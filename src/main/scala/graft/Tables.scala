@@ -43,11 +43,17 @@ object Tables {
     * instead of failing (r19 ADVICE), so the hook exists to make such
     * rewrites loud. The corpus and reference files are immutable per
     * JVM; the pipeline sinks that re-land per invocation
-    * (`IncrementalRunner`, `ModelArtifacts`) invalidate on every write. */
-  def schemaFor(spark: SparkSession,
-      path: String): org.apache.spark.sql.types.StructType =
-    schemaCache.computeIfAbsent(path,
-      _ => spark.read.parquet(path).schema)
+    * (`IncrementalRunner`, `ModelArtifacts`) invalidate on every write.
+    *
+    * `mergeSchema` infers the union of every file's footer instead of
+    * the first file's: for a partitioned path whose slices are
+    * re-landed one at a time, where the first file by path can still
+    * carry an older, narrower schema. */
+  def schemaFor(spark: SparkSession, path: String,
+      mergeSchema: Boolean = false): org.apache.spark.sql.types.StructType =
+    schemaCache.computeIfAbsent(path, _ =>
+      (if (mergeSchema) spark.read.option("mergeSchema", "true")
+       else spark.read).parquet(path).schema)
 
   /** Drop one cached schema (call before re-reading a path rewritten
     * with a DIFFERENT schema) — the r19 ADVICE invalidation hook. */

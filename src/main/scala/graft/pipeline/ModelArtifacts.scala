@@ -49,8 +49,11 @@ object ModelArtifacts {
   /** Reload one run's artifact (partition-pruned on run_id). Schema
     * served from the catalog cache (r19 verdict #1): footer inference
     * + the extra partition-tree listing are paid once per landing, not
-    * per reload; [[write]] drops the cached entry. */
+    * per reload; [[write]] drops the cached entry. The schema is the
+    * union over all runs, so a run whose artifact gained a column
+    * reloads it (null for older runs). */
   def load(s: SparkSession, path: String, runId: String): DataFrame =
-    s.read.schema(graft.Tables.schemaFor(s, path)).parquet(path)
+    s.read.schema(graft.Tables.schemaFor(s, path, mergeSchema = true))
+      .parquet(path)
       .filter(col("run_id") === runId).drop("run_id")
 }

@@ -32,8 +32,9 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * Spark's own inference reads. Data, change and view files are
   * immutable and self-describing, so that is the schema inference
   * would give, without the Spark job it runs. Only a `mergeSchema`
-  * read (option or `spark.sql.parquet.mergeSchema`) keeps Spark's
-  * inference, which unions every file's footer.
+  * read keeps Spark's inference, which unions every file's footer:
+  * `read`'s option, or `spark.sql.parquet.mergeSchema` for the scans
+  * that have no option of their own.
   *
   * At 100 TB the log is bounded by commits (not rows) and the data
   * path is ordinary distributed parquet. Production hardening beyond
@@ -169,13 +170,15 @@ object TxTable {
     * (clone references); otherwise table-relative. Each group's schema
     * is its first file's footer (by path name), read on the driver
     * ([[scanFiles]]); `mergeSchema` unions every footer through
-    * Spark's inference. */
+    * Spark's inference. The argument alone decides: the session's
+    * `spark.sql.parquet.mergeSchema` does not apply here, so reads and
+    * the DML rewrites built on them keep one footer's schema. */
   private[sources] def readFilesDv(spark: SparkSession, table: String,
       snap: Snapshot, files: Seq[String],
       m: Option[ColumnMapping.Mapping],
       mergeSchema: Boolean = false): DataFrame = {
     def rd(fs: Seq[String]) =
-      scanFiles(spark, fs.map(new Path(table, _).toString), mergeSchema)
+      scanFiles(spark, fs.map(new Path(table, _).toString), Some(mergeSchema))
     if (snap.dels.isEmpty)
       return toLogicalFrame(rd(files), m)
     val byFile = snap.delsByFile
@@ -189,17 +192,17 @@ object TxTable {
   }
 
   /** The one scan of table-owned parquet files (data, change and view
-    * files; absolute `paths`). Without `mergeSchema` (argument or
-    * `spark.sql.parquet.mergeSchema`) Spark's inference reads just the
-    * footer of the first file by path name, in a Spark job of its own;
-    * these files are immutable, so that footer is read here on the
-    * driver instead and handed to the reader as its schema — the same
-    * schema, no job. Merging reads, no paths, or an unreadable first
+    * files; absolute `paths`). `mergeSchema` defaults to the session's
+    * `spark.sql.parquet.mergeSchema`, as for a plain parquet read.
+    * Without merging, Spark's inference reads just the footer of the
+    * first file by path name, in a Spark job of its own; these files
+    * are immutable, so that footer is read here on the driver instead
+    * and handed to the reader as its schema — the same schema, no job. Merging reads, no paths, or an unreadable first
     * file keep Spark's inference (and its error reporting). */
   private[graft] def scanFiles(spark: SparkSession, paths: Seq[String],
-      mergeSchema: Boolean = false): DataFrame = {
-    val merging = mergeSchema ||
-      spark.conf.get("spark.sql.parquet.mergeSchema", "false").toBoolean
+      mergeSchema: Option[Boolean] = None): DataFrame = {
+    val merging = mergeSchema.getOrElse(
+      spark.conf.get("spark.sql.parquet.mergeSchema", "false").toBoolean)
     val footer =
       if (merging || paths.isEmpty) None
       else org.apache.spark.sql.execution.datasources.parquet

@@ -97,10 +97,16 @@ class IncrementalRunnerSpec extends AnyFunSuite {
       Stage("rollup")(_.groupBy($"o_year", $"o_month")
         .agg(count(lit(1)).as("n_orders"), sum($"cents").as("cents"),
           max($"cents").as("max_cents")))))
+    // one slice re-landed: the first file by path is still narrow
+    IncrementalRunner.runPartition(wider, input, "o_year", backfillYear, sink)
+    val one = IncrementalRunner.readSink(spark, sink)
+    assert(one.columns.contains("max_cents"), one.columns.mkString(", "))
+    assert(one.filter($"max_cents".isNotNull).select("o_year").distinct()
+      .as[Int].collect().toSeq === Seq(backfillYear))
     IncrementalRunner.runAll(wider, input, "o_year", sink)
-    val got = IncrementalRunner.readSink(spark, sink)
-    assert(got.columns.contains("max_cents"), got.columns.mkString(", "))
-    assert(got.filter($"max_cents".isNull).isEmpty)
+    val all = IncrementalRunner.readSink(spark, sink)
+    assert(all.columns.contains("max_cents"), all.columns.mkString(", "))
+    assert(all.filter($"max_cents".isNull).isEmpty)
   }
 
   test("an artifact re-landed with an added column reloads that column") {
@@ -110,6 +116,12 @@ class IncrementalRunnerSpec extends AnyFunSuite {
     ModelArtifacts.write(Seq(("a", 1.0)).toDF("vendor", "b0"), store, "r1")
     assert(ModelArtifacts.load(spark, store, "r1").columns.toSeq ===
       Seq("b0", "vendor"))
+    // a later run beside it: run_id=r1's file still sorts first
+    ModelArtifacts.write(Seq(("a", 3.0, 4.0)).toDF("vendor", "b0", "b1"),
+      store, "r2")
+    assert(ModelArtifacts.load(spark, store, "r2")
+      .select("vendor", "b0", "b1").as[(String, Double, Double)]
+      .collect().toSeq === Seq(("a", 3.0, 4.0)))
     ModelArtifacts.write(Seq(("a", 1.0, 2.0)).toDF("vendor", "b0", "b1"),
       store, "r1")
     val got = ModelArtifacts.load(spark, store, "r1")

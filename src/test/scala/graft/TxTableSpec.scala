@@ -1759,7 +1759,8 @@ class TxTableSpec extends AnyFunSuite {
     assert(evolvedSchema === spark.read.parquet(oldFirst.min).schema)
     // mergeSchema, by argument and by session conf: Spark's union
     Seq(oldFirst, newFirst).foreach { paths =>
-      val merged = TxTable.scanFiles(spark, paths, mergeSchema = true).schema
+      val merged =
+        TxTable.scanFiles(spark, paths, mergeSchema = Some(true)).schema
       assert(merged === spark.read.option("mergeSchema", "true")
         .parquet(paths: _*).schema)
       assert(merged.fieldNames.contains("extra"))
@@ -1767,5 +1768,27 @@ class TxTableSpec extends AnyFunSuite {
       try assert(same("merge by conf", paths) === merged)
       finally spark.conf.unset("spark.sql.parquet.mergeSchema")
     }
+  }
+
+  test("read and DML keep their own mergeSchema over the session setting") {
+    /** An evolved table read, then rewritten by an UPDATE touching
+      * every file, with the session's mergeSchema on or off. */
+    def readThenUpdate(sessionMerge: Boolean) = {
+      val t = freshTable()
+      TxTable.overwrite(df(1 -> "a", 2 -> "b"), t)
+      TxTable.append(Seq((3, "c", 30L)).toDF("k", "v", "extra"), t)
+      if (sessionMerge) spark.conf.set("spark.sql.parquet.mergeSchema", "true")
+      try {
+        val schema = TxTable.read(spark, t).schema
+        TxTable.updateWhere(spark, t, Seq(("k", 1.0, 3.0)), Nil,
+          Map("v" -> lit("u")))
+        (schema, TxTable.read(spark, t).schema,
+          TxTable.read(spark, t).collect().map(_.toString).sorted.toSeq)
+      } finally spark.conf.unset("spark.sql.parquet.mergeSchema")
+    }
+    val off = readThenUpdate(sessionMerge = false)
+    // v1's file sorts first: its footer, without the added column
+    assert(off._1.fieldNames.toSeq === Seq("k", "v"))
+    assert(readThenUpdate(sessionMerge = true) === off)
   }
 }
