@@ -197,8 +197,9 @@ object TxTable {
     * Without merging, Spark's inference reads just the footer of the
     * first file by path name, in a Spark job of its own; these files
     * are immutable, so that footer is read here on the driver instead
-    * and handed to the reader as its schema — the same schema, no job. Merging reads, no paths, or an unreadable first
-    * file keep Spark's inference (and its error reporting). */
+    * and handed to the reader as its schema — the same schema, no job.
+    * Merging reads, no paths, or an unreadable first file keep Spark's
+    * inference (and its error reporting). */
   private[graft] def scanFiles(spark: SparkSession, paths: Seq[String],
       mergeSchema: Option[Boolean] = None): DataFrame = {
     val merging = mergeSchema.getOrElse(
