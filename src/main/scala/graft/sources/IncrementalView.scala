@@ -1,6 +1,6 @@
 package graft.sources
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Observation, Row, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** The merged tier state one [[IncrementalView.maintainMinMax]] group
@@ -29,12 +29,45 @@ case class TierState(n: Long, mn: Long, mx: Long,
   * a replayed maintain is a no-op, and racing maintainers lose the
   * commit CAS and rebase onto the winner's marker.
   *
-  * Scale shape: one scan of the DELTA (never the source table), one
-  * group-by over delta keys, one broadcastable outer join against the
-  * aggregate (aggregate tables are key-cardinality-sized); groups
-  * whose count reaches zero leave the view. 100 TB of source history
-  * costs nothing — only the unconsumed tail is ever read. */
+  * Scale shape: one scan of the DELTA (never the source table) and
+  * of the aggregate (key-cardinality-sized), folded in ONE group-by
+  * over their union; groups whose count reaches zero leave the view.
+  * 100 TB of source history costs nothing — only the unconsumed tail
+  * is ever read. */
 object IncrementalView {
+
+  /** +1 for `insert` / `update_postimage`, −1 for `delete` /
+    * `update_preimage`: the signing every fold applies to a feed. */
+  private def sign = when(col(TxTable.ChangeTypeCol)
+    .isin("insert", "update_postimage"), 1L).otherwise(-1L)
+
+  /** A change feed's rows as signed count/sum contributions
+    * (`keyCol`, `__dn`, `__ds`), the input of [[foldCountSum]]. */
+  private def signedRows(feed: DataFrame, keyCol: String,
+      valCol: String): DataFrame =
+    feed.select(col(keyCol), sign.as("__dn"),
+      (sign * col(valCol)).as("__ds"))
+
+  /** The count/sum fold of [[maintain]], [[maintainJoin]] and
+    * [[applyFeedBatch]]: the view's rows and the signed delta rows
+    * (`keyCol`, `__dn`, `__ds`) summed per key in ONE aggregation (one
+    * exchange). A NULL key is a group like any other here; an outer
+    * join on the key would never match it and add one more NULL row
+    * per fold. Groups whose count reaches zero leave the view. */
+  private def foldCountSum(spark: SparkSession, dst: String,
+      dstSnap: Option[TxTable.Snapshot], keyCol: String,
+      signed: DataFrame): DataFrame = {
+    val rows = dstSnap match {
+      case Some(s) if s.files.nonEmpty =>
+        signed.unionByName(TxTable.read(spark, dst)
+          .select(col(keyCol), col("n").as("__dn"), col("s").as("__ds")))
+      case _ => signed
+    }
+    rows.groupBy(col(keyCol))
+      .agg(sum(col("__dn")).as("n"),
+        coalesce(sum(col("__ds")), lit(0L)).as("s"))
+      .filter(col("n") =!= 0L)
+  }
 
   /** Fold src's unconsumed changes into dst. Returns the consumed
     * source version (unchanged when already caught up). */
@@ -50,28 +83,11 @@ object IncrementalView {
       val consumed = dstSnap.flatMap(_.txns.get(appId)).getOrElse(0L)
       if (srcHead <= consumed) return consumed // caught up: no-op
       val feed = TxTable.changeFeed(spark, src, consumed, Some(srcHead))
-      val sign = when(col(TxTable.ChangeTypeCol)
-        .isin("insert", "update_postimage"), 1L).otherwise(-1L)
-      val delta = feed
-        .groupBy(col(keyCol))
-        .agg(sum(sign).as("__dn"),
-          sum(sign * col(valCol)).as("__ds"))
-      val merged = (dstSnap match {
-        case Some(s) if s.files.nonEmpty =>
-          TxTable.read(spark, dst).join(delta, Seq(keyCol), "full")
-        case _ => delta
-          .withColumn("n", lit(null).cast("long"))
-          .withColumn("s", lit(null).cast("long"))
-      })
-        .select(col(keyCol),
-          (coalesce(col("n"), lit(0L)) +
-            coalesce(col("__dn"), lit(0L))).as("n"),
-          (coalesce(col("s"), lit(0L)) +
-            coalesce(col("__ds"), lit(0L))).as("s"))
-        .filter(col("n") =!= 0L) // emptied groups leave the view
+      val merged = foldCountSum(spark, dst, dstSnap, keyCol,
+        signedRows(feed, keyCol, valCol))
       try {
-        TxTable.overwriteWithTxn(merged, dst, appId, srcHead,
-          requireTxns = Map(appId -> consumed))
+        TxTable.overwriteWithTxns(spark, dst, Map(appId -> srcHead),
+          Map(appId -> consumed))(TxTable.writeFiles(merged, dst, _))
         return srcHead
       } catch {
         case _: TxTable.TxConflictException =>
@@ -113,8 +129,6 @@ object IncrementalView {
       val consumed = dstSnap.flatMap(_.txns.get(appId)).getOrElse(0L)
       if (srcHead <= consumed) return consumed // caught up: no-op
       val feed = TxTable.changeFeed(spark, src, consumed, Some(srcHead))
-      val sign = when(col(TxTable.ChangeTypeCol)
-        .isin("insert", "update_postimage"), 1L).otherwise(-1L)
       val delta = feed
         .groupBy(col(keyCol))
         .agg(sum(sign).as("__dn"), sum(sign * col(valCol)).as("__ds"))
@@ -235,14 +249,14 @@ object IncrementalView {
     * atomically WITH the state (one manifest txns map) — crash or
     * replay can never double-apply one side. Returns the consumed
     * (aHead, bHead). */
-  /** The signed joined delta Δ(A⋈B) grouped per `grpCol` — shared by
-    * [[maintainJoin]] and [[maintainJoinPartitioned]]. */
+  /** The signed joined delta Δ(A⋈B) as (`grpCol`, `__dn`, `__ds`)
+    * rows, one per joined row — shared by [[maintainJoin]] (which
+    * folds them into the view) and [[maintainJoinPartitioned]] (which
+    * groups them first). */
   private def joinDelta(spark: SparkSession, srcA: String, srcB: String,
       keyCol: String, grpCol: String, valCol: String,
       consumedA: Long, headA: Long, consumedB: Long,
       headB: Long): DataFrame = {
-    val sign = when(col(TxTable.ChangeTypeCol)
-      .isin("insert", "update_postimage"), 1L).otherwise(-1L)
     // signed deltas over each source's unconsumed tail (possibly
     // one-sided: the other side contributes an empty delta)
     def emptyLike(d: DataFrame) = d.filter(lit(false))
@@ -267,9 +281,8 @@ object IncrementalView {
       .select(col(grpCol), col(valCol),
         (-col("__sa") * col("__sb")).as("__sign"))
     t1.unionByName(t2).unionByName(t3)
-      .groupBy(col(grpCol))
-      .agg(sum(col("__sign")).as("__dn"),
-        sum(col("__sign") * col(valCol)).as("__ds"))
+      .select(col(grpCol), col("__sign").as("__dn"),
+        (col("__sign") * col(valCol)).as("__ds"))
   }
 
   def maintainJoin(spark: SparkSession, srcA: String, srcB: String,
@@ -289,25 +302,14 @@ object IncrementalView {
       val consumedB = dstSnap.flatMap(_.txns.get(markB)).getOrElse(0L)
       if (headA <= consumedA && headB <= consumedB)
         return (consumedA, consumedB) // caught up: no-op
-      val delta = joinDelta(spark, srcA, srcB, keyCol, grpCol, valCol,
-        consumedA, headA, consumedB, headB)
-      val merged = (dstSnap match {
-        case Some(s) if s.files.nonEmpty =>
-          TxTable.read(spark, dst).join(delta, Seq(grpCol), "full")
-        case _ => delta
-          .withColumn("n", lit(null).cast("long"))
-          .withColumn("s", lit(null).cast("long"))
-      })
-        .select(col(grpCol),
-          (coalesce(col("n"), lit(0L)) +
-            coalesce(col("__dn"), lit(0L))).as("n"),
-          (coalesce(col("s"), lit(0L)) +
-            coalesce(col("__ds"), lit(0L))).as("s"))
-        .filter(col("n") =!= 0L) // emptied groups leave the view
+      val merged = foldCountSum(spark, dst, dstSnap, grpCol,
+        joinDelta(spark, srcA, srcB, keyCol, grpCol, valCol,
+          consumedA, headA, consumedB, headB))
       try {
-        TxTable.overwriteWithTxns(merged, dst,
+        TxTable.overwriteWithTxns(spark, dst,
           Map(markA -> headA, markB -> headB),
-          requireTxns = Map(markA -> consumedA, markB -> consumedB))
+          Map(markA -> consumedA, markB -> consumedB))(
+          TxTable.writeFiles(merged, dst, _))
         return (headA, headB)
       } catch {
         case _: TxTable.TxConflictException =>
@@ -354,6 +356,8 @@ object IncrementalView {
         return (consumedA, consumedB) // caught up: no-op
       val delta = joinDelta(spark, srcA, srcB, keyCol, grpCol, valCol,
         consumedA, headA, consumedB, headB)
+        .groupBy(col(grpCol))
+        .agg(sum(col("__dn")).as("__dn"), sum(col("__ds")).as("__ds"))
         .localCheckpoint(false)
       val changedGroups = delta.select(col(grpCol).cast("string"))
         .distinct().collect().map { r =>
@@ -471,28 +475,12 @@ object IncrementalView {
       val dstSnap = TxTable.snapshot(spark, dst)
       if (dstSnap.exists(_.txns.get(appId).exists(_ >= epochId)))
         return false // replayed epoch: already folded
-      val sign = when(col(TxTable.ChangeTypeCol)
-        .isin("insert", "update_postimage"), 1L).otherwise(-1L)
-      val delta = batch
-        .groupBy(col(keyCol))
-        .agg(sum(sign).as("__dn"), sum(sign * col(valCol)).as("__ds"))
-      val merged = (dstSnap match {
-        case Some(s) if s.files.nonEmpty =>
-          TxTable.read(spark, dst).join(delta, Seq(keyCol), "full")
-        case _ => delta
-          .withColumn("n", lit(null).cast("long"))
-          .withColumn("s", lit(null).cast("long"))
-      })
-        .select(col(keyCol),
-          (coalesce(col("n"), lit(0L)) +
-            coalesce(col("__dn"), lit(0L))).as("n"),
-          (coalesce(col("s"), lit(0L)) +
-            coalesce(col("__ds"), lit(0L))).as("s"))
-        .filter(col("n") =!= 0L)
+      val merged = foldCountSum(spark, dst, dstSnap, keyCol,
+        signedRows(batch, keyCol, valCol))
       try {
-        TxTable.overwriteWithTxn(merged, dst, appId, epochId,
-          requireTxns = Map(
-            appId -> dstSnap.flatMap(_.txns.get(appId)).getOrElse(0L)))
+        TxTable.overwriteWithTxns(spark, dst, Map(appId -> epochId),
+          Map(appId -> dstSnap.flatMap(_.txns.get(appId)).getOrElse(0L)))(
+          TxTable.writeFiles(merged, dst, _))
         return true
       } catch {
         case _: TxTable.TxConflictException =>
@@ -530,7 +518,10 @@ object IncrementalView {
       Option(loV).getOrElse(Nil).zip(Option(loC).getOrElse(Nil))
     val hi = scala.collection.mutable.LinkedHashMap[Long, Long]() ++=
       Option(hiV).getOrElse(Nil).zip(Option(hiC).getOrElse(Nil))
+    // net each value's signs first: the pairs arrive unordered, and
+    // a delete met before its insert would dip a count below zero
     Option(dV).getOrElse(Nil).zip(Option(dM).getOrElse(Nil))
+      .groupMapReduce(_._1)(_._2)(_ + _)
       .foreach { case (v, m) =>
         if (v <= bLo) {
           val c = lo.getOrElse(v, 0L) + m
@@ -597,38 +588,42 @@ object IncrementalView {
       val consumed = dstSnap.flatMap(_.txns.get(appId)).getOrElse(0L)
       if (srcHead <= consumed) return (consumed, 0L) // caught up
       val feed = TxTable.changeFeed(spark, src, consumed, Some(srcHead))
-      val sign = when(col(TxTable.ChangeTypeCol)
-        .isin("insert", "update_postimage"), 1L).otherwise(-1L)
-      // net signed multiplicity per (key, value) — same-window
-      // insert+delete pairs cancel here, so the tier fold only ever
-      // sees real movement
-      val delta = feed
-        .groupBy(col(keyCol), col(valCol).cast("long").as("__v"))
-        .agg(sum(sign).as("__m"))
-        .filter(col("__m") =!= 0L)
-        .groupBy(col(keyCol))
-        .agg(sum(col("__m")).as("__dn"),
-          collect_list(col("__v")).as("__dv"),
-          collect_list(col("__m")).as("__dm"))
-      val mergeUdf = udf(mergeTierState(k) _)
-      val state = dstSnap match {
-        case Some(s) if s.files.nonEmpty => TxTable.read(spark, dst)
-        case _ => delta.select(col(keyCol),
+      // the signed (value, sign) rows of the feed and the view's state
+      // rows, folded per key in ONE aggregation: a NULL key groups like
+      // any other, and the tier fold nets each value's signs itself
+      val signed = feed.select(col(keyCol),
+        col(valCol).cast("long").as("__v"), sign.as("__m"))
+      val rows = dstSnap match {
+        case Some(s) if s.files.nonEmpty =>
+          signed.unionByName(TxTable.read(spark, dst),
+            allowMissingColumns = true)
+        case _ => signed.select(col("*") +: Seq(
           lit(null).cast("long").as("n"),
-          lit(null).cast("long").as("mn"),
-          lit(null).cast("long").as("mx"),
           lit(null).cast("array<long>").as("lo_v"),
           lit(null).cast("array<long>").as("lo_c"),
           lit(null).cast("long").as("lo_b"),
           lit(null).cast("array<long>").as("hi_v"),
           lit(null).cast("array<long>").as("hi_c"),
-          lit(null).cast("long").as("hi_b")).filter(lit(false))
+          lit(null).cast("long").as("hi_b")): _*)
       }
-      val merged = state.join(delta, Seq(keyCol), "full")
+      val folded = rows.groupBy(col(keyCol)).agg(
+        first(col("n"), ignoreNulls = true).as("n"),
+        Seq("lo_v", "lo_c", "lo_b", "hi_v", "hi_c", "hi_b").map(c =>
+          first(col(c), ignoreNulls = true).as(c)) ++ Seq(
+          sum(col("__m")).as("__dn"),
+          collect_list(when(col("__m").isNotNull,
+            struct(col("__v"), col("__m")))).as("__d")): _*)
+      val mergeUdf = udf(mergeTierState(k) _)
+      // tier-exhausted groups are observed during the state write (no
+      // job of their own) and left out of it; their rebuilt rows land
+      // as extra files in the same commit
+      val exhausted = Observation(s"$appId-rescan")
+      val merged = folded
         .withColumn("__st", mergeUdf(col("n"),
           col("lo_v"), col("lo_c"), col("lo_b"),
-          col("hi_v"), col("hi_c"), col("hi_b"),
-          col("__dn"), col("__dv"), col("__dm")))
+          col("hi_v"), col("hi_c"), col("hi_b"), col("__dn"),
+          expr("transform(__d, x -> x.__v)"),
+          expr("transform(__d, x -> x.__m)")))
         .select(col(keyCol), col("__st.n").as("n"),
           col("__st.mn").as("mn"), col("__st.mx").as("mx"),
           col("__st.loV").as("lo_v"), col("__st.loC").as("lo_c"),
@@ -636,51 +631,58 @@ object IncrementalView {
           col("__st.hiV").as("hi_v"), col("__st.hiC").as("hi_c"),
           col("__st.hiB").as("hi_b"), col("__st.rescan").as("rescan"))
         .filter(col("n") =!= 0L)
-        .localCheckpoint(false)
+        .observe(exhausted,
+          collect_list(when(col("rescan"), struct(col(keyCol)))).as("keys"))
+        .filter(!col("rescan"))
+        .select(col(keyCol) +: stateCols.map(col): _*)
       // tier-exhausted groups: re-read THOSE GROUPS from the source
       // as of the consumed head — group-bounded by construction
-      val rescanKeys = merged.filter(col("rescan"))
-        .select(col(keyCol)).collect().map(_.get(0)).toSeq
-      val rescanned: DataFrame =
-        if (rescanKeys.isEmpty) merged.drop("rescan")
-        else {
-          val pairs = TxTable.read(spark, src, asOf = Some(srcHead))
-            .filter(col(keyCol).isInCollection(rescanKeys))
-            .groupBy(col(keyCol), col(valCol).cast("long").as("__v"))
-            .agg(count(lit(1)).as("__c"))
-          val w = Window.partitionBy(col(keyCol))
-          val ranked = pairs
-            .withColumn("__rlo",
-              row_number().over(w.orderBy(col("__v").asc)))
-            .withColumn("__rhi",
-              row_number().over(w.orderBy(col("__v").desc)))
-          val rebuilt = ranked.groupBy(col(keyCol)).agg(
-            sum(col("__c")).as("n"),
-            min(col("__v")).as("mn"), max(col("__v")).as("mx"),
-            sort_array(collect_list(when(col("__rlo") <= k,
-              struct(col("__v"), col("__c"))))).as("__lo"),
-            sort_array(collect_list(when(col("__rhi") <= k,
-              struct(col("__v"), col("__c")))), asc = false).as("__hi"),
-            max(col("__rlo")).as("__nd"))
-            .select(col(keyCol), col("n"), col("mn"), col("mx"),
-              expr("transform(__lo, x -> x.__v)").as("lo_v"),
-              expr("transform(__lo, x -> x.__c)").as("lo_c"),
-              when(col("__nd") > k,
-                expr("element_at(transform(__lo, x -> x.__v), -1)"))
-                .otherwise(lit(Long.MaxValue)).as("lo_b"),
-              expr("transform(__hi, x -> x.__v)").as("hi_v"),
-              expr("transform(__hi, x -> x.__c)").as("hi_c"),
-              when(col("__nd") > k,
-                expr("element_at(transform(__hi, x -> x.__v), -1)"))
-                .otherwise(lit(Long.MinValue)).as("hi_b"))
-          merged.filter(!col("rescan")).drop("rescan")
-            .unionByName(rebuilt)
-        }
+      def rebuilt(keys: Seq[Any]): DataFrame = {
+        val known = keys.filter(_ != null)
+        val hit = col(keyCol).isInCollection(known)
+        val pairs = TxTable.read(spark, src, asOf = Some(srcHead))
+          .filter(if (known.size < keys.size) hit || col(keyCol).isNull
+            else hit)
+          .groupBy(col(keyCol), col(valCol).cast("long").as("__v"))
+          .agg(count(lit(1)).as("__c"))
+        val w = Window.partitionBy(col(keyCol))
+        val ranked = pairs
+          .withColumn("__rlo",
+            row_number().over(w.orderBy(col("__v").asc)))
+          .withColumn("__rhi",
+            row_number().over(w.orderBy(col("__v").desc)))
+        ranked.groupBy(col(keyCol)).agg(
+          sum(col("__c")).as("n"),
+          min(col("__v")).as("mn"), max(col("__v")).as("mx"),
+          sort_array(collect_list(when(col("__rlo") <= k,
+            struct(col("__v"), col("__c"))))).as("__lo"),
+          sort_array(collect_list(when(col("__rhi") <= k,
+            struct(col("__v"), col("__c")))), asc = false).as("__hi"),
+          max(col("__rlo")).as("__nd"))
+          .select(col(keyCol), col("n"), col("mn"), col("mx"),
+            expr("transform(__lo, x -> x.__v)").as("lo_v"),
+            expr("transform(__lo, x -> x.__c)").as("lo_c"),
+            when(col("__nd") > k,
+              expr("element_at(transform(__lo, x -> x.__v), -1)"))
+              .otherwise(lit(Long.MaxValue)).as("lo_b"),
+            expr("transform(__hi, x -> x.__v)").as("hi_v"),
+            expr("transform(__hi, x -> x.__c)").as("hi_c"),
+            when(col("__nd") > k,
+              expr("element_at(transform(__hi, x -> x.__v), -1)"))
+              .otherwise(lit(Long.MinValue)).as("hi_b"))
+      }
       try {
-        TxTable.overwriteWithTxn(
-          rescanned.select(col(keyCol) +: stateCols.map(col): _*),
-          dst, appId, srcHead, requireTxns = Map(appId -> consumed))
-        return (srcHead, rescanKeys.size.toLong)
+        var rescanned = 0L
+        TxTable.overwriteWithTxns(spark, dst, Map(appId -> srcHead),
+          Map(appId -> consumed)) { v =>
+          val files = TxTable.writeFiles(merged, dst, v)
+          val keys = exhausted.get("keys").asInstanceOf[Seq[Row]]
+            .map(_.get(0))
+          rescanned = keys.size.toLong
+          if (keys.isEmpty) files
+          else files ++ TxTable.writeFiles(rebuilt(keys), dst, v)
+        }
+        return (srcHead, rescanned)
       } catch {
         case _: TxTable.TxConflictException =>
           attempts += 1

@@ -7,7 +7,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * data files — the Delta/Iceberg pattern reduced to its invariants,
   * with no library dependency.
   *
-  *   layout:  <table>/data/v<version>-<n>.parquet   (immutable)
+  *   layout:  <table>/data/v<version>-<tag>-<part>-<attempt>.parquet
+  *            <table>/_changes/c<version>-<tag>-<part>-<attempt>.parquet
   *            <table>/_graft_log/v<version>.json    (one per commit)
   *
   * A commit file enumerates the COMPLETE set of live data files for
@@ -16,7 +17,16 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * invisible until its single commit-file publication lands — snapshot
   * isolation from two filesystem primitives (immutable data files +
   * atomic create-exclusive publish, see [[commit]] for the per-FS
-  * mechanism). Two writers racing to the same version collide on the
+  * mechanism). Data and change files are therefore written in place,
+  * by the tasks of one Spark job, under final names unique to the
+  * writer and the task attempt ([[TxParquetWriter]]): the manifest is
+  * the only visibility rule, so there is no staging directory, output
+  * committer or rename. Files no commit lists (a failed attempt's, a
+  * commit loser's) are orphans that [[vacuum]] reclaims once they are
+  * older than its `graceMs` — a vacuum racing live writers needs a
+  * `graceMs` longer than their writes. On the `file` scheme every
+  * file operation goes through [[NioLocalFileSystem]], which starts
+  * no process. Two writers racing to the same version collide on the
   * identical log path and exactly one wins; the loser gets
   * [[TxConflictException]] and must rebase (re-read, re-apply,
   * re-commit) — optimistic concurrency, same contract as Delta.
@@ -212,8 +222,11 @@ object TxTable {
       .parquet(paths: _*)
   }
 
-  private def fs(spark: SparkSession, p: Path): FileSystem =
-    p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+  /** The file system of every TxTable file operation: the fork-free
+    * [[NioLocalFileSystem]] on the `file` scheme, else the configured
+    * one. */
+  private[sources] def fs(spark: SparkSession, p: Path): FileSystem =
+    NioLocalFileSystem.forPath(p, spark.sparkContext.hadoopConfiguration)
 
   private def logDir(table: String) = new Path(table, "_graft_log")
   private def dataDir(table: String) = new Path(table, "data")
@@ -665,14 +678,14 @@ object TxTable {
   }
 
   /** Write `df`'s rows as new immutable files for `version`; returns
-    * their table-relative paths. Files land under data/ BEFORE the
-    * commit exists, so readers never see them. The staging dir and the
-    * data file names carry a writer-unique tag: two writers racing to
-    * the same version must not share ANY path — otherwise the commit
-    * loser's renames could clobber the winner's already-published data
-    * files. The loser's orphaned files stay in data/ unreferenced by
-    * any commit (vacuum of unreferenced files is the documented
-    * production-hardening gap). */
+    * their table-relative paths. Tasks write the files in place under
+    * data/ ([[TxParquetWriter]]): nothing reads them until a commit
+    * lists them, so readers never see them before that. The names
+    * carry a writer-unique tag and the task attempt: two writers
+    * racing to the same version never share a path, so the commit
+    * loser cannot clobber the winner's files. The loser's files, like
+    * those of a failed task attempt, stay in data/ unreferenced by any
+    * commit until [[vacuum]] reclaims them (past its `graceMs`). */
   private[graft] def writeFiles(df: DataFrame, table: String,
       version: Long): Seq[String] = {
     val spark = df.sparkSession
@@ -681,32 +694,21 @@ object TxTable {
     // files always store PHYSICAL names (ColumnMapping invariant)
     val dfG = enforceConstraints(spark, table, df)
     val dfP = mappingAt(spark, table).fold(dfG)(_.toPhysical(dfG))
-    val tag = java.util.UUID.randomUUID().toString.take(8)
-    val tmp = new Path(table, s"_tmp_v$version-$tag")
-    dfP.write.mode("overwrite").parquet(tmp.toString)
-    val f = fs(spark, tmp)
-    val dd = dataDir(table)
-    f.mkdirs(dd)
-    val moved = f.listStatus(tmp).toSeq
-      .filter(_.getPath.getName.endsWith(".parquet"))
-      .zipWithIndex.map { case (s, i) =>
-        val dst = new Path(dd, s"v$version-$tag-$i.parquet")
-        require(f.rename(s.getPath, dst), s"rename failed: ${s.getPath}")
-        s"data/${dst.getName}"
-      }
-    f.delete(tmp, true)
-    moved
+    TxParquetWriter(dfP, dataDir(table), s"v$version-${writerTag()}")
+      .map("data/" + _)
   }
+
+  private def writerTag(): String =
+    java.util.UUID.randomUUID().toString.take(8)
 
   /** [[writeFiles]] with the ONE-BUCKET-PER-FILE layout a
     * storage-partitioned join needs: rows cluster into `t.n` tasks on
-    * the bucket value, each task writes per-bucket files via Spark's
-    * own `partitionBy` staging (exactly one file per bucket), and the
-    * staged subdirectories flatten into data/ — the bucket value is
-    * NOT stored in the file (it derives from the data column;
-    * [[recomputeMetadata]] re-derives the singleton value sets the
-    * SPJ scan groups by). Same invisibility/tagging discipline as
-    * [[writeFiles]]. */
+    * the bucket value and each task writes one file per bucket it
+    * holds, so every bucket lands in exactly one file — the bucket
+    * value is NOT stored in the file (it derives from the data
+    * column; [[recomputeMetadata]] re-derives the singleton value
+    * sets the SPJ scan groups by). Same in-place, tagged discipline
+    * as [[writeFiles]]. */
   private[graft] def writeFilesBucketed(df: DataFrame, table: String,
       version: Long, t: PartBucket): Seq[String] = {
     import org.apache.spark.sql.functions.col
@@ -718,30 +720,9 @@ object TxTable {
     // and passes through untouched)
     val dfB = dfG.withColumn("__graft_bucket", t.expr)
     val dfP = mappingAt(spark, table).fold(dfB)(_.toPhysical(dfB))
-    val tag = java.util.UUID.randomUUID().toString.take(8)
-    val tmp = new Path(table, s"_tmp_v$version-$tag")
-    dfP.repartition(t.n, col("__graft_bucket"))
-      .write.partitionBy("__graft_bucket")
-      .mode("overwrite").parquet(tmp.toString)
-    val f = fs(spark, tmp)
-    val dd = dataDir(table)
-    f.mkdirs(dd)
-    val moved = f.listStatus(tmp).toSeq
-      .filter(_.getPath.getName.startsWith("__graft_bucket="))
-      .sortBy(_.getPath.getName)
-      .flatMap { dirSt =>
-        val b = dirSt.getPath.getName.stripPrefix("__graft_bucket=")
-        f.listStatus(dirSt.getPath).toSeq
-          .filter(_.getPath.getName.endsWith(".parquet"))
-          .zipWithIndex.map { case (s, i) =>
-            val dst = new Path(dd, s"v$version-$tag-b$b-$i.parquet")
-            require(f.rename(s.getPath, dst),
-              s"rename failed: ${s.getPath}")
-            s"data/${dst.getName}"
-          }
-      }
-    f.delete(tmp, true)
-    moved
+    TxParquetWriter(dfP.repartition(t.n, col("__graft_bucket")),
+      dataDir(table), s"v$version-${writerTag()}",
+      bucketCol = Some("__graft_bucket")).map("data/" + _)
   }
 
   /** The change-type metadata column carried inside recorded change
@@ -777,11 +758,11 @@ object TxTable {
     fs(spark, logDir(table)).exists(cdfMarkerPath(table))
 
   /** Write `df` (data columns + [[ChangeTypeCol]]) as `version`'s
-    * change files under `_changes/` — same staged-then-rename
-    * discipline as [[writeFiles]], writer-unique tag, so racing
-    * writers never share a path. Returns table-relative paths; the
-    * caller records them in the manifest it commits (change files an
-    * uncommitted loser staged stay unreferenced until vacuum). */
+    * change files under `_changes/` — written in place and tagged like
+    * [[writeFiles]], so racing writers never share a path. Returns
+    * table-relative paths; the caller records them in the manifest it
+    * commits (change files an uncommitted loser wrote stay
+    * unreferenced until vacuum). */
   private[sources] def writeChangeFiles(df: DataFrame, table: String,
       version: Long): Seq[String] = {
     val spark = df.sparkSession
@@ -789,21 +770,8 @@ object TxTable {
     // _change_type column passes through identity); changeFeed maps
     // them back to logical at read time
     val dfP = mappingAt(spark, table).fold(df)(_.toPhysical(df))
-    val tag = java.util.UUID.randomUUID().toString.take(8)
-    val tmp = new Path(table, s"_tmp_c$version-$tag")
-    dfP.write.mode("overwrite").parquet(tmp.toString)
-    val f = fs(spark, tmp)
-    val cd = changesDir(table)
-    f.mkdirs(cd)
-    val moved = f.listStatus(tmp).toSeq
-      .filter(_.getPath.getName.endsWith(".parquet"))
-      .zipWithIndex.map { case (s, i) =>
-        val dst = new Path(cd, s"c$version-$tag-$i.parquet")
-        require(f.rename(s.getPath, dst), s"rename failed: ${s.getPath}")
-        s"_changes/${dst.getName}"
-      }
-    f.delete(tmp, true)
-    moved
+    TxParquetWriter(dfP, changesDir(table), s"c$version-${writerTag()}")
+      .map("_changes/" + _)
   }
 
   /** Atomic commit of `files` as `version`. Throws
@@ -1496,32 +1464,25 @@ object TxTable {
     next
   }
 
-  /** [[overwrite]] that additionally records `(appId -> marker)` in
-    * the manifest txns — the atomic state+consumption-marker commit
+  /** [[overwrite]] that additionally records `markers` in the
+    * manifest txns — the atomic state+consumption-marker commit
     * incremental consumers need ([[IncrementalView.maintain]]): the
-    * marker and the state it justifies land in ONE publish, so no
-    * crash window separates them. Throws [[TxConflictException]] on a
-    * lost race (the caller re-reads the marker and retries — a
-    * completed twin then shows as already-consumed). */
-  private[sources] def overwriteWithTxn(df: DataFrame, table: String,
-      appId: String, marker: Long,
-      requireTxns: Map[String, Long] = Map.empty): Long =
-    overwriteWithTxns(df, table, Map(appId -> marker), requireTxns)
-
-  /** [[overwriteWithTxn]] carrying SEVERAL markers in one atomic
-    * commit — a view maintained from two sources ([[IncrementalView
-    * .maintainJoin]]) must advance both consumption positions WITH
-    * the state, or a crash between them double-applies one side.
-    * `requireTxns` is the marker GUARD (maintainPartitioned's
+    * markers and the state they justify land in ONE publish, so no
+    * crash window separates them (a view maintained from two sources,
+    * [[IncrementalView.maintainJoin]], advances both positions WITH
+    * the state, or a crash between them double-applies one side).
+    * `write` writes the new state's files for the version it is
+    * given. `requireTxns` is the marker GUARD (maintainPartitioned's
     * discipline): the commit conflicts out unless each named marker
     * still holds the expected value (0 = absent) — closing the
     * compute window between a maintainer's marker read and its
     * commit, where a racing fold's commit would otherwise be silently
-    * overwritten from stale state. */
-  private[sources] def overwriteWithTxns(df: DataFrame, table: String,
-      markers: Map[String, Long],
-      requireTxns: Map[String, Long] = Map.empty): Long = {
-    val spark = df.sparkSession
+    * overwritten from stale state. Throws [[TxConflictException]] on
+    * a lost race (the caller re-reads the markers and retries — a
+    * completed twin then shows as already-consumed). */
+  private[sources] def overwriteWithTxns(spark: SparkSession, table: String,
+      markers: Map[String, Long], requireTxns: Map[String, Long])(
+      write: Long => Seq[String]): Long = {
     val cur = snapshot(spark, table)
     val curTxns = cur.map(_.txns).getOrElse(Map.empty)
     requireTxns.foreach { case (app, expected) =>
@@ -1530,7 +1491,7 @@ object TxTable {
         s"marker $app moved at $table ($actual != $expected): rebase")
     }
     val next = cur.map(_.version + 1).getOrElse(1L)
-    val files = writeFiles(df, table, next)
+    val files = write(next)
     commit(spark, table, next, files, curTxns ++ markers,
       op = "overwrite")
     next

@@ -1791,4 +1791,221 @@ class TxTableSpec extends AnyFunSuite {
     assert(off._1.fieldNames.toSeq === Seq("k", "v"))
     assert(readThenUpdate(sessionMerge = true) === off)
   }
+
+  // ---- the one parquet writer and the view folds it serves ----
+
+  test("all four view folds keep ONE row per NULL key, equal to GROUP BY") {
+    import graft.sources.IncrementalView
+    val src = freshTable()
+    val dim = freshTable()
+    TxTable.enableChangeFeed(spark, src)
+    TxTable.enableChangeFeed(spark, dim)
+    TxTable.append(Seq((1, Some("x")), (2, None), (3, None), (4, None),
+      (5, Some("x")), (6, Some("y"))).toDF("k", "grp"), dim)
+    val (sumV, mmV, joinV, feedV) =
+      (freshTable(), freshTable(), freshTable(), freshTable())
+    def sortedRows(d: org.apache.spark.sql.DataFrame): Seq[String] =
+      d.collect().map(_.toString).sorted.toSeq
+    def foldAndCheck(epoch: Long): Unit = {
+      IncrementalView.maintain(spark, src, sumV, "g", "v")
+      IncrementalView.maintainMinMax(spark, src, mmV, "g", "v")
+      IncrementalView.maintainJoin(spark, src, dim, joinV, "k", "grp", "v")
+      IncrementalView.applyFeedBatch(
+        TxTable.changeFeed(spark, src, epoch - 1, Some(epoch)),
+        feedV, "g", "v", "feed", epoch)
+      val live = TxTable.read(spark, src)
+      val sums = sortedRows(live.groupBy($"g")
+        .agg(count(lit(1)).as("n"), sum($"v").as("s")))
+      assert(sortedRows(TxTable.read(spark, sumV).select($"g", $"n", $"s"))
+        === sums, s"maintain after fold $epoch")
+      assert(sortedRows(TxTable.read(spark, feedV)
+        .select($"g", $"n", $"s")) === sums,
+        s"applyFeedBatch after fold $epoch")
+      assert(sortedRows(TxTable.read(spark, mmV)
+        .select($"g", $"n", $"mn", $"mx")) === sortedRows(live.groupBy($"g")
+        .agg(count(lit(1)), min($"v"), max($"v"))),
+        s"maintainMinMax after fold $epoch")
+      assert(sortedRows(TxTable.read(spark, joinV)
+        .select($"grp", $"n", $"s")) === sortedRows(
+        live.join(TxTable.read(spark, dim), "k").groupBy($"grp")
+          .agg(count(lit(1)), sum($"v"))),
+        s"maintainJoin after fold $epoch")
+    }
+    TxTable.append(Seq((1, Some("a"), 5L), (2, None, 2L), (3, None, 3L))
+      .toDF("k", "g", "v"), src) // v1
+    foldAndCheck(1L)
+    TxTable.append(Seq((4, None, 9L), (5, Some("a"), 1L), (6, Some("b"), 7L))
+      .toDF("k", "g", "v"), src) // v2
+    foldAndCheck(2L)
+  }
+
+  test("a count/sum fold runs 2 jobs, a min/max fold without rescan 2") {
+    import graft.sources.IncrementalView
+    val src = freshTable()
+    val (sumV, mmV) = (freshTable(), freshTable())
+    TxTable.enableChangeFeed(spark, src)
+    TxTable.append((1 to 30).map(i => (i, s"g${i % 3}", i.toLong))
+      .toDF("k", "g", "v"), src)
+    IncrementalView.maintain(spark, src, sumV, "g", "v")
+    IncrementalView.maintainMinMax(spark, src, mmV, "g", "v")
+    TxTable.append((31 to 40).map(i => (i, s"g${i % 3}", i.toLong))
+      .toDF("k", "g", "v"), src)
+    // one aggregation (a shuffle-map job under AQE) + the write job
+    assert(jobsDuring(IncrementalView.maintain(spark, src, sumV, "g", "v"))
+      === 2)
+    var rescanned = -1L
+    assert(jobsDuring {
+      rescanned = IncrementalView.maintainMinMax(spark, src, mmV, "g", "v")._2
+    } === 2)
+    assert(rescanned === 0L)
+  }
+
+  test("writes, DML, view folds, compaction and vacuum start no process") {
+    import graft.sources.IncrementalView
+    import jdk.jfr.consumer.RecordingStream
+    val t = freshTable()
+    val (sumV, mmV) = (freshTable(), freshTable())
+    TxTable.enableChangeFeed(spark, t)
+    TxTable.append((1 to 20).map(i => (i, s"v${i % 4}")).toDF("k", "v"), t)
+    val started = new java.util.concurrent.ConcurrentLinkedQueue[String]
+    val flushes = new java.util.concurrent.atomic.AtomicInteger
+    val rs = new RecordingStream()
+    try {
+      rs.enable("jdk.ProcessStart")
+      rs.onEvent("jdk.ProcessStart", e => started.add(e.getString("command")))
+      rs.onFlush(() => flushes.incrementAndGet())
+      rs.startAsync()
+      TxTable.append(df(21 -> "v1", 22 -> "v2"), t)
+      TxTable.deleteWhere(spark, t, Seq(("k", 1.0, 3.0)))
+      TxTable.merge(spark, t, df(4 -> "m", 30 -> "v3"), "k")
+      IncrementalView.maintain(spark, t, sumV, "v", "k")
+      IncrementalView.maintainMinMax(spark, t, mmV, "v", "k")
+      TxTable.compact(spark, t, 1)
+      TxTable.vacuum(spark, t, 1)
+      // the probe's own process: the stream does see a fork
+      new ProcessBuilder("true").start().waitFor()
+      // every event committed so far is delivered by the second flush
+      val seen = flushes.get
+      val deadline = System.nanoTime() + 30000000000L
+      while (flushes.get < seen + 2 && System.nanoTime() < deadline)
+        Thread.sleep(20)
+      val cmds = started.toArray.map(_.toString).toSeq
+      assert(cmds.size === 1 && cmds.head.endsWith("true"),
+        s"${cmds.size - 1} process(es) started by the table ops: " +
+          cmds.take(5).mkString("; "))
+    } finally rs.close()
+  }
+
+  /** (footer schema, Spark row metadata, codecs) of one parquet file. */
+  private def footerOf(file: String): (String, String, Set[String]) = {
+    import org.apache.parquet.hadoop.ParquetFileReader
+    import org.apache.parquet.hadoop.util.HadoopInputFile
+    import scala.jdk.CollectionConverters._
+    val r = ParquetFileReader.open(HadoopInputFile.fromPath(
+      new org.apache.hadoop.fs.Path(file),
+      spark.sparkContext.hadoopConfiguration))
+    try {
+      val f = r.getFooter
+      (f.getFileMetaData.getSchema.toString,
+        f.getFileMetaData.getKeyValueMetaData
+          .get("org.apache.spark.sql.parquet.row.metadata"),
+        f.getBlocks.asScala.flatMap(_.getColumns.asScala
+          .map(_.getCodec.name)).toSet)
+    } finally r.close()
+  }
+
+  test("writeFiles writes the footers and file counts of df.write.parquet") {
+    import graft.sources.IncrementalView
+    /** writeFiles' files and df.write.parquet's for the same frame. */
+    def both(frame: org.apache.spark.sql.DataFrame,
+        table: String = freshTable()): (Seq[String], Seq[String]) = {
+      val ours = TxTable.writeFiles(frame, table, 99L)
+        .map(f => new org.apache.hadoop.fs.Path(table, f).toString)
+      val ref = Files.createTempDirectory("graft_ref_").toString + "/out"
+      frame.write.parquet(ref)
+      val refs = new java.io.File(ref).listFiles().map(_.toString)
+        .filter(_.endsWith(".parquet")).sorted.toSeq
+      (ours, refs)
+    }
+    def sameFooters(what: String, frame: org.apache.spark.sql.DataFrame,
+        table: String = freshTable()): Int = {
+      val (ours, refs) = both(frame, table)
+      assert(ours.size === refs.size, s"$what: file count")
+      assert(ours.map(footerOf).toSet === refs.map(footerOf).toSet,
+        s"$what: footers")
+      ours.size
+    }
+    sameFooters("plain", (1 to 20).toDF("k")
+      .select($"k", concat(lit("v"), $"k").as("v"), lit(3L).as("c")))
+    // arrays: min/max view state
+    val src = freshTable()
+    TxTable.enableChangeFeed(spark, src)
+    TxTable.append((1 to 12).map(i => (i, s"g${i % 2}", i.toLong))
+      .toDF("k", "g", "v"), src)
+    val view = freshTable()
+    IncrementalView.maintainMinMax(spark, src, view, "g", "v")
+    sameFooters("min/max view state", TxTable.read(spark, view))
+    sameFooters("nested", (1 to 5).toDF("k").select($"k",
+      struct($"k".as("a"), struct(lit("x").as("b")).as("in")).as("s"),
+      array(struct($"k".as("e"))).as("arr"),
+      map(lit("m"), $"k").as("mp")))
+    // a column-mapped table: writeFiles stores the physical names,
+    // exactly the frame the table's own files hold
+    val mapped = freshTable()
+    TxTable.overwrite(df(1 -> "a", 2 -> "b"), mapped)
+    TxTable.renameColumn(spark, mapped, "v", "w")
+    val (ours, _) = both(TxTable.read(spark, mapped), mapped)
+    val physical = TxTable.scanFiles(spark,
+      TxTable.snapshot(spark, mapped).get.files
+        .map(f => new org.apache.hadoop.fs.Path(mapped, f).toString))
+    val ref = Files.createTempDirectory("graft_ref_").toString + "/out"
+    physical.coalesce(1).write.parquet(ref)
+    assert(ours.map(footerOf).toSet === new java.io.File(ref).listFiles()
+      .map(_.toString).filter(_.endsWith(".parquet")).map(footerOf).toSet,
+      "column-mapped: footers")
+    // an empty frame still leaves exactly one file carrying the schema
+    assert(sameFooters("empty", df().limit(0)) === 1)
+    assert(sameFooters("empty local", Seq.empty[(Int, String)]
+      .toDF("k", "v")) === 1)
+    // k non-empty partitions give k files; an empty partition 0 a file
+    assert(sameFooters("4 partitions", spark.range(0, 40, 1, 4).toDF()) === 4)
+    assert(sameFooters("sparse partitions",
+      spark.range(0, 2, 1, 4).toDF()) === 3)
+    // a NullType column and an unsupported type: each is written, or
+    // rejected, exactly as Spark's own write does
+    Seq("void" -> lit(null), "interval" -> expr("interval 1 day"))
+      .foreach { case (what, c) =>
+        val frame = df(1 -> "a").withColumn("z", c)
+        val ref = scala.util.Try(frame.write.parquet(
+          Files.createTempDirectory("graft_ref_").toString + "/out"))
+        val ours = scala.util.Try(TxTable.writeFiles(frame, freshTable(), 1L))
+        assert(ours.isSuccess === ref.isSuccess, what)
+        ours.failed.foreach(e =>
+          assert(e.getMessage === ref.failed.get.getMessage, what))
+        if (ours.isSuccess) sameFooters(what, frame)
+      }
+  }
+
+  test("a bucketed compact writes one file per bucket") {
+    import graft.sources.TxSql
+    val root = Files.createTempDirectory("graft_bucket_").toString
+    TxSql.installCatalog(spark, "wbk", root)
+    spark.sql("CREATE TABLE wbk.t (k BIGINT, v STRING) " +
+      "PARTITIONED BY (bucket(4, k))")
+    (1 to 3).foreach { b =>
+      (1 to 40).map(i => ((b * 100 + i).toLong, s"v$i")).toDF("k", "v")
+        .createOrReplaceTempView("wbk_src")
+      spark.sql("INSERT INTO wbk.t SELECT k, v FROM wbk_src")
+    }
+    val t = s"$root/t"
+    assert(TxTable.snapshot(spark, t).get.files.size > 4)
+    TxTable.compact(spark, t, 1)
+    val snap = TxTable.snapshot(spark, t).get
+    val sets = snap.files.map(f =>
+      snap.fileValues.get(f).flatMap(_.get("bucket(4,k)")))
+    assert(snap.files.size === 4, s"files: ${snap.files}")
+    assert(sets.forall(_.exists(_.size == 1)) &&
+      sets.flatMap(_.get).flatten.toSet.size === 4, s"bucket sets: $sets")
+    assert(TxTable.read(spark, t).count() === 120L)
+  }
 }
