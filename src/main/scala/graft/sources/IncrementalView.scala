@@ -151,17 +151,9 @@ object IncrementalView {
           if (dstSnap.flatMap(_.txns.get(appId)).getOrElse(0L) != consumed)
             throw new TxTable.TxConflictException(
               s"marker $appId moved at $dst: rebase")
-          TxTable.commit(spark, dst,
-            dstSnap.map(_.version + 1).getOrElse(1L),
-            dstSnap.map(_.files).getOrElse(Nil),
-            dstSnap.map(_.txns).getOrElse(Map.empty) + (appId -> srcHead),
-            dstSnap.flatMap(_.statsCol),
-            dstSnap.map(_.stats).getOrElse(Map.empty),
-            dstSnap.map(_.multiStats).getOrElse(Map.empty),
-            dstSnap.map(_.fileValues).getOrElse(Map.empty),
-            dstSnap.flatMap(_.bloomCol),
-            dstSnap.map(_.blooms).getOrElse(Map.empty),
-            op = "append")
+          val cur = dstSnap.getOrElse(TxTable.Snapshot.Empty)
+          TxTable.commit(spark, dst, cur.next("append")
+            .copy(txns = cur.txns + (appId -> srcHead)))
           return srcHead
         } catch {
           case _: TxTable.TxConflictException =>
@@ -378,18 +370,9 @@ object IncrementalView {
             || fresh.flatMap(_.txns.get(markB)).getOrElse(0L) != consumedB)
             throw new TxTable.TxConflictException(
               s"markers $appId moved at $dst: rebase")
-          TxTable.commit(spark, dst,
-            dstSnap.map(_.version + 1).getOrElse(1L),
-            dstSnap.map(_.files).getOrElse(Nil),
-            dstSnap.map(_.txns).getOrElse(Map.empty) +
-              (markA -> headA) + (markB -> headB),
-            dstSnap.flatMap(_.statsCol),
-            dstSnap.map(_.stats).getOrElse(Map.empty),
-            dstSnap.map(_.multiStats).getOrElse(Map.empty),
-            dstSnap.map(_.fileValues).getOrElse(Map.empty),
-            dstSnap.flatMap(_.bloomCol),
-            dstSnap.map(_.blooms).getOrElse(Map.empty),
-            op = "append")
+          val cur = dstSnap.getOrElse(TxTable.Snapshot.Empty)
+          TxTable.commit(spark, dst, cur.next("append")
+            .copy(txns = cur.txns + (markA -> headA) + (markB -> headB)))
           return (headA, headB)
         } catch {
           case _: TxTable.TxConflictException =>

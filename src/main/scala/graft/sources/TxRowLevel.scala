@@ -90,9 +90,7 @@ private[sources] class TxRowLevelOperation(spark: SparkSession,
         val keepNames =
           TxSql.candidateNamesPruned(snap, ranges, valueEq, schema)
         candidates = snap.files.filter(f => keepNames(f.split('/').last))
-        val restricted = TxTable.Snapshot(snap.version, candidates,
-          snap.txns, snap.statsCol, snap.stats, snap.multiStats,
-          snap.fileValues, snap.bloomCol, snap.blooms)
+        val restricted = snap.copy(files = candidates)
         // on a column-mapped table the parquet reader gets the
         // PHYSICAL schema; the scan's declared output maps back to
         // logical (rows are positional — names never touch the data)
@@ -215,23 +213,13 @@ private[sources] class TxReplaceBatchWrite(path: String, schema: StructType,
             .withColumn(TxTable.ChangeTypeCol, lit(postType)))
         TxTable.writeChangeFiles(delta, path, snap.version + 1)
       }
-    // untouched files keep their index metadata, exactly like the API
-    // verbs' pruned copy-on-write; rewritten files lose theirs
-    // (absent metadata -> always a candidate -> correct, unpruned)
-    TxTable.commit(spark, path, snap.version + 1, untouched ++ files,
-      snap.txns,
-      snap.statsCol.filter(_ =>
-        snap.stats.exists { case (f, _) => untouched.contains(f) }),
-      snap.stats.filter { case (f, _) => untouched.contains(f) },
-      snap.multiStats.filter { case (f, _) => untouched.contains(f) },
-      snap.fileValues.filter { case (f, _) => untouched.contains(f) },
-      snap.bloomCol.filter(_ =>
-        snap.blooms.exists { case (f, _) => untouched.contains(f) }),
-      snap.blooms.filter { case (f, _) => untouched.contains(f) },
-      op = op, changes = changes,
-      // replaced files' dels fold into the rewrite (the op scan served
-      // visible rows); untouched files keep theirs
-      dels = snap.dels.filter(d => untouched.contains(d.path)))
+    // untouched files keep their index metadata and dels; replaced
+    // files' entries drop with them (their dels folded into the
+    // rewrite: the op scan served visible rows), and the task-written
+    // files carry none (absent metadata -> always a candidate ->
+    // correct, unpruned)
+    TxTable.commit(spark, path,
+      snap.next(op, changes).copy(files = untouched ++ files))
   }
 
   override def abort(messages: Array[WriterCommitMessage]): Unit =

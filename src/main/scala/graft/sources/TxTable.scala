@@ -95,6 +95,49 @@ object TxTable {
       * common case (no DV commits in this snapshot). */
     lazy val delsByFile: Map[String, Seq[DelEntry]] =
       if (dels.isEmpty) Map.empty else dels.groupBy(_.path)
+
+    /** The starting point of the version after this one: every
+      * table-level field (files, txns, index metadata, deletion
+      * predicates) carries; the per-commit fields (`op`, `changes`,
+      * `ts`) are the new commit's own. A writer names only what its
+      * operation changes, so no field drops by omission; entries of
+      * files the new version no longer lists drop in [[commit]]. */
+    def next(op: String, changes: Seq[String] = Nil): Snapshot =
+      copy(version = version + 1, op = op, changes = changes, ts = 0L)
+
+    /** This snapshot with its logical-keyed metadata renamed by `rk`
+      * (None drops the key) — the index columns, the stats and
+      * value-set keys (a transform key such as "days(ts)" renames its
+      * inner column) and the deletion predicates' columns. A dotted
+      * predicate column (old manifests only — new DV commits refuse
+      * nested names) renames its HEAD through `delHead`, which also
+      * decides what a dropped head does. */
+    def rekey(rk: String => Option[String],
+        delHead: String => String): Snapshot = {
+      def rkKey(k: String): Option[String] = PartTransform.rekey(k, rk)
+      def rkCols[V](m: Map[String, Map[String, V]]) = m.map {
+        case (f, cols) => f -> cols.flatMap { case (k, v) => rkKey(k).map(_ -> v) }
+      }
+      def re(c: String): String = {
+        val h = c.takeWhile(_ != '.')
+        delHead(h) + c.drop(h.length)
+      }
+      val sc = statsCol.flatMap(rkKey)
+      val bc = bloomCol.flatMap(rkKey)
+      copy(statsCol = sc, stats = if (sc.isDefined) stats else Map.empty,
+        multiStats = rkCols(multiStats), fileValues = rkCols(fileValues),
+        bloomCol = bc, blooms = if (bc.isDefined) blooms else Map.empty,
+        dels = dels.map(d => DelEntry(d.path,
+          d.ranges.map { case (c, lo, hi) => (re(c), lo, hi) },
+          d.eqs.map { case (c, v) => (re(c), v) },
+          d.ins.map { case (c, vs) => (re(c), vs) })))
+    }
+  }
+
+  object Snapshot {
+    /** The state before a table's first commit (version 0, no files):
+      * `snapshot(…).getOrElse(Snapshot.Empty).next(op)` is version 1. */
+    val Empty: Snapshot = Snapshot(0L, Nil)
   }
 
   /** One MERGE-ON-READ deletion predicate (the predicate form of a
@@ -345,11 +388,10 @@ object TxTable {
           prefix = s"""{"version":$v,"state":"""
           if raw.startsWith(prefix) && raw.endsWith("}")
           slice = raw.substring(prefix.length, raw.length - 1)
-          // the slice must itself be ONE complete object (graft.Json
-          // rejects trailing content) — a field appended after state
-          // fails here instead of riding along inside the "manifest"
-          _ <- try { graft.Json.parseObject(slice); Some(()) }
-            catch { case _: graft.Json.JsonException => None }
+          // the slice must itself decode as ONE complete manifest
+          // (graft.Json rejects trailing content) — a field appended
+          // after state fails here instead of riding along inside it
+          _ = decodeManifest(table, v, slice)
         } yield (v, slice)
       }
     } catch { case _: Exception => None }
@@ -394,7 +436,7 @@ object TxTable {
         // parses to None (never wrong results, only a missing table).
         return readCheckpointState(f, table) match {
           case Some((v0, stateBody)) if asOf.forall(_ >= v0) =>
-            try Some(parseManifest(table, v0, stateBody))
+            try Some(decodeManifest(table, v0, stateBody))
             catch { case _: Exception => None }
           case _ => None
         }
@@ -413,104 +455,145 @@ object TxTable {
     }
     val body = new String(
       readFully(f, new Path(ld, s"v$v.json")), "UTF-8")
-    Some(parseManifest(table, v, body))
+    Some(decodeManifest(table, v, body))
   }
 
-  /** Parse one manifest body into a [[Snapshot]] — shared by the
-    * normal read path and the checkpoint-state fallback. */
-  private def parseManifest(table: String, v: Long,
-      body: String): Snapshot = {
-    // commit body: {"version":N,"files":[...],"txns":{...},
-    //   "statscol":"c","stats":[{"path":..,"min":..,"max":..}],
-    //   "mstats":[{"path":..,"cols":{c:[mn,mx],..},"vals":{c:[..],..}}]}
-    // parsed with the strict JSON walk (graft.Json) — the manifest is
-    // machine-written by commit(), so a parse failure means a corrupt
-    // log, and the error should say so rather than regex-skip it.
+  /** The manifest codec: the ONE place the log's JSON layout lives.
+    * [[commit]] writes a body with [[encodeManifest]]; [[snapshot]],
+    * [[peekManifest]] and the checkpoint state read one with
+    * [[decodeManifest]], one reader per field. The layout is pinned
+    * byte for byte — the checkpoint's `state` slice embeds the body,
+    * and every retained manifest must keep reading:
+    *
+    *   {"version":N,"files":[..],"op":..,"ts":..,"cdc":[..],
+    *    "txns":{app:epoch,..},
+    *    "statscol":c,"stats":[{"path":..,"min":..,"max":..},..],
+    *    "mstats":[{"path":..,"cols":{c:[mn,mx],..},"vals":{c:[..],..}},..],
+    *    "blooms":{"col":c,"files":[{"path":..,"b64":..},..]},
+    *    "minReader":2,"dels":[{"paths":[..],"r":[[c,lo,hi],..],
+    *      "e":[[c,v],..],"i":[[c,[v,..]],..]},..]}
+    *
+    * `version`, `files` and `ts` are always written, `op` unless it is
+    * "write", every other field only when set. Maps are written in
+    * key order, so one snapshot has one body. */
+  private[graft] def encodeManifest(s: Snapshot): String = {
+    def arr(xs: Iterable[String]) = xs.mkString("[", ",", "]")
+    def obj(kvs: Iterable[(String, String)]) =
+      kvs.map { case (k, v) => jq(k) + ":" + v }.mkString("{", ",", "}")
+    val b = new StringBuilder(
+      s"""{"version":${s.version},"files":${arr(s.files.map(jq))}""")
+    if (s.op != "write") b ++= ",\"op\":" + jq(s.op)
+    b ++= ",\"ts\":" + s.ts
+    if (s.changes.nonEmpty) b ++= ",\"cdc\":" + arr(s.changes.map(jq))
+    if (s.txns.nonEmpty) b ++= ",\"txns\":" +
+      obj(s.txns.toSeq.sorted.map { case (a, e) => a -> e.toString })
+    s.statsCol.filter(_ => s.stats.nonEmpty).foreach { c =>
+      b ++= ",\"statscol\":" + jq(c) + ",\"stats\":" + arr(
+        s.stats.toSeq.sortBy(_._1).map { case (p, (mn, mx)) =>
+          s"""{"path":${jq(p)},"min":$mn,"max":$mx}""" })
+    }
+    if (s.multiStats.nonEmpty || s.fileValues.nonEmpty)
+      b ++= ",\"mstats\":" + arr(
+        (s.multiStats.keySet ++ s.fileValues.keySet).toSeq.sorted.map { p =>
+          val cols = obj(s.multiStats.getOrElse(p, Map.empty).toSeq
+            .sortBy(_._1).map { case (c, (mn, mx)) => c -> s"[$mn,$mx]" })
+          val vals = obj(s.fileValues.getOrElse(p, Map.empty).toSeq
+            .sortBy(_._1).map { case (c, vs) => c -> arr(vs.toSeq.sorted.map(jq)) })
+          s"""{"path":${jq(p)},"cols":$cols,"vals":$vals}"""
+        })
+    s.bloomCol.filter(_ => s.blooms.nonEmpty).foreach { c =>
+      b ++= ",\"blooms\":{\"col\":" + jq(c) + ",\"files\":" + arr(
+        s.blooms.toSeq.sortBy(_._1).map { case (p, bytes) =>
+          val b64 = java.util.Base64.getEncoder.encodeToString(bytes)
+          s"""{"path":${jq(p)},"b64":"$b64"}""" }) + "}"
+    }
+    // entries sharing a predicate body serialize ONCE with a "paths"
+    // list (a merge's IN-set touches many files — repeating a 100k-key
+    // list per file would multiply the manifest by the candidate
+    // count); the shared body also keeps readFilesDv's del-signature
+    // grouping coarse (one relation per DML, not per file). The form
+    // is a reader-visible format feature, so the commit stamps the
+    // protocol floor ("minReader":2) — see [[SupportedReaderVersion]].
+    // Bounds serialize as STRINGS (`Double.toString` round-trips
+    // ±Infinity, which bare JSON numbers cannot carry).
+    if (s.dels.nonEmpty)
+      b ++= ",\"minReader\":" + SupportedReaderVersion + ",\"dels\":" + arr(
+        s.dels.groupBy(d => (d.ranges, d.eqs, d.ins)).toSeq
+          .sortBy(_._2.head.path).map { case ((rs, es, is), ds) =>
+            val r = arr(rs.map { case (c, lo, hi) =>
+              arr(Seq(jq(c), jq(lo.toString), jq(hi.toString))) })
+            val e = arr(es.map { case (c, v) => arr(Seq(jq(c), jq(v))) })
+            val i =
+              if (is.isEmpty) ""
+              else ",\"i\":" + arr(is.map { case (c, vs) =>
+                arr(Seq(jq(c), arr(vs.map(jq)))) })
+            s"""{"paths":${arr(ds.map(d => jq(d.path)))},"r":$r,"e":$e$i}"""
+          })
+    b += '}'
+    b.result()
+  }
+
+  /** Decode one manifest body as version `v` of `table`. `full =
+    * false` is the cheap form the log WALKS use ([[peekManifest]]):
+    * version, ts, op, files, change files and deletion predicates,
+    * never the txns, stats, value sets or base64 blooms. The manifest
+    * is machine-written, so the strict JSON walk (graft.Json) fails a
+    * corrupt body with a named error rather than skipping it. */
+  private[graft] def decodeManifest(table: String, v: Long, body: String,
+      full: Boolean = true): Snapshot = {
     val root = try graft.Json.parseObject(body) catch {
       case e: graft.Json.JsonException => throw new IllegalStateException(
         s"corrupt manifest v$v.json at $table: ${e.getMessage}")
     }
     checkReaderVersion(root, table, v)
-    def asDouble(x: Any): Double = x match {
+    def num(x: Any): Double = x match {
       case l: Long => l.toDouble
       case d: Double => d
       case other => throw new IllegalStateException(
         s"manifest v$v.json at $table: non-numeric stat $other")
     }
-    val files = root.get("files") match {
-      case Some(l: List[_]) => l.collect { case s: String => s }
+    def str(m: Map[String, Any], k: String): Option[String] =
+      m.get(k).collect { case s: String => s }
+    def strs(x: Any): List[String] = x match {
+      case l: List[_] => l.collect { case s: String => s }
       case _ => Nil
     }
-    val txns = root.get("txns") match {
-      case Some(m: Map[_, _]) => m.asInstanceOf[Map[String, Any]]
-        .map { case (k, x) => k -> asDouble(x).toLong }
-      case _ => Map.empty[String, Long]
+    def fields(x: Any): Map[String, Any] = x match {
+      case m: Map[_, _] => m.asInstanceOf[Map[String, Any]]
+      case _ => Map.empty
     }
-    val statsCol = root.get("statscol").collect { case s: String => s }
-    val stats = root.get("stats") match {
-      case Some(l: List[_]) => l.collect { case m: Map[_, _] =>
-        val e = m.asInstanceOf[Map[String, Any]]
-        e("path").asInstanceOf[String] ->
-          (asDouble(e("min")), asDouble(e("max")))
-      }.toMap
-      case _ => Map.empty[String, (Double, Double)]
-    }
-    val (mstats, fvals) = root.get("mstats") match {
-      case Some(l: List[_]) =>
-        val entries = l.collect { case m: Map[_, _] =>
-          m.asInstanceOf[Map[String, Any]]
-        }
-        val ms = entries.map { e =>
-          val cols = e.get("cols") match {
-            case Some(c: Map[_, _]) => c.asInstanceOf[Map[String, Any]]
-              .map { case (k, x) =>
-                val List(mn, mx) = x.asInstanceOf[List[Any]]
-                k -> (asDouble(mn), asDouble(mx))
-              }
-            case _ => Map.empty[String, (Double, Double)]
-          }
-          e("path").asInstanceOf[String] -> cols
-        }.toMap
-        val fv = entries.map { e =>
-          val vals = e.get("vals") match {
-            case Some(c: Map[_, _]) => c.asInstanceOf[Map[String, Any]]
-              .map { case (k, x) =>
-                k -> x.asInstanceOf[List[Any]]
-                  .collect { case s: String => s }.toSet
-              }
-            case _ => Map.empty[String, Set[String]]
-          }
-          e("path").asInstanceOf[String] -> vals
-        }.toMap
-        (ms, fv)
-      case _ => (Map.empty[String, Map[String, (Double, Double)]],
-        Map.empty[String, Map[String, Set[String]]])
-    }
-    val (bloomCol, blooms) = root.get("blooms") match {
-      case Some(m: Map[_, _]) =>
-        val o = m.asInstanceOf[Map[String, Any]]
-        val bc = o.get("col").collect { case s: String => s }
-        val bs = o.get("files") match {
-          case Some(l: List[_]) => l.collect { case e: Map[_, _] =>
-            val em = e.asInstanceOf[Map[String, Any]]
-            em("path").asInstanceOf[String] ->
-              java.util.Base64.getDecoder.decode(
-                em("b64").asInstanceOf[String])
-          }.toMap
-          case _ => Map.empty[String, Array[Byte]]
-        }
-        (bc, bs)
-      case _ => (None, Map.empty[String, Array[Byte]])
-    }
-    val op = root.get("op").collect { case s: String => s }
-      .getOrElse("write")
-    val changes = root.get("cdc") match {
-      case Some(l: List[_]) => l.collect { case s: String => s }
+    def objs(x: Any): List[Map[String, Any]] = x match {
+      case l: List[_] => l.collect { case m: Map[_, _] => fields(m) }
       case _ => Nil
     }
-    val ts = root.get("ts").collect { case l: Long => l }.getOrElse(0L)
-    Snapshot(v, files, txns, statsCol, stats, mstats, fvals,
-      bloomCol, blooms, op, changes, ts, parseDels(root))
+    def path(e: Map[String, Any]): String = e("path").asInstanceOf[String]
+    val walk = Snapshot(v, strs(root.getOrElse("files", Nil)),
+      op = str(root, "op").getOrElse("write"),
+      changes = strs(root.getOrElse("cdc", Nil)),
+      ts = root.get("ts").collect { case l: Long => l }.getOrElse(0L),
+      dels = decodeDels(root))
+    if (!full) return walk
+    val mstats = objs(root.getOrElse("mstats", Nil))
+    val blooms = fields(root.getOrElse("blooms", Nil))
+    walk.copy(
+      txns = fields(root.getOrElse("txns", Nil)).map {
+        case (k, e: Long) => k -> e
+        case (k, x) => k -> num(x).toLong
+      },
+      statsCol = str(root, "statscol"),
+      stats = objs(root.getOrElse("stats", Nil))
+        .map(e => path(e) -> (num(e("min")), num(e("max")))).toMap,
+      multiStats = mstats.map(e => path(e) -> fields(e.getOrElse("cols", Nil))
+        .map { case (k, x) =>
+          val List(mn, mx) = x.asInstanceOf[List[Any]]
+          k -> (num(mn), num(mx))
+        }).toMap,
+      fileValues = mstats.map(e => path(e) -> fields(e.getOrElse("vals", Nil))
+        .map { case (k, x) => k -> strs(x).toSet }).toMap,
+      bloomCol = str(blooms, "col"),
+      blooms = objs(blooms.getOrElse("files", Nil)).map(e => path(e) ->
+        java.util.Base64.getDecoder.decode(e("b64").asInstanceOf[String]))
+        .toMap)
   }
 
   /** Highest manifest reader-feature level this build understands.
@@ -532,12 +615,10 @@ object TxTable {
           s"$SupportedReaderVersion — upgrade before reading this table")
     }
 
-  /** Deletion-predicate entries of one parsed manifest root — shared
-    * by [[parseManifest]] and [[peekManifest]] (the change-feed walk
-    * needs dels context per version). Bounds serialize as STRINGS
-    * (`Double.toString` round-trips ±Infinity, which bare JSON
-    * numbers cannot carry). */
-  private def parseDels(root: Map[String, Any]): Seq[DelEntry] =
+  /** Deletion-predicate entries of one parsed manifest root — part of
+    * both [[decodeManifest]] forms (the change-feed walk needs dels
+    * context per version). */
+  private def decodeDels(root: Map[String, Any]): Seq[DelEntry] =
     root.get("dels") match {
       case Some(l: List[_]) => l.collect { case m: Map[_, _] =>
         val e = m.asInstanceOf[Map[String, Any]]
@@ -577,40 +658,18 @@ object TxTable {
       case _ => Nil
     }
 
-  /** Lightweight manifest peek for the WALK paths (timestamp
-    * resolution, change-feed slicing): version / ts / op / file list
-    * / change-file list only — the stats maps, value sets and base64
-    * bloom payloads (the expensive parts of a full [[snapshot]]
-    * materialization) are never converted. One exact manifest read,
-    * no head resolution, no directory listing. None when version `v`
-    * is not retained. */
-  private[graft] case class Peek(version: Long, ts: Long, op: String,
-      files: Seq[String], changes: Seq[String],
-      dels: Seq[DelEntry] = Nil)
-
+  /** Version `v`'s manifest in the cheap walk form ([[decodeManifest]]
+    * with `full = false`) — for the paths that WALK the log (timestamp
+    * resolution, change-feed slicing, mapping validity, clone
+    * protection). One exact manifest read, no head resolution, no
+    * directory listing. None when version `v` is not retained. */
   private[graft] def peekManifest(spark: SparkSession, table: String,
-      v: Long): Option[Peek] = {
+      v: Long): Option[Snapshot] = {
     val f = fs(spark, logDir(table))
     val mp = manifestPath(table, v)
-    if (!f.exists(mp)) return None
-    val body = new String(readFully(f, mp), "UTF-8")
-    val root = try graft.Json.parseObject(body) catch {
-      case e: graft.Json.JsonException => throw new IllegalStateException(
-        s"corrupt manifest v$v.json at $table: ${e.getMessage}")
-    }
-    checkReaderVersion(root, table, v)
-    val files = root.get("files") match {
-      case Some(l: List[_]) => l.collect { case s: String => s }
-      case _ => Nil
-    }
-    val changes = root.get("cdc") match {
-      case Some(l: List[_]) => l.collect { case s: String => s }
-      case _ => Nil
-    }
-    val op = root.get("op").collect { case s: String => s }
-      .getOrElse("write")
-    val ts = root.get("ts").collect { case l: Long => l }.getOrElse(0L)
-    Some(Peek(v, ts, op, files, changes, parseDels(root)))
+    if (!f.exists(mp)) None
+    else Some(decodeManifest(table, v,
+      new String(readFully(f, mp), "UTF-8"), full = false))
   }
 
   /** `TIMESTAMP AS OF` resolution: the NEWEST retained version whose
@@ -774,20 +833,6 @@ object TxTable {
       .map("_changes/" + _)
   }
 
-  /** Atomic commit of `files` as `version`. Throws
-    * [[TxConflictException]] when another writer claimed the version
-    * first — the caller re-reads and retries. Any other IO fault
-    * (permissions, disk full, network) propagates as-is: misreporting
-    * it as a conflict would send the caller into a rebase loop.
-    *
-    * The single-winner publication is delegated to the table path's
-    * [[CommitProtocol]] — link(2) on local POSIX, no-overwrite rename
-    * on HDFS, the store's conditional put on object stores (which
-    * MUST be registered: known last-writer-wins schemes fail fast
-    * rather than silently losing a racer's commit). Each protocol
-    * guarantees a reader sees no commit or the complete winning body,
-    * never a partial or clobbered one.
-    */
   /** JSON string escape for manifest bodies — partition VALUES are
     * data-derived, so quotes/backslashes/control chars must encode. */
   private def jq(s: String): String = "\"" + s.flatMap {
@@ -797,102 +842,47 @@ object TxTable {
     case c => c.toString
   } + "\""
 
+  /** Atomic commit of `next` as version `next.version` — the one
+    * commit path of every writer. Per-file entries (stats, value sets,
+    * blooms, deletion predicates) are written only for files `next`
+    * lists, so a writer that replaces files never hand-filters their
+    * metadata; `ts` is stamped here. Throws [[TxConflictException]]
+    * when another writer claimed the version first — the caller
+    * re-reads and retries. Any other IO fault (permissions, disk
+    * full, network) propagates as-is: misreporting it as a conflict
+    * would send the caller into a rebase loop.
+    *
+    * The single-winner publication is delegated to the table path's
+    * [[CommitProtocol]] — link(2) on local POSIX, no-overwrite rename
+    * on HDFS, the store's conditional put on object stores (which
+    * MUST be registered: known last-writer-wins schemes fail fast
+    * rather than silently losing a racer's commit). Each protocol
+    * guarantees a reader sees no commit or the complete winning body,
+    * never a partial or clobbered one.
+    */
   private[graft] def commit(spark: SparkSession, table: String,
-      version: Long, files: Seq[String],
-      txns: Map[String, Long] = Map.empty,
-      statsCol: Option[String] = None,
-      stats: Map[String, (Double, Double)] = Map.empty,
-      multiStats: Map[String, Map[String, (Double, Double)]] = Map.empty,
-      fileValues: Map[String, Map[String, Set[String]]] = Map.empty,
-      bloomCol: Option[String] = None,
-      blooms: Map[String, Array[Byte]] = Map.empty,
-      op: String = "write",
-      changes: Seq[String] = Nil,
-      dels: Seq[DelEntry] = Nil): Unit = {
+      next: Snapshot): Unit = {
     val ld = logDir(table)
     val f = fs(spark, ld)
     f.mkdirs(ld)
-    val filesJson = files.map("\"" + _ + "\"").mkString(",")
-    val opJson = if (op == "write") "" else ",\"op\":" + jq(op)
-    // committing writer's wall clock — the TIMESTAMP AS OF key.
-    // Best-effort like Delta's log mtimes: skewed writers make it
-    // non-monotone, which costs resolution precision, never reads.
-    val tsJson = ",\"ts\":" + System.currentTimeMillis()
-    val changesJson =
-      if (changes.isEmpty) ""
-      else ",\"cdc\":[" + changes.map(jq).mkString(",") + "]"
-    val txnsJson =
-      if (txns.isEmpty) ""
-      else txns.toSeq.sorted
-        .map { case (a, e) => "\"" + a + "\":" + e }
-        .mkString(",\"txns\":{", ",", "}")
-    val statsJson = statsCol match {
-      case Some(c) if stats.nonEmpty =>
-        ",\"statscol\":\"" + c + "\",\"stats\":[" +
-          stats.toSeq.sortBy(_._1).map { case (pth, (mn, mx)) =>
-            "{\"path\":\"" + pth + "\",\"min\":" + mn + ",\"max\":" + mx + "}"
-          }.mkString(",") + "]"
-      case _ => ""
-    }
-    val mstatsJson =
-      if (multiStats.isEmpty && fileValues.isEmpty) ""
-      else {
-        val paths = (multiStats.keySet ++ fileValues.keySet).toSeq.sorted
-        ",\"mstats\":[" + paths.map { pth =>
-          val cols = multiStats.getOrElse(pth, Map.empty).toSeq.sortBy(_._1)
-            .map { case (c, (mn, mx)) => jq(c) + s":[$mn,$mx]" }
-            .mkString("{", ",", "}")
-          val vals = fileValues.getOrElse(pth, Map.empty).toSeq.sortBy(_._1)
-            .map { case (c, vs) =>
-              jq(c) + ":[" + vs.toSeq.sorted.map(jq).mkString(",") + "]"
-            }.mkString("{", ",", "}")
-          s"""{"path":${jq(pth)},"cols":$cols,"vals":$vals}"""
-        }.mkString(",") + "]"
-      }
-    val bloomsJson = bloomCol match {
-      case Some(bc) if blooms.nonEmpty =>
-        ",\"blooms\":{\"col\":" + jq(bc) + ",\"files\":[" +
-          blooms.toSeq.sortBy(_._1).map { case (pth, bytes) =>
-            s"""{"path":${jq(pth)},"b64":"""" +
-              java.util.Base64.getEncoder.encodeToString(bytes) + "\"}"
-          }.mkString(",") + "]}"
-      case _ => ""
-    }
-    // entries sharing a predicate body serialize ONCE with a "paths"
-    // list (a merge's IN-set touches many files — repeating a 100k-key
-    // list per file would multiply the manifest by the candidate
-    // count); the shared body also keeps readFilesDv's del-signature
-    // grouping coarse (one relation per DML, not per file). The form
-    // is a reader-visible format feature, so the commit stamps the
-    // protocol floor ("minReader":2) — see [[SupportedReaderVersion]]
-    val delsJson =
-      if (dels.isEmpty) ""
-      else ",\"minReader\":" + SupportedReaderVersion +
-        ",\"dels\":[" + dels.groupBy(d => (d.ranges, d.eqs, d.ins))
-        .toSeq.sortBy(_._2.head.path).map { case ((rs, es, is), ds) =>
-          val r = rs.map { case (c, lo, hi) =>
-            s"[${jq(c)},${jq(lo.toString)},${jq(hi.toString)}]" }
-            .mkString("[", ",", "]")
-          val e = es.map { case (c, v) => s"[${jq(c)},${jq(v)}]" }
-            .mkString("[", ",", "]")
-          val i =
-            if (is.isEmpty) ""
-            else ",\"i\":" + is.map { case (c, vs) =>
-              s"[${jq(c)},[${vs.map(jq).mkString(",")}]]" }
-              .mkString("[", ",", "]")
-          val paths = ds.map(x => jq(x.path)).mkString(",")
-          s"""{"paths":[$paths],"r":$r,"e":$e$i}"""
-        }.mkString(",") + "]"
-    val body =
-      s"""{"version":$version,"files":[$filesJson]$opJson$tsJson$changesJson$txnsJson$statsJson$mstatsJson$bloomsJson$delsJson}"""
-    val target = new Path(ld, s"v$version.json")
+    val live = next.files.toSet
+    def listed[V](m: Map[String, V]) = m.filter { case (p, _) => live(p) }
+    val body = encodeManifest(next.copy(
+      stats = listed(next.stats), multiStats = listed(next.multiStats),
+      fileValues = listed(next.fileValues), blooms = listed(next.blooms),
+      dels = next.dels.filter(d => live(d.path)),
+      // committing writer's wall clock — the TIMESTAMP AS OF key.
+      // Best-effort like Delta's log mtimes: skewed writers make it
+      // non-monotone, which costs resolution precision, never reads.
+      ts = System.currentTimeMillis()))
+    val target = manifestPath(table, next.version)
     val protocol = CommitProtocol.forScheme(f.getScheme)
     if (!protocol.publish(f, target, body.getBytes("UTF-8")))
       throw new TxConflictException(
-        s"version $version already committed at $table")
-    writeHint(f, table, version) // best-effort, after the real commit
-    if (version % CheckpointInterval == 0)
-      writeCheckpoint(f, table, version, Some(body)) // durable floor + state
+        s"version ${next.version} already committed at $table")
+    writeHint(f, table, next.version) // best-effort, after the real commit
+    if (next.version % CheckpointInterval == 0) // durable floor + state
+      writeCheckpoint(f, table, next.version, Some(body))
   }
 
   /** CREATE TABLE with a declared schema and no rows yet: commit an
@@ -907,7 +897,7 @@ object TxTable {
   def createEmpty(spark: SparkSession, table: String,
       schema: org.apache.spark.sql.types.StructType): Long = {
     declareSchema(spark, table, schema)
-    commit(spark, table, 1L, Nil, op = "create")
+    commit(spark, table, Snapshot.Empty.next("create"))
     1L
   }
 
@@ -1040,41 +1030,12 @@ object TxTable {
     try out.write(ColumnMapping.toJson(m1).getBytes("UTF-8"))
     finally out.close()
     def rk(n: String): Option[String] = rekey.getOrElse(n, Some(n))
-    // value-set keys may be transform names ("days(ts)") — rekey the
-    // INNER column so a renamed partition column keeps pruning
-    def rkEntry(e: String): Option[String] = PartTransform.parse(e) match {
-      case PartIdentity(cn) => rk(cn)
-      case PartDays(cn) => rk(cn).map(n => s"days($n)")
-      case PartMonths(cn) => rk(cn).map(n => s"months($n)")
-      case PartHours(cn) => rk(cn).map(n => s"hours($n)")
-      case PartYears(cn) => rk(cn).map(n => s"years($n)")
-      case PartBucket(nb, cn) => rk(cn).map(n => s"bucket($nb,$n)")
-      case PartTruncate(w, cn) => rk(cn).map(n => s"truncate($w,$n)")
-    }
-    val ms2 = cur.multiStats.map { case (file, cols) =>
-      file -> cols.flatMap { case (k, v) => rk(k).map(_ -> v) } }
-    val fv2 = cur.fileValues.map { case (file, cols) =>
-      file -> cols.flatMap { case (k, v) => rkEntry(k).map(_ -> v) } }
-    val statsCol2 = cur.statsCol.flatMap(rk)
-    val bloomCol2 = cur.bloomCol.flatMap(rk)
     // deletion predicates rekey with the rename (dropColumn refuses
-    // while a del references the column, so rk always resolves here).
-    // Dotted entries (old manifests only — new DV commits refuse
-    // nested names) rekey their HEAD so renaming "s" moves "s.x" too.
-    val dels2 = cur.dels.map { d =>
-      def re(c: String): String = {
-        val h = c.takeWhile(_ != '.')
-        rk(h).getOrElse(h) + c.drop(h.length)
-      }
-      DelEntry(d.path, d.ranges.map { case (c, lo, hi) => (re(c), lo, hi) },
-        d.eqs.map { case (c, v2) => (re(c), v2) },
-        d.ins.map { case (c, vs) => (re(c), vs) })
-    }
-    try commit(spark, table, next, cur.files, cur.txns,
-      statsCol2, if (statsCol2.isDefined) cur.stats else Map.empty,
-      ms2, fv2,
-      bloomCol2, if (bloomCol2.isDefined) cur.blooms else Map.empty,
-      op = "alter_mapping", dels = dels2)
+    // while a del references the column, so rk always resolves here);
+    // value-set keys that are transforms ("days(ts)") rekey their inner
+    // column, so a renamed partition column keeps pruning
+    try commit(spark, table, cur.next("alter_mapping")
+      .rekey(rk, h => rk(h).getOrElse(h)))
     catch { case e: Throwable =>
       f.delete(mappingPath(table, next), false); throw e
     }
@@ -1084,6 +1045,7 @@ object TxTable {
       declareSchema(spark, table,
         org.apache.spark.sql.types.StructType(fields))
     }
+    def rkEntry(e: String): Option[String] = PartTransform.rekey(e, rk)
     val parts = declaredPartitions(spark, table)
     if (parts.nonEmpty && parts.exists(p => !rkEntry(p).contains(p)))
       // preserve the ORIGINAL recording zone: the rename moves names,
@@ -1223,12 +1185,14 @@ object TxTable {
       try out.write(ColumnMapping.toJson(m).getBytes("UTF-8"))
       finally out.close()
     }
-    commit(spark, dst, 1L, files, Map.empty,
-      snap.statsCol, rekey(snap.stats), rekey(snap.multiStats),
-      rekey(snap.fileValues), snap.bloomCol, rekey(snap.blooms),
-      op = "clone",
-      // deletion predicates follow their files (absolute references)
-      dels = snap.dels.map(d => d.copy(path = abs(d.path))))
+    // index metadata and deletion predicates follow their files
+    // (absolute references); the source's txns and change files do not
+    commit(spark, dst, snap.copy(version = 1L, files = files,
+      txns = Map.empty, stats = rekey(snap.stats),
+      multiStats = rekey(snap.multiStats),
+      fileValues = rekey(snap.fileValues), blooms = rekey(snap.blooms),
+      op = "clone", changes = Nil,
+      dels = snap.dels.map(d => d.copy(path = abs(d.path)))))
     // register the clone in the SOURCE's log so src's vacuum can
     // protect the files this clone references (closing the
     // dangling-ref hazard the r16 scaladoc documented): best-effort —
@@ -1456,12 +1420,11 @@ object TxTable {
     * file stats do not (the files they described are gone). */
   def overwrite(df: DataFrame, table: String): Long = {
     val spark = df.sparkSession
-    val cur = snapshot(spark, table)
-    val next = cur.map(_.version + 1).getOrElse(1L)
-    val files = writeFiles(df, table, next)
-    commit(spark, table, next, files, cur.map(_.txns).getOrElse(Map.empty),
-      op = "overwrite")
-    next
+    val next = snapshot(spark, table).getOrElse(Snapshot.Empty)
+      .next("overwrite")
+    commit(spark, table,
+      next.copy(files = writeFiles(df, table, next.version)))
+    next.version
   }
 
   /** [[overwrite]] that additionally records `markers` in the
@@ -1483,18 +1446,16 @@ object TxTable {
   private[sources] def overwriteWithTxns(spark: SparkSession, table: String,
       markers: Map[String, Long], requireTxns: Map[String, Long])(
       write: Long => Seq[String]): Long = {
-    val cur = snapshot(spark, table)
-    val curTxns = cur.map(_.txns).getOrElse(Map.empty)
+    val cur = snapshot(spark, table).getOrElse(Snapshot.Empty)
     requireTxns.foreach { case (app, expected) =>
-      val actual = curTxns.getOrElse(app, 0L)
+      val actual = cur.txns.getOrElse(app, 0L)
       if (actual != expected) throw new TxConflictException(
         s"marker $app moved at $table ($actual != $expected): rebase")
     }
-    val next = cur.map(_.version + 1).getOrElse(1L)
-    val files = write(next)
-    commit(spark, table, next, files, curTxns ++ markers,
-      op = "overwrite")
-    next
+    val next = cur.next("overwrite")
+    commit(spark, table, next.copy(files = write(next.version),
+      txns = cur.txns ++ markers))
+    next.version
   }
 
   /** Append: next version = current files ++ new files. No data file
@@ -1507,21 +1468,14 @@ object TxTable {
     * indexed rewrite records theirs. */
   def append(df: DataFrame, table: String): Long = {
     val spark = df.sparkSession
-    val cur = snapshot(spark, table)
-    val next = cur.map(_.version + 1).getOrElse(1L)
-    val files = writeFiles(df, table, next)
-    commit(spark, table, next, cur.map(_.files).getOrElse(Nil) ++ files,
-      cur.map(_.txns).getOrElse(Map.empty),
-      cur.flatMap(_.statsCol), cur.map(_.stats).getOrElse(Map.empty),
-      cur.map(_.multiStats).getOrElse(Map.empty),
-      cur.map(_.fileValues).getOrElse(Map.empty),
-      cur.flatMap(_.bloomCol), cur.map(_.blooms).getOrElse(Map.empty),
-      op = "append",
-      // deletion predicates carry VERBATIM: the old files they hide
-      // rows of are still live — dropping them here would resurrect
-      dels = cur.map(_.dels).getOrElse(Nil))
+    // deletion predicates carry VERBATIM with the rest: the old files
+    // they hide rows of are still live — dropping them would resurrect
+    val next = snapshot(spark, table).getOrElse(Snapshot.Empty)
+      .next("append")
+    commit(spark, table, next.copy(
+      files = next.files ++ writeFiles(df, table, next.version)))
     widenDeclared(spark, table, df)
-    next
+    next.version
   }
 
   /** Write-time schema evolution for DECLARED tables (Delta's
@@ -1547,7 +1501,9 @@ object TxTable {
     * all rewritten as the next version's files. The relational
     * semantics are the same anti-join+union as `q_cdc_apply`; what
     * this adds is the atomicity — a reader mid-merge sees version N
-    * or N+1, never a mixture. */
+    * or N+1, never a mixture. The table's index follows the rewrite:
+    * stats and value sets are recomputed over the fresh files
+    * ([[indexFiles]]); blooms drop, as in every copy-on-write. */
   def merge(spark: SparkSession, table: String, updates: DataFrame,
       key: String): Long = {
     val cur = snapshot(spark, table)
@@ -1559,7 +1515,7 @@ object TxTable {
     val dv = cur.filter(_ => deletionVectorsEnabled(spark, table))
       .flatMap(c => mergeDvCounted(spark, table, updates, key, c))
     if (dv.isDefined) return dv.get._1
-    val next = cur.map(_.version + 1).getOrElse(1L)
+    val next = cur.getOrElse(Snapshot.Empty).next("merge")
     val merged = cur match {
       case None => updates
       case Some(_) =>
@@ -1571,12 +1527,13 @@ object TxTable {
           .join(updates.select(key).distinct(), Seq(key), "left_anti")
           .unionByName(updates, allowMissingColumns = true)
     }
-    val changeFiles = mergeChangeFiles(spark, table, cur, updates, key, next)
-    val files = writeFiles(merged, table, next)
-    commit(spark, table, next, files, cur.map(_.txns).getOrElse(Map.empty),
-      op = "merge", changes = changeFiles)
+    val changeFiles =
+      mergeChangeFiles(spark, table, cur, updates, key, next.version)
+    val files = writeFiles(merged, table, next.version)
+    commit(spark, table, indexFiles(spark, table,
+      next.copy(files = files, changes = changeFiles), files))
     widenDeclared(spark, table, updates)
-    next
+    next.version
   }
 
   /** The merge's change-feed delta (opt-in): keys present in both
@@ -1635,7 +1592,7 @@ object TxTable {
       .flatMap(c => mergeSyncDv(spark, table, updates, key,
         scopeRanges, scopeEq, c))
     if (dv.isDefined) return dv.get
-    val next = cur.map(_.version + 1).getOrElse(1L)
+    val next = cur.getOrElse(Snapshot.Empty).next("merge")
     val scopePred = predicateColumn(scopeRanges, scopeEq)
     val merged = cur match {
       case None => updates
@@ -1650,12 +1607,12 @@ object TxTable {
           .unionByName(updates, allowMissingColumns = true)
     }
     val changeFiles = mergeSyncChangeFiles(spark, table, cur, updates,
-      key, scopeRanges, scopeEq, next)
-    val files = writeFiles(merged, table, next)
-    commit(spark, table, next, files, cur.map(_.txns).getOrElse(Map.empty),
-      op = "merge", changes = changeFiles)
+      key, scopeRanges, scopeEq, next.version)
+    val files = writeFiles(merged, table, next.version)
+    commit(spark, table, indexFiles(spark, table,
+      next.copy(files = files, changes = changeFiles), files))
     widenDeclared(spark, table, updates)
-    next
+    next.version
   }
 
   /** [[mergeSync]]'s change-feed delta: [[mergeChangeFiles]]'s three
@@ -1857,13 +1814,13 @@ object TxTable {
     // skip the bloom decode + stats conversion a full snapshot()
     // pays, so a maxVersionsPerBatch=1 streaming consumer costs one
     // cheap manifest read per micro-batch, not a full parse chain
-    def snapAt(v: Long): Peek =
+    def snapAt(v: Long): Snapshot =
       peekManifest(spark, table, v).getOrElse(
         throw new IllegalArgumentException(
           s"version $v is vacuumed at $table — the change consumer " +
             "lost its place; reprocess from a full snapshot"))
     lazy val feedOn = changeFeedEnabled(spark, table)
-    val first: Option[Peek] =
+    val first: Option[Snapshot] =
       if (from == 0) None else Some(snapAt(from))
     var prevFiles: Set[String] = first.map(_.files.toSet).getOrElse(Set.empty)
     // deletion predicates per file at the PREVIOUS version — derived
@@ -1955,7 +1912,7 @@ object TxTable {
     val dv = cur.filter(_ => deletionVectorsEnabled(spark, table))
       .flatMap(c => applyCdcDv(spark, table, changes, key, opCol, c))
     if (dv.isDefined) return dv.get
-    val next = cur.map(_.version + 1).getOrElse(1L)
+    val next = cur.getOrElse(Snapshot.Empty).next("cdc")
     val upserts = changes.filter(col(opCol) =!= "d").drop(opCol)
     val merged = cur match {
       case None => upserts
@@ -1967,11 +1924,11 @@ object TxTable {
           .unionByName(upserts)
     }
     val changeFiles = cdcChangeFiles(spark, table, cur, changes, key,
-      opCol, next)
-    val files = writeFiles(merged, table, next)
-    commit(spark, table, next, files, cur.map(_.txns).getOrElse(Map.empty),
-      op = "cdc", changes = changeFiles)
-    next
+      opCol, next.version)
+    val files = writeFiles(merged, table, next.version)
+    commit(spark, table, indexFiles(spark, table,
+      next.copy(files = files, changes = changeFiles), files))
+    next.version
   }
 
   /** The CDC batch's change-feed delta (opt-in): a "d" op on an
@@ -2023,28 +1980,21 @@ object TxTable {
       .collect().map(_.getString(0))
     if (keysRaw.length > DvMergeMaxKeys) return None
     requireDvColumns(spark, table, cur, Seq(key))
-    val next = cur.version + 1
+    val v = cur.version + 1
     val keys = keysRaw.sorted.toSeq
     val touched =
       if (keys.isEmpty) Nil
       else candidateFilesForKeys(cur, key, keys, keyType)
     val changeFiles = cdcChangeFiles(spark, table, Some(cur), changes,
-      key, opCol, next)
+      key, opCol, v)
     val upserts = changes.filter(col(opCol) =!= "d").drop(opCol)
-    val fresh = writeFilesDispatch(upserts, table, next)
-    val statCols = cur.multiStats.values.flatMap(_.keys).toSeq.distinct.sorted
-    val valueCols = cur.fileValues.values.flatMap(_.keys).toSeq.distinct.sorted
-    val (freshMs, freshFv) =
-      recomputeMetadata(spark, table, fresh, statCols, valueCols)
+    val fresh = writeFilesDispatch(upserts, table, v)
     val ins = Seq(key -> keys)
-    commit(spark, table, next, cur.files ++ fresh, cur.txns,
-      cur.statsCol, cur.stats,
-      cur.multiStats ++ freshMs, cur.fileValues ++ freshFv,
-      cur.bloomCol, cur.blooms,
-      op = "cdc", changes = changeFiles,
-      dels = cur.dels ++ (if (keys.isEmpty) Nil
-        else touched.map(f => DelEntry(f, Nil, Nil, ins))))
-    Some(next)
+    commit(spark, table, indexFiles(spark, table, cur.next("cdc", changeFiles)
+      .copy(files = cur.files ++ fresh,
+        dels = cur.dels ++ touched.map(f => DelEntry(f, Nil, Nil, ins))),
+      fresh))
+    Some(v)
   }
 
   /** Exactly-once streaming append: apply `df` as `(appId, epochId)`
@@ -2063,21 +2013,15 @@ object TxTable {
     val spark = df.sparkSession
     var attempts = 0
     while (true) {
-      val cur = snapshot(spark, table)
-      if (cur.exists(_.txns.get(appId).exists(_ >= epochId))) return false
-      val next = cur.map(_.version + 1).getOrElse(1L)
-      val files = writeFiles(df, table, next)
-      val txns = cur.map(_.txns).getOrElse(Map.empty) + (appId -> epochId)
+      val cur = snapshot(spark, table).getOrElse(Snapshot.Empty)
+      if (cur.txns.get(appId).exists(_ >= epochId)) return false
+      val next = cur.next("append")
+      val files = writeFiles(df, table, next.version)
       try {
         // index metadata carries forward exactly as in append: the
         // described files remain live, new files are simply unindexed
-        commit(spark, table, next,
-          cur.map(_.files).getOrElse(Nil) ++ files, txns,
-          cur.flatMap(_.statsCol), cur.map(_.stats).getOrElse(Map.empty),
-          cur.map(_.multiStats).getOrElse(Map.empty),
-          cur.map(_.fileValues).getOrElse(Map.empty),
-          cur.flatMap(_.bloomCol), cur.map(_.blooms).getOrElse(Map.empty),
-          op = "append", dels = cur.map(_.dels).getOrElse(Nil))
+        commit(spark, table, next.copy(files = cur.files ++ files,
+          txns = cur.txns + (appId -> epochId)))
         return true
       } catch {
         case _: TxConflictException =>
@@ -2092,12 +2036,6 @@ object TxTable {
     false // unreachable
   }
 
-  /** Overwrite with per-file (min, max) stats of `col` in the
-    * manifest: rows are range-partitioned on `col` first so files
-    * hold disjoint ranges, then one bounded pass over the fresh
-    * files records each file's span — manifest-level data skipping,
-    * the Delta/Iceberg scan-pruning mechanism. [[readRange]] uses
-    * the stats to open only overlapping files. */
   /** Index/layout metadata is TOP-LEVEL-column only (the manifest's
     * stats/value-set/bloom language keys on flat names; a nested path
     * would record under a name no reader's prune translation ever
@@ -2113,33 +2051,28 @@ object TxTable {
         "promote the field to a column first)")
   }
 
+  /** Overwrite with per-file (min, max) stats of `col` in the
+    * manifest: rows are range-partitioned on `col` first so files
+    * hold disjoint ranges, then one bounded pass over the fresh
+    * files records each file's span — manifest-level data skipping,
+    * the Delta/Iceberg scan-pruning mechanism. [[readRange]] uses
+    * the stats to open only overlapping files. */
   def overwriteIndexed(df: DataFrame, table: String, col: String): Long = {
-    import org.apache.spark.sql.functions.{col => c, input_file_name, max => fmax, min => fmin}
+    import org.apache.spark.sql.functions.{col => c}
     requireTopLevel(df, Seq(col), "overwriteIndexed")
     val spark = df.sparkSession
-    val cur = snapshot(spark, table)
-    val next = cur.map(_.version + 1).getOrElse(1L)
+    val next = snapshot(spark, table).getOrElse(Snapshot.Empty)
+      .next("overwrite")
     // explicit partition count: an AQE-coalesced range exchange can
     // collapse a small table to ONE file, which defeats the stats
     val nParts = math.max(2,
       spark.sessionState.conf.numShufflePartitions)
-    val files = writeFiles(df.repartitionByRange(nParts, c(col)), table, next)
-    val byName = files.map(f => f.split('/').last -> f).toMap
-    val stats = toLogicalFrame(
-      scanFiles(spark, files.map(new Path(table, _).toString)),
-      mappingAt(spark, table))
-      .groupBy(input_file_name().as("__f"))
-      .agg(fmin(c(col)).as("__mn"), fmax(c(col)).as("__mx"))
-      .collect()
-      .flatMap { r =>
-        val name = r.getString(0).split('/').last
-        byName.get(name).map(f =>
-          f -> (r.get(1).toString.toDouble, r.get(2).toString.toDouble))
-      }.toMap
-    commit(spark, table, next, files,
-      cur.map(_.txns).getOrElse(Map.empty), Some(col), stats,
-      op = "overwrite")
-    next
+    val files = writeFiles(df.repartitionByRange(nParts, c(col)), table,
+      next.version)
+    val (ms, _) = recomputeMetadata(spark, table, files, Seq(col), Nil)
+    commit(spark, table, next.copy(files = files, statsCol = Some(col),
+      stats = ms.flatMap { case (f, m) => m.get(col).map(f -> _) }))
+    next.version
   }
 
   /** The files of `snap` that can contain `col` ∈ [lo, hi]: a file
@@ -2185,50 +2118,22 @@ object TxTable {
   def overwriteIndexedMulti(df: DataFrame, table: String,
       statCols: Seq[String], valueCols: Seq[String] = Nil,
       maxValuesPerFile: Int = 16): Long = {
-    import org.apache.spark.sql.functions.{col => c, collect_set, input_file_name, max => fmax, min => fmin}
+    import org.apache.spark.sql.functions.{col => c}
     require(statCols.nonEmpty || valueCols.nonEmpty)
     requireTopLevel(df, statCols ++ valueCols, "overwriteIndexedMulti")
     val spark = df.sparkSession
-    val cur = snapshot(spark, table)
-    val next = cur.map(_.version + 1).getOrElse(1L)
+    val next = snapshot(spark, table).getOrElse(Snapshot.Empty)
+      .next("overwrite")
     val nParts = math.max(2,
       spark.sessionState.conf.numShufflePartitions)
     val cluster = (valueCols ++ statCols).map(c)
     val files = writeFiles(
-      df.repartitionByRange(nParts, cluster: _*), table, next)
-    val byName = files.map(f => f.split('/').last -> f).toMap
-    val aggs =
-      statCols.flatMap(s => Seq(
-        fmin(c(s)).cast("double").as(s"__mn_$s"),
-        fmax(c(s)).cast("double").as(s"__mx_$s"))) ++
-      valueCols.map(v =>
-        collect_set(c(v).cast("string")).as(s"__vs_$v"))
-    val rows = toLogicalFrame(
-      scanFiles(spark, files.map(new Path(table, _).toString)),
-      mappingAt(spark, table))
-      .groupBy(input_file_name().as("__f"))
-      .agg(aggs.head, aggs.tail: _*)
-      .collect()
-    val mstats = rows.flatMap { r =>
-      val name = r.getString(0).split('/').last
-      byName.get(name).map { f =>
-        f -> statCols.map(s =>
-          s -> (r.getAs[Double](s"__mn_$s"), r.getAs[Double](s"__mx_$s"))).toMap
-      }
-    }.toMap
-    val fvals = rows.flatMap { r =>
-      val name = r.getString(0).split('/').last
-      byName.get(name).map { f =>
-        f -> valueCols.flatMap { v =>
-          val vs = r.getAs[scala.collection.Seq[String]](s"__vs_$v").toSet
-          if (vs.size <= maxValuesPerFile) Some(v -> vs) else None
-        }.toMap
-      }
-    }.toMap
-    commit(spark, table, next, files,
-      cur.map(_.txns).getOrElse(Map.empty),
-      multiStats = mstats, fileValues = fvals, op = "overwrite")
-    next
+      df.repartitionByRange(nParts, cluster: _*), table, next.version)
+    val (ms, fv) = recomputeMetadata(spark, table, files, statCols,
+      valueCols, maxValuesPerFile)
+    commit(spark, table, next.copy(files = files, multiStats = ms,
+      fileValues = fv))
+    next.version
   }
 
   /** DYNAMIC PARTITION OVERWRITE: atomically replace exactly the
@@ -2309,14 +2214,14 @@ object TxTable {
     // the transform's name — identity columns behave exactly as before
     val transforms = partCols.map(PartTransform.parse)
     requireZoneAgreement(spark, table, transforms)
-    val cur = snapshot(spark, table)
-    val next = cur.map(_.version + 1).getOrElse(1L)
+    val cur = snapshot(spark, table).getOrElse(Snapshot.Empty)
+    val next = cur.next("overwrite_partitions")
     // optimistic-marker guard (the partial-IVM discipline): the
     // caller computed its replacement against a consumption marker;
     // if another maintainer advanced it since, committing would
     // double-apply — conflict out so the caller rebases
     (requireTxns ++ requireTxn).foreach { case (app, expected) =>
-      val got = cur.flatMap(_.txns.get(app)).getOrElse(0L)
+      val got = cur.txns.getOrElse(app, 0L)
       if (got != expected) throw new TxConflictException(
         s"marker $app moved ($expected -> $got) at $table: rebase")
     }
@@ -2328,8 +2233,7 @@ object TxTable {
     // (explicitly-named partitions to replace even with no incoming
     // rows — the emptied-group delete of partial IVM) keep the
     // commit alive without fresh files.
-    if (fresh.isEmpty && extraTuples.isEmpty)
-      return cur.map(_.version).getOrElse(0L)
+    if (fresh.isEmpty && extraTuples.isEmpty) return cur.version
     // fresh files came through writeFiles / the physicalized V2
     // factory, so they store physical names; partCols are logical —
     // serve both frames logical
@@ -2359,30 +2263,26 @@ object TxTable {
       t.length == transforms.length && t.forall(_ != null),
       s"malformed extra partition tuple: $t"))
     val incoming = (derived ++ extraTuples).distinct
-    if (incoming.isEmpty) return cur.map(_.version).getOrElse(0L)
+    if (incoming.isEmpty) return cur.version
     require(incoming.size <= maxPartitions,
       s"${incoming.size} incoming partitions exceeds maxPartitions=" +
         s"$maxPartitions — a key this wide is not a partition key")
     // per-transform incoming value sets — the conjunctive prune language
     val incomingByCol: Seq[Set[String]] =
       transforms.indices.map(i => incoming.map(_(i)).toSet)
-    val statCols = cur.map(_.multiStats.values.flatMap(_.keys).toSeq
-      .distinct.sorted).getOrElse(Nil)
-    val valueCols = (cur.map(_.fileValues.values.flatMap(_.keys).toSeq)
-      .getOrElse(Nil) ++ transforms.map(_.name)).distinct.sorted
     // a file provably holds NO incoming tuple when SOME transform's
     // recorded value set misses EVERY tuple's value for that key;
     // tuple-level precision would need per-file tuple sets — the
     // per-key test is conservative (more rewrite, never wrong)
-    val touched = cur.map(_.files.filter { f =>
+    val touched = cur.files.filter { f =>
       !transforms.indices.exists { i =>
-        cur.get.fileValues.get(f).flatMap(_.get(transforms(i).name)) match {
+        cur.fileValues.get(f).flatMap(_.get(transforms(i).name)) match {
           case Some(vs) => !vs.exists(incomingByCol(i))
           case None => false // no metadata → cannot exclude
         }
       }
-    }).getOrElse(Nil)
-    val untouched = cur.map(_.files.filterNot(touched.toSet)).getOrElse(Nil)
+    }
+    val untouched = cur.files.filterNot(touched.toSet)
     // tuple-EXACT row routing via a broadcast join on the canonical
     // strings (an OR-of-ANDs literal expression would grow with the
     // tuple count; the join is uniform at any width). NULL partition
@@ -2400,9 +2300,7 @@ object TxTable {
         acc.withColumn(s"__k$i", t.expr) }
     // standing deletion predicates on touched files apply first, so
     // the remainder rewrite never resurrects hidden rows
-    val touchedDf = () => cur.fold(
-      spark.emptyDataFrame)(c => readFilesDv(spark, table, c, touched,
-        dynMapping))
+    val touchedDf = () => readFilesDv(spark, table, cur, touched, dynMapping)
     val changeFiles: Seq[String] =
       if (!changeFeedEnabled(spark, table)) Nil
       else if (fresh.isEmpty && touched.isEmpty) Nil
@@ -2417,93 +2315,52 @@ object TxTable {
         val ins =
           if (fresh.isEmpty) dels.limit(0)
           else freshDf().withColumn(ChangeTypeCol, lit("insert"))
-        writeChangeFiles(dels.unionByName(ins), table, next)
+        writeChangeFiles(dels.unionByName(ins), table, next.version)
       }
     val remainder: Seq[String] =
       if (touched.isEmpty) Nil
       else writeFiles(
         withKeys(touchedDf())
           .join(tupleDf, joinKeys, "left_anti")
-          .drop(joinKeys: _*), table, next)
-    // single-column stats + bloom metadata carry over on untouched
-    // files and refresh on rewritten+fresh ones — copyOnWrite's
+          .drop(joinKeys: _*), table, next.version)
+    // every index entry (blooms included) carries over on untouched
+    // files and is recomputed over the tracked columns plus the
+    // partition transforms on rewritten+fresh ones — copyOnWrite's
     // discipline (judge r15 ADVICE: dropping them here silently
-    // disabled point-lookup/range pruning after one dynamic
-    // overwrite on an indexed table). The statsCol rides the SAME
-    // recomputeMetadata scan as the multi-column stats (one pass over
-    // the rewritten+fresh files, r16 ADVICE) and is subtracted from
-    // the multiStats result unless it was already a tracked column.
-    val scOpt = cur.flatMap(_.statsCol)
-    val statColsAll = (statCols ++ scOpt).distinct.sorted
-    val (msAll, fv) = recomputeMetadata(spark, table, remainder ++ fresh,
-      statColsAll, valueCols)
-    val ms = scOpt match {
-      case Some(sc) if !statCols.contains(sc) =>
-        msAll.map { case (f, cols) => f -> (cols - sc) }
-      case _ => msAll
-    }
-    val untouchedSet = untouched.toSet
-    val singleStats: Map[String, (Double, Double)] = scOpt match {
-      case Some(sc) =>
-        cur.map(_.stats.filter { case (f, _) => untouchedSet(f) })
-          .getOrElse(Map.empty) ++
-          msAll.flatMap { case (f, m) => m.get(sc).map(f -> _) }
-      case None => Map.empty
-    }
-    // rewritten/fresh files have no bloom (absent → never pruned →
-    // still correct); untouched files keep theirs
-    val keptBlooms = cur.map(_.blooms.filter {
-      case (f, _) => untouchedSet(f) }).getOrElse(Map.empty)
-    commit(spark, table, next, untouched ++ remainder ++ fresh,
-      cur.map(_.txns).getOrElse(Map.empty) ++ addTxns,
-      cur.flatMap(_.statsCol).filter(_ => singleStats.nonEmpty),
-      singleStats,
-      multiStats = cur.map(_.multiStats.filter {
-        case (f, _) => untouchedSet(f) }).getOrElse(Map.empty) ++ ms,
-      fileValues = cur.map(_.fileValues.filter {
-        case (f, _) => untouchedSet(f) }).getOrElse(Map.empty) ++ fv,
-      bloomCol = cur.flatMap(_.bloomCol).filter(_ => keptBlooms.nonEmpty),
-      blooms = keptBlooms,
-      op = "overwrite_partitions", changes = changeFiles,
-      dels = cur.map(_.dels.filter(d => untouchedSet(d.path)))
-        .getOrElse(Nil))
-    next
+    // disabled point-lookup/range pruning after one dynamic overwrite
+    // on an indexed table); rewritten/fresh files get no bloom
+    // (absent → never pruned → still correct)
+    commit(spark, table, indexFiles(spark, table,
+      next.copy(files = untouched ++ remainder ++ fresh,
+        txns = cur.txns ++ addTxns, changes = changeFiles),
+      remainder ++ fresh, transforms.map(_.name)))
+    next.version
   }
 
-  /** Append clustered on a declared partition column, recording
-    * per-file value sets for the NEW files (existing metadata carries
-    * forward like any append) — the insert path for SQL-partitioned
-    * tables, so appended files stay prunable by the next dynamic
-    * overwrite and by `readWhere` on the partition column. */
-  def appendPartitioned(df: DataFrame, table: String,
-      partCol: String): Long =
-    appendPartitionedMulti(df, table, Seq(partCol))
-
+  /** Append clustered on the declared partition columns (or
+    * transforms), recording index entries for the NEW files — value
+    * sets of `partCols` plus every column the table already indexes
+    * (existing metadata carries forward like any append). The insert
+    * path for SQL-partitioned tables, so appended files stay prunable
+    * by the next dynamic overwrite and by `readWhere`. */
   def appendPartitionedMulti(df: DataFrame, table: String,
       partCols: Seq[String]): Long = {
     val spark = df.sparkSession
     val transforms = partCols.map(PartTransform.parse)
     requireZoneAgreement(spark, table, transforms)
-    val cur = snapshot(spark, table)
-    val next = cur.map(_.version + 1).getOrElse(1L)
+    val next = snapshot(spark, table).getOrElse(Snapshot.Empty)
+      .next("append")
     val nParts = math.max(2, spark.sessionState.conf.numShufflePartitions)
     val files = transforms match {
       // bucket layout: one bucket per file (the SPJ invariant)
-      case Seq(b: PartBucket) => writeFilesBucketed(df, table, next, b)
+      case Seq(b: PartBucket) => writeFilesBucketed(df, table, next.version, b)
       case _ => writeFiles(
         df.repartitionByRange(nParts, transforms.map(_.expr): _*),
-        table, next)
+        table, next.version)
     }
-    val (_, fv) = recomputeMetadata(spark, table, files, Nil,
-      transforms.map(_.name))
-    commit(spark, table, next, cur.map(_.files).getOrElse(Nil) ++ files,
-      cur.map(_.txns).getOrElse(Map.empty),
-      cur.flatMap(_.statsCol), cur.map(_.stats).getOrElse(Map.empty),
-      cur.map(_.multiStats).getOrElse(Map.empty),
-      cur.map(_.fileValues).getOrElse(Map.empty) ++ fv,
-      cur.flatMap(_.bloomCol), cur.map(_.blooms).getOrElse(Map.empty),
-      op = "append", dels = cur.map(_.dels).getOrElse(Nil))
-    next
+    commit(spark, table, indexFiles(spark, table,
+      next.copy(files = next.files ++ files), files, transforms.map(_.name)))
+    next.version
   }
 
   /** [[appendEpoch]] over ALREADY-STAGED files — the DSv2 streaming
@@ -2517,18 +2374,11 @@ object TxTable {
       maxRetries: Int = 10): Boolean = {
     var attempts = 0
     while (true) {
-      val cur = snapshot(spark, table)
-      if (cur.exists(_.txns.get(appId).exists(_ >= epochId))) return false
-      val next = cur.map(_.version + 1).getOrElse(1L)
-      val txns = cur.map(_.txns).getOrElse(Map.empty) + (appId -> epochId)
+      val cur = snapshot(spark, table).getOrElse(Snapshot.Empty)
+      if (cur.txns.get(appId).exists(_ >= epochId)) return false
       try {
-        commit(spark, table, next, cur.map(_.files).getOrElse(Nil) ++ files,
-          txns,
-          cur.flatMap(_.statsCol), cur.map(_.stats).getOrElse(Map.empty),
-          cur.map(_.multiStats).getOrElse(Map.empty),
-          cur.map(_.fileValues).getOrElse(Map.empty),
-          cur.flatMap(_.bloomCol), cur.map(_.blooms).getOrElse(Map.empty),
-          op = "append", dels = cur.map(_.dels).getOrElse(Nil))
+        commit(spark, table, cur.next("append").copy(
+          files = cur.files ++ files, txns = cur.txns + (appId -> epochId)))
         return true
       } catch {
         case _: TxConflictException =>
@@ -2540,24 +2390,6 @@ object TxTable {
     false // unreachable
   }
 
-  /** Record `col` as the table's declared partition column (the SQL
-    * `PARTITIONED BY` side file, [[TxSparkTable]] surfaces it as an
-    * identity transform). Like `_schema`, not part of the versioned
-    * manifest: it names a write-layout contract, not data. */
-  def declarePartition(spark: SparkSession, table: String,
-      col: String): Unit = declarePartitions(spark, table, Seq(col))
-
-  /** Composite form: the side file stores the comma-joined column
-    * list (column names here are identifier-shaped; the SQL layer
-    * validates them against the declared schema), plus — when any
-    * entry is a temporal transform — the DECLARING session's timezone
-    * on a second line (`tz=<zone>`). The recorded zone is the
-    * contract every temporal-transform value set is written under
-    * ([[requireZoneAgreement]] enforces it at each recording write),
-    * which is what makes the reader-side generated-filter derivation
-    * sound: day strings recorded under zone A compared against UTC
-    * literal math under zone B can silently drop files holding
-    * matching rows (r16 ADVICE). */
   /** Split a comma-joined partition-entry list at paren depth 0 —
     * `bucket(8,k)` carries a comma INSIDE its transform syntax. */
   private def splitPartitionEntries(s: String): Seq[String] = {
@@ -2574,6 +2406,21 @@ object TxTable {
     out.result().map(_.trim).filter(_.nonEmpty)
   }
 
+  /** Record `cols` — columns or transforms — as the table's declared
+    * partitioning (the SQL `PARTITIONED BY` side file, which
+    * [[TxSparkTable]] surfaces as transforms). Like `_schema`, not part
+    * of the versioned manifest: it names a write-layout contract, not
+    * data. The side file stores the comma-joined list (column names
+    * here are identifier-shaped; the SQL layer validates them against
+    * the declared schema), plus — when any entry is a temporal
+    * transform — the DECLARING session's timezone on a second line
+    * (`tz=<zone>`). The recorded zone is the contract every
+    * temporal-transform value set is written under
+    * ([[requireZoneAgreement]] enforces it at each recording write),
+    * which is what makes the reader-side generated-filter derivation
+    * sound: day strings recorded under zone A compared against UTC
+    * literal math under zone B can silently drop files holding
+    * matching rows (r16 ADVICE). */
   def declarePartitions(spark: SparkSession, table: String,
       cols: Seq[String]): Unit = {
     // record the declaring session's zone only when the spec is
@@ -2769,20 +2616,25 @@ object TxTable {
     def name: String
     def col: String
     def expr: org.apache.spark.sql.Column
+    /** The same transform over source column `c`. */
+    def withCol(c: String): PartTransform
   }
   final case class PartIdentity(col: String) extends PartTransform {
     val name: String = col
+    def withCol(c: String): PartTransform = copy(col = c)
     def expr: org.apache.spark.sql.Column =
       org.apache.spark.sql.functions.col(col).cast("string")
   }
   final case class PartDays(col: String) extends PartTransform {
     val name: String = s"days($col)"
+    def withCol(c: String): PartTransform = copy(col = c)
     def expr: org.apache.spark.sql.Column =
       org.apache.spark.sql.functions.to_date(
         org.apache.spark.sql.functions.col(col)).cast("string")
   }
   final case class PartMonths(col: String) extends PartTransform {
     val name: String = s"months($col)"
+    def withCol(c: String): PartTransform = copy(col = c)
     def expr: org.apache.spark.sql.Column =
       org.apache.spark.sql.functions.date_trunc("month",
         org.apache.spark.sql.functions.col(col))
@@ -2790,6 +2642,7 @@ object TxTable {
   }
   final case class PartHours(col: String) extends PartTransform {
     val name: String = s"hours($col)"
+    def withCol(c: String): PartTransform = copy(col = c)
     def expr: org.apache.spark.sql.Column =
       org.apache.spark.sql.functions.date_trunc("hour",
         org.apache.spark.sql.functions.col(col)).cast("string")
@@ -2801,6 +2654,7 @@ object TxTable {
     * day bounds' 4-char prefix. */
   final case class PartYears(col: String) extends PartTransform {
     val name: String = s"years($col)"
+    def withCol(c: String): PartTransform = copy(col = c)
     def expr: org.apache.spark.sql.Column =
       org.apache.spark.sql.functions.date_trunc("year",
         org.apache.spark.sql.functions.col(col))
@@ -2818,6 +2672,7 @@ object TxTable {
   final case class PartTruncate(w: Int, col: String) extends PartTransform {
     require(w >= 1, s"truncate($w, $col): width must be positive")
     val name: String = s"truncate($w,$col)"
+    def withCol(c: String): PartTransform = copy(col = c)
     def expr: org.apache.spark.sql.Column =
       org.apache.spark.sql.functions.substring(
         org.apache.spark.sql.functions.col(col).cast("string"), 1, w)
@@ -2833,6 +2688,7 @@ object TxTable {
   final case class PartBucket(n: Int, col: String) extends PartTransform {
     require(n >= 1, s"bucket($n, $col): n must be positive")
     val name: String = s"bucket($n,$col)"
+    def withCol(c: String): PartTransform = copy(col = c)
     def expr: org.apache.spark.sql.Column = {
       import org.apache.spark.sql.functions.{col => c, hash, lit, pmod}
       pmod(hash(c(col)), lit(n)).cast("string")
@@ -2857,6 +2713,12 @@ object TxTable {
       case Truncate(w, c) => PartTruncate(w.toInt, c)
       case c => PartIdentity(c)
     }
+    /** `entry` over its source column renamed by `rk` (None when
+      * the column is gone) — how a rename moves transform keys. */
+    def rekey(entry: String, rk: String => Option[String]): Option[String] = {
+      val t = parse(entry)
+      rk(t.col).map(t.withCol(_).name)
+    }
   }
 
   /** Overwrite with a PER-FILE BLOOM FILTER over a high-cardinality
@@ -2873,18 +2735,17 @@ object TxTable {
     * more files, each bloom stays row-bounded. */
   def overwriteIndexedBloom(df: DataFrame, table: String, col: String,
       fpp: Double = 0.01): Long = {
-    import org.apache.spark.sql.functions.{col => c, input_file_name}
+    import org.apache.spark.sql.functions.{col => c}
     requireTopLevel(df, Seq(col), "overwriteIndexedBloom")
     val spark = df.sparkSession
-    val cur = snapshot(spark, table)
-    val next = cur.map(_.version + 1).getOrElse(1L)
+    val next = snapshot(spark, table).getOrElse(Snapshot.Empty)
+      .next("overwrite")
     val nParts = math.max(2, spark.sessionState.conf.numShufflePartitions)
-    val files = writeFiles(df.repartition(nParts, c(col)), table, next)
-    val blooms = buildBlooms(spark, table, files, col, fpp)
-    commit(spark, table, next, files,
-      cur.map(_.txns).getOrElse(Map.empty),
-      bloomCol = Some(col), blooms = blooms, op = "overwrite")
-    next
+    val files = writeFiles(df.repartition(nParts, c(col)), table,
+      next.version)
+    commit(spark, table, next.copy(files = files, bloomCol = Some(col),
+      blooms = buildBlooms(spark, table, files, col, fpp)))
+    next.version
   }
 
   /** Per-file bloom filters over `col` for freshly written `files` —
@@ -2994,19 +2855,17 @@ object TxTable {
     import org.apache.spark.sql.functions.{col => c}
     requireTopLevel(df, Seq(colA, colB), "overwriteZordered")
     val spark = df.sparkSession
-    val cur = snapshot(spark, table)
-    val next = cur.map(_.version + 1).getOrElse(1L)
+    val next = snapshot(spark, table).getOrElse(Snapshot.Empty)
+      .next("overwrite")
     val nParts = math.max(2, spark.sessionState.conf.numShufflePartitions)
     val (zdf, helpers, z) = Layout.withMortonCode(df, colA, colB)
     val files = writeFiles(
       zdf.repartitionByRange(nParts, c(z))
         .sortWithinPartitions(c(z))
-        .drop(helpers: _*), table, next)
+        .drop(helpers: _*), table, next.version)
     val (ms, _) = recomputeMetadata(spark, table, files, Seq(colA, colB), Nil)
-    commit(spark, table, next, files,
-      cur.map(_.txns).getOrElse(Map.empty), multiStats = ms,
-      op = "overwrite")
-    next
+    commit(spark, table, next.copy(files = files, multiStats = ms))
+    next.version
   }
 
   /** Conjunctive predicate push-down through the multi-column
@@ -3128,12 +2987,13 @@ object TxTable {
     snap.files.filter(f => viaMulti(f) && viaSingle(f))
   }
 
-  /** Recompute per-file manifest metadata for freshly written files,
-    * over the same columns the previous snapshot tracked — so a
-    * delete/update rewrite keeps the table's data-skipping index
-    * alive (Delta's OPTIMIZE/DML recompute stats the same way).
-    * Value sets above `maxValuesPerFile` distinct values record
-    * nothing for that (file, column). */
+  /** Per-file manifest metadata of freshly written files — the ONE
+    * per-file aggregation: (min, max) of each of `statCols` and the
+    * value set of each of `valueCols`, in one pass grouped by file.
+    * A file whose stat column holds only NULLs records no span for it
+    * (it stays a candidate for every range); value sets above
+    * `maxValuesPerFile` distinct values record nothing for that (file,
+    * column). */
   private def recomputeMetadata(spark: SparkSession, table: String,
       files: Seq[String], statCols: Seq[String], valueCols: Seq[String],
       maxValuesPerFile: Int = 16):
@@ -3160,8 +3020,9 @@ object TxTable {
       .collect()
     val ms = rows.flatMap { r =>
       byName.get(r.getString(0).split('/').last).map { f =>
-        f -> statCols.map(s =>
-          s -> (r.getAs[Double](s"__mn_$s"), r.getAs[Double](s"__mx_$s"))).toMap
+        f -> statCols.filterNot(s => r.isNullAt(r.fieldIndex(s"__mn_$s")))
+          .map(s => s ->
+            (r.getAs[Double](s"__mn_$s"), r.getAs[Double](s"__mx_$s"))).toMap
       }
     }.toMap
     val fv = rows.flatMap { r =>
@@ -3173,6 +3034,31 @@ object TxTable {
       }
     }.toMap
     (ms, fv)
+  }
+
+  /** `next` plus index entries for its freshly written `files` over
+    * every index column `next` tracks — the single stats column, the
+    * multi-column stats and the value sets, plus `addValueCols` — from
+    * ONE [[recomputeMetadata]] pass, so a rewrite keeps the table's
+    * data-skipping index alive (Delta's OPTIMIZE/DML recompute stats
+    * the same way). Blooms are not rebuilt: a fresh file without one
+    * is always a candidate. Entries of files `next` no longer lists
+    * drop in [[commit]]. */
+  private def indexFiles(spark: SparkSession, table: String,
+      next: Snapshot, files: Seq[String],
+      addValueCols: Seq[String] = Nil): Snapshot = {
+    val statCols = next.multiStats.values.flatMap(_.keys).toSeq.distinct
+    val valueCols =
+      (next.fileValues.values.flatMap(_.keys).toSeq ++ addValueCols).distinct
+    val (ms, fv) = recomputeMetadata(spark, table, files,
+      (statCols ++ next.statsCol).distinct.sorted, valueCols.sorted)
+    val multi = statCols.nonEmpty || valueCols.nonEmpty
+    next.copy(
+      stats = next.statsCol.fold(next.stats)(sc => next.stats ++
+        ms.flatMap { case (f, m) => m.get(sc).map(f -> _) }),
+      multiStats = if (!multi) next.multiStats else next.multiStats ++
+        ms.map { case (f, m) => f -> m.filter(e => statCols.contains(e._1)) },
+      fileValues = if (!multi) next.fileValues else next.fileValues ++ fv)
   }
 
   /** Shared copy-on-write DML core: files the manifest metadata can
@@ -3191,7 +3077,7 @@ object TxTable {
       changeRows: DataFrame => DataFrame = null): (Long, Int, Int) = {
     val cur = snapshot(spark, table).getOrElse(
       throw new IllegalArgumentException(s"no committed version at $table"))
-    val next = cur.version + 1
+    val v = cur.version + 1
     // prune with CANONICAL probe values (see canonicalValueEq): a
     // wrong prune here would silently skip rows the DML should touch
     val touched =
@@ -3210,34 +3096,17 @@ object TxTable {
     val changeFiles: Seq[String] =
       if (changeRows == null || touched.isEmpty ||
         !changeFeedEnabled(spark, table)) Nil
-      else writeChangeFiles(changeRows(touchedDf()), table, next)
+      else writeChangeFiles(changeRows(touchedDf()), table, v)
     val rewritten: Seq[String] =
       if (touched.isEmpty) Nil
-      else writeFiles(rewrite(touchedDf()), table, next)
-    val statCols = cur.multiStats.values.flatMap(_.keys).toSeq.distinct.sorted
-    val valueCols = cur.fileValues.values.flatMap(_.keys).toSeq.distinct.sorted
-    val (newMs, newFv) =
-      recomputeMetadata(spark, table, rewritten, statCols, valueCols)
-    val singleStats: Map[String, (Double, Double)] = cur.statsCol match {
-      case Some(sc) =>
-        val (ms, _) = recomputeMetadata(spark, table, rewritten, Seq(sc), Nil)
-        cur.stats.filter { case (f, _) => untouched.contains(f) } ++
-          ms.flatMap { case (f, m) => m.get(sc).map(f -> _) }
-      case None => Map.empty
-    }
-    // blooms carry over on untouched files; rewritten files lose
-    // theirs (absent bloom → never pruned → still correct)
-    val keptBlooms = cur.blooms.filter { case (f, _) => untouched.contains(f) }
-    commit(spark, table, next, untouched ++ rewritten, cur.txns,
-      cur.statsCol.filter(_ => singleStats.nonEmpty), singleStats,
-      cur.multiStats.filter { case (f, _) => untouched.contains(f) } ++ newMs,
-      cur.fileValues.filter { case (f, _) => untouched.contains(f) } ++ newFv,
-      cur.bloomCol.filter(_ => keptBlooms.nonEmpty), keptBlooms,
-      op = op, changes = changeFiles,
-      // rewritten files folded their dels in (touchedDf applied them);
-      // untouched files keep theirs
-      dels = cur.dels.filter(d => untouched.contains(d.path)))
-    (next, touched.size, cur.files.size)
+      else writeFiles(rewrite(touchedDf()), table, v)
+    // untouched files keep every entry (blooms and dels included);
+    // rewritten files folded their dels in (touchedDf applied them)
+    // and lose their blooms (absent bloom → never pruned → correct)
+    commit(spark, table, indexFiles(spark, table,
+      cur.next(op, changeFiles).copy(files = untouched ++ rewritten),
+      rewritten))
+    (v, touched.size, cur.files.size)
   }
 
   // ======== merge-on-read deletion vectors ========
@@ -3350,9 +3219,8 @@ object TxTable {
     * consulting per-file (min,max) stats (ONLY when the key column is
     * integral — recorded stats are `min/max(col).cast("double")`, so a
     * string key's stats are lexicographic-then-cast artifacts: {"9",
-    * "10"} records the inverted interval (10.0, 9.0) and non-numeric
-    * strings record (0.0, 0.0) via null-unboxing, either of which
-    * would falsely prune a file that holds the key; string/date keys
+    * "10"} records the inverted interval (10.0, 9.0), which would
+    * falsely prune a file that holds the key; string/date keys
     * rely on value sets and blooms instead), recorded value sets, and
     * bloom filters. Files without metadata are always candidates —
     * pruning is an optimization, never a filter. Driver cost is
@@ -3441,31 +3309,24 @@ object TxTable {
       .collect().map(_.getString(0))
     if (keysRaw.length > DvMergeMaxKeys) return None
     requireDvColumns(spark, table, cur, Seq(key))
-    val next = cur.version + 1
+    val v = cur.version + 1
     val keys = keysRaw.sorted.toSeq
     val touched =
       if (keys.isEmpty) Nil
       else candidateFilesForKeys(cur, key, keys, keyType)
     // change feed first: it reads the PRE-merge (visible) table
     val changeFiles =
-      mergeChangeFiles(spark, table, Some(cur), updates, key, next)
-    val fresh = writeFilesDispatch(updates, table, next)
+      mergeChangeFiles(spark, table, Some(cur), updates, key, v)
+    val fresh = writeFilesDispatch(updates, table, v)
     // fresh post-image files get index metadata over the same tracked
     // columns (old files' entries stay valid as supersets)
-    val statCols = cur.multiStats.values.flatMap(_.keys).toSeq.distinct.sorted
-    val valueCols = cur.fileValues.values.flatMap(_.keys).toSeq.distinct.sorted
-    val (freshMs, freshFv) =
-      recomputeMetadata(spark, table, fresh, statCols, valueCols)
     val ins = Seq(key -> keys)
-    commit(spark, table, next, cur.files ++ fresh, cur.txns,
-      cur.statsCol, cur.stats,
-      cur.multiStats ++ freshMs, cur.fileValues ++ freshFv,
-      cur.bloomCol, cur.blooms,
-      op = "merge", changes = changeFiles,
-      dels = cur.dels ++ (if (keys.isEmpty) Nil
-        else touched.map(f => DelEntry(f, Nil, Nil, ins))))
+    commit(spark, table, indexFiles(spark, table,
+      cur.next("merge", changeFiles).copy(files = cur.files ++ fresh,
+        dels = cur.dels ++ touched.map(f => DelEntry(f, Nil, Nil, ins))),
+      fresh))
     widenDeclared(spark, table, updates)
-    Some((next, touched.size, cur.files.size))
+    Some((v, touched.size, cur.files.size))
   }
 
   /** [[mergeSync]] as a merge-on-read commit — [[mergeDvCounted]]'s
@@ -3512,7 +3373,7 @@ object TxTable {
     if (batchRaw.length + vanished.length > DvMergeMaxKeys) return None
     requireDvColumns(spark, table, cur,
       (Seq(key) ++ scopeRanges.map(_._1) ++ scopeEq.map(_._1)).distinct)
-    val next = cur.version + 1
+    val v = cur.version + 1
     val batchKeys = batchRaw.sorted.toSeq
     val vanKeys = vanished.sorted.toSeq
     val touchedUpsert =
@@ -3527,12 +3388,8 @@ object TxTable {
         .intersect(candidateFilesForKeys(cur, key, vanKeys, keyType))
     // change feed first: it reads the PRE-merge (visible) table
     val changeFiles = mergeSyncChangeFiles(spark, table, Some(cur),
-      updates, key, scopeRanges, scopeEq, next)
-    val fresh = writeFilesDispatch(updates, table, next)
-    val statCols = cur.multiStats.values.flatMap(_.keys).toSeq.distinct.sorted
-    val valueCols = cur.fileValues.values.flatMap(_.keys).toSeq.distinct.sorted
-    val (freshMs, freshFv) =
-      recomputeMetadata(spark, table, fresh, statCols, valueCols)
+      updates, key, scopeRanges, scopeEq, v)
+    val fresh = writeFilesDispatch(updates, table, v)
     val upsertDels =
       if (batchKeys.isEmpty) Nil
       else touchedUpsert.map(f =>
@@ -3541,14 +3398,11 @@ object TxTable {
       if (vanKeys.isEmpty) Nil
       else touchedSync.map(f =>
         DelEntry(f, scopeRanges, scopeEq, Seq(key -> vanKeys)))
-    commit(spark, table, next, cur.files ++ fresh, cur.txns,
-      cur.statsCol, cur.stats,
-      cur.multiStats ++ freshMs, cur.fileValues ++ freshFv,
-      cur.bloomCol, cur.blooms,
-      op = "merge", changes = changeFiles,
-      dels = cur.dels ++ upsertDels ++ syncDels)
+    commit(spark, table, indexFiles(spark, table,
+      cur.next("merge", changeFiles).copy(files = cur.files ++ fresh,
+        dels = cur.dels ++ upsertDels ++ syncDels), fresh))
     widenDeclared(spark, table, updates)
-    Some(next)
+    Some(v)
   }
 
   /** Per-file DELETION PRESSURE of the head snapshot: `(table-relative
@@ -3614,8 +3468,7 @@ object TxTable {
         hid.toDouble / tot >= minDelRatio => f
     }
     if (scoped.isEmpty) return (cur.version, 0)
-    val next = cur.version + 1
-    val untouched = cur.files.filterNot(scoped.toSet)
+    val next = cur.next("compact")
     val scopedDf = readFilesDv(spark, table, cur, scoped,
       mappingAt(spark, table, Some(cur.version)))
     val statCols = cur.multiStats.values.flatMap(_.keys).toSeq.distinct.sorted
@@ -3624,25 +3477,15 @@ object TxTable {
       statCols.map(c)
     val fresh = declaredBucket(spark, table) match {
       // single-bucket table: folded files keep the SPJ layout
-      case Some(b) => writeFilesBucketed(scopedDf, table, next, b)
+      case Some(b) => writeFilesBucketed(scopedDf, table, next.version, b)
       case None => writeFiles(
         if (cluster.nonEmpty)
           scopedDf.repartitionByRange(targetFiles, cluster: _*)
-        else scopedDf.repartition(targetFiles), table, next)
+        else scopedDf.repartition(targetFiles), table, next.version)
     }
-    val (ms, fv) = recomputeMetadata(spark, table, fresh,
-      statCols, valueCols)
-    val untouchedSet = untouched.toSet
-    val keptBlooms = cur.blooms.filter { case (f, _) => untouchedSet(f) }
-    val keptStats = cur.stats.filter { case (f, _) => untouchedSet(f) }
-    commit(spark, table, next, untouched ++ fresh, cur.txns,
-      cur.statsCol.filter(_ => keptStats.nonEmpty), keptStats,
-      cur.multiStats.filter { case (f, _) => untouchedSet(f) } ++ ms,
-      cur.fileValues.filter { case (f, _) => untouchedSet(f) } ++ fv,
-      cur.bloomCol.filter(_ => keptBlooms.nonEmpty), keptBlooms,
-      op = "compact",
-      dels = cur.dels.filter(d => untouchedSet(d.path)))
-    (next, scoped.size)
+    commit(spark, table, indexFiles(spark, table,
+      next.copy(files = cur.files.filterNot(scoped.toSet) ++ fresh), fresh))
+    (next.version, scoped.size)
   }
 
   /** DELETE as a deletion-vector commit: candidate files (the same
@@ -3660,7 +3503,7 @@ object TxTable {
       throw new IllegalArgumentException(s"no committed version at $table"))
     requireDvColumns(spark, table, cur,
       (ranges.map(_._1) ++ valueEq.map(_._1)).distinct)
-    val next = cur.version + 1
+    val v = cur.version + 1
     val touched =
       candidateFiles(cur, ranges, canonicalValueEq(spark, table, cur, valueEq))
     val pred = predicateColumn(ranges, valueEq)
@@ -3673,13 +3516,10 @@ object TxTable {
         readFilesDv(spark, table, cur, touched,
           mappingAt(spark, table, Some(cur.version)))
           .filter(coalesce(pred, lit(false)))
-          .withColumn(ChangeTypeCol, lit("delete")), table, next)
-    commit(spark, table, next, cur.files, cur.txns,
-      cur.statsCol, cur.stats, cur.multiStats, cur.fileValues,
-      cur.bloomCol, cur.blooms,
-      op = "delete", changes = changeFiles,
-      dels = cur.dels ++ touched.map(f => DelEntry(f, ranges, valueEq)))
-    (next, touched.size, cur.files.size)
+          .withColumn(ChangeTypeCol, lit("delete")), table, v)
+    commit(spark, table, cur.next("delete", changeFiles).copy(
+      dels = cur.dels ++ touched.map(f => DelEntry(f, ranges, valueEq))))
+    (v, touched.size, cur.files.size)
   }
 
   /** UPDATE as a deletion-vector commit: candidate files gain the
@@ -3697,7 +3537,7 @@ object TxTable {
       throw new IllegalArgumentException(s"no committed version at $table"))
     requireDvColumns(spark, table, cur,
       (ranges.map(_._1) ++ valueEq.map(_._1)).distinct)
-    val next = cur.version + 1
+    val v = cur.version + 1
     val touched =
       candidateFiles(cur, ranges, canonicalValueEq(spark, table, cur, valueEq))
     val pred = predicateColumn(ranges, valueEq)
@@ -3710,24 +3550,18 @@ object TxTable {
         matched().withColumn(ChangeTypeCol, lit("update_preimage"))
           .unionByName(applySet(matched())
             .withColumn(ChangeTypeCol, lit("update_postimage"))),
-        table, next)
+        table, v)
     val fresh: Seq[String] =
       if (touched.isEmpty) Nil
-      else writeFilesDispatch(applySet(matched()), table, next)
+      else writeFilesDispatch(applySet(matched()), table, v)
     // fresh post-image files get index metadata over the same tracked
     // columns, so they prune like any other file; old files' entries
     // stay valid as supersets
-    val statCols = cur.multiStats.values.flatMap(_.keys).toSeq.distinct.sorted
-    val valueCols = cur.fileValues.values.flatMap(_.keys).toSeq.distinct.sorted
-    val (freshMs, freshFv) =
-      recomputeMetadata(spark, table, fresh, statCols, valueCols)
-    commit(spark, table, next, cur.files ++ fresh, cur.txns,
-      cur.statsCol, cur.stats,
-      cur.multiStats ++ freshMs, cur.fileValues ++ freshFv,
-      cur.bloomCol, cur.blooms,
-      op = "update", changes = changeFiles,
-      dels = cur.dels ++ touched.map(f => DelEntry(f, ranges, valueEq)))
-    next
+    commit(spark, table, indexFiles(spark, table,
+      cur.next("update", changeFiles).copy(files = cur.files ++ fresh,
+        dels = cur.dels ++ touched.map(f => DelEntry(f, ranges, valueEq))),
+      fresh))
+    v
   }
 
   /** DELETE rows matching the conjunctive predicate (every range AND
@@ -3828,29 +3662,6 @@ object TxTable {
         .withColumn(ChangeTypeCol, lit("delete")))
   }
 
-  /** OPTIMIZE (compaction): rewrite the CURRENT snapshot's content
-    * into `targetFiles` files as a new version — the small-file
-    * remedy for append-heavy tables, Delta's OPTIMIZE reduced to its
-    * invariant. Logical content is untouched (same rows, new layout),
-    * older snapshots still read their own files (time travel intact
-    * until [[vacuum]] reclaims them), txn markers carry forward, and
-    * the publish is the same atomic commit as any write — a reader
-    * mid-compaction sees the old layout or the new one, never a mix.
-    * EVERY index layout survives compaction (Delta's OPTIMIZE
-    * recomputes stats the same way), dispatched on what the snapshot
-    * carries:
-    *   - bloom-indexed → re-hash-cluster on the key, rebuild per-file
-    *     blooms ([[readPoint]] pruning survives);
-    *   - two stat columns, no value sets → re-Z-ORDER on the pair
-    *     (the layout a 2-column multiStats table exists for: either
-    *     column's predicate keeps pruning after compaction);
-    *   - other multi-column metadata → lexicographic (valueCols ++
-    *     statCols) range clustering, stats + value sets recomputed;
-    *   - single [[overwriteIndexed]] column → range-partition on it;
-    *   - no index → plain coalescing repartition.
-    * A concurrent writer committing first wins the version and this
-    * throws [[TxConflictException]]; compaction is safe to just
-    * re-run. */
   /** PARTITION-SCOPED compaction (Delta's `OPTIMIZE ... WHERE` /
     * Iceberg's rewrite_data_files with a filter): rewrite ONLY the
     * files whose recorded value set for `partCol` admits one of
@@ -3870,7 +3681,7 @@ object TxTable {
     require(values.nonEmpty && targetFiles >= 1)
     val cur = snapshot(spark, table).getOrElse(
       throw new IllegalArgumentException(s"nothing to compact at $table"))
-    val next = cur.version + 1
+    val next = cur.next("compact")
     val vset = values.toSet
     val t = PartTransform.parse(partCol)
     requireZoneAgreement(spark, table, Seq(t))
@@ -3885,28 +3696,16 @@ object TxTable {
     // their visible rows and shed their dels (Delta's DV-fold)
     val scopedDf = readFilesDv(spark, table, cur, scoped,
       mappingAt(spark, table, Some(cur.version)))
-    val statCols = cur.multiStats.values.flatMap(_.keys).toSeq.distinct.sorted
-    val valueCols = (cur.fileValues.values.flatMap(_.keys).toSeq
-      ++ Seq(t.name)).distinct.sorted
     val files = declaredBucket(spark, table) match {
       // single-bucket table: the scoped rewrite keeps the SPJ layout
-      case Some(b) => writeFilesBucketed(scopedDf, table, next, b)
+      case Some(b) => writeFilesBucketed(scopedDf, table, next.version, b)
       case None => writeFiles(
-        scopedDf.repartitionByRange(targetFiles, t.expr), table, next)
+        scopedDf.repartitionByRange(targetFiles, t.expr), table,
+        next.version)
     }
-    val (ms, fv) = recomputeMetadata(spark, table, files,
-      statCols, valueCols)
-    val untouchedSet = untouched.toSet
-    val keptBlooms = cur.blooms.filter { case (f, _) => untouchedSet(f) }
-    val keptStats = cur.stats.filter { case (f, _) => untouchedSet(f) }
-    commit(spark, table, next, untouched ++ files, cur.txns,
-      cur.statsCol.filter(_ => keptStats.nonEmpty), keptStats,
-      cur.multiStats.filter { case (f, _) => untouchedSet(f) } ++ ms,
-      cur.fileValues.filter { case (f, _) => untouchedSet(f) } ++ fv,
-      cur.bloomCol.filter(_ => keptBlooms.nonEmpty), keptBlooms,
-      op = "compact",
-      dels = cur.dels.filter(d => untouchedSet(d.path)))
-    next
+    commit(spark, table, indexFiles(spark, table,
+      next.copy(files = untouched ++ files), files, Seq(t.name)))
+    next.version
   }
 
   /** Migrate OLD-GENERATION files into the declared `bucket()`
@@ -3939,28 +3738,14 @@ object TxTable {
       !cur.fileValues.get(f).flatMap(_.get(b.name)).exists(_.size == 1))
     if (nonConforming.isEmpty) return (cur.version, 0, 0)
     val scoped = nonConforming.take(maxFiles)
-    val scopedSet = scoped.toSet
-    val next = cur.version + 1
+    val next = cur.next("compact")
     val scopedDf = readFilesDv(spark, table, cur, scoped,
       mappingAt(spark, table, Some(cur.version)))
-    val fresh = writeFilesBucketed(scopedDf, table, next, b)
-    val statCols = cur.multiStats.values.flatMap(_.keys).toSeq.distinct.sorted
-    val valueCols = (cur.fileValues.values.flatMap(_.keys).toSeq ++
-      Seq(b.name)).distinct.sorted
-    val (ms, fv) = recomputeMetadata(spark, table, fresh,
-      statCols, valueCols)
-    val kept = cur.files.filterNot(scopedSet)
-    val keptSet = kept.toSet
-    val keptBlooms = cur.blooms.filter { case (f, _) => keptSet(f) }
-    val keptStats = cur.stats.filter { case (f, _) => keptSet(f) }
-    commit(spark, table, next, kept ++ fresh, cur.txns,
-      cur.statsCol.filter(_ => keptStats.nonEmpty), keptStats,
-      cur.multiStats.filter { case (f, _) => keptSet(f) } ++ ms,
-      cur.fileValues.filter { case (f, _) => keptSet(f) } ++ fv,
-      cur.bloomCol.filter(_ => keptBlooms.nonEmpty), keptBlooms,
-      op = "compact",
-      dels = cur.dels.filter(d => keptSet(d.path)))
-    (next, scoped.size, nonConforming.size - scoped.size)
+    val fresh = writeFilesBucketed(scopedDf, table, next.version, b)
+    commit(spark, table, indexFiles(spark, table,
+      next.copy(files = cur.files.filterNot(scoped.toSet) ++ fresh), fresh,
+      Seq(b.name)))
+    (next.version, scoped.size, nonConforming.size - scoped.size)
   }
 
   /** Whether `table` declares the single-`bucket()` layout whose
@@ -3976,75 +3761,63 @@ object TxTable {
       case _ => None
     }
 
+  /** OPTIMIZE (compaction): rewrite the CURRENT snapshot's content
+    * into `targetFiles` files as a new version — the small-file
+    * remedy for append-heavy tables, Delta's OPTIMIZE reduced to its
+    * invariant. Logical content is untouched (same rows, new layout),
+    * older snapshots still read their own files (time travel intact
+    * until [[vacuum]] reclaims them), txn markers carry forward, and
+    * the publish is the same atomic commit as any write — a reader
+    * mid-compaction sees the old layout or the new one, never a mix.
+    * EVERY index survives compaction (Delta's OPTIMIZE recomputes
+    * stats the same way): stats and value sets are recomputed over
+    * the new files ([[indexFiles]]) and per-file blooms rebuilt. The
+    * layout is dispatched on what the snapshot carries:
+    *   - declared single `bucket()` → one bucket per file (SPJ);
+    *   - bloom-indexed → re-hash-cluster on the key ([[readPoint]]
+    *     pruning survives);
+    *   - two stat columns, no value sets → re-Z-ORDER on the pair
+    *     (the layout a 2-column multiStats table exists for: either
+    *     column's predicate keeps pruning after compaction);
+    *   - other multi-column metadata → lexicographic (valueCols ++
+    *     statCols) range clustering;
+    *   - single [[overwriteIndexed]] column → range-partition on it;
+    *   - no index → plain coalescing repartition.
+    * A concurrent writer committing first wins the version and this
+    * throws [[TxConflictException]]; compaction is safe to just
+    * re-run. */
   def compact(spark: SparkSession, table: String, targetFiles: Int): Long = {
-    import org.apache.spark.sql.functions.{col => c, input_file_name, max => fmax, min => fmin}
+    import org.apache.spark.sql.functions.{col => c}
     require(targetFiles >= 1)
     val cur = snapshot(spark, table).getOrElse(
       throw new IllegalArgumentException(s"nothing to compact at $table"))
-    val next = cur.version + 1
+    val next = cur.next("compact")
     val statCols = cur.multiStats.values.flatMap(_.keys).toSeq.distinct.sorted
     val valueCols = cur.fileValues.values.flatMap(_.keys).toSeq.distinct.sorted
-    val bucketDecl = declaredBucket(spark, table)
-    if (bucketDecl.isDefined) {
-      // single-bucket table: preserve the SPJ layout (one bucket per
-      // file) and recompute the metadata the layout prunes by
-      val files =
-        writeFilesBucketed(read(spark, table), table, next, bucketDecl.get)
-      val (ms, fv) = recomputeMetadata(spark, table, files,
-        statCols, valueCols)
-      commit(spark, table, next, files, cur.txns,
-        multiStats = ms, fileValues = fv, op = "compact")
-    } else if (cur.bloomCol.isDefined) {
-      val bc = cur.bloomCol.get
-      val files = writeFiles(
-        read(spark, table).repartition(targetFiles, c(bc)), table, next)
-      commit(spark, table, next, files, cur.txns,
-        bloomCol = Some(bc), blooms = buildBlooms(spark, table, files, bc),
-        op = "compact")
-    } else if (valueCols.isEmpty && statCols.size == 2) {
-      val (zdf, helpers, z) =
-        Layout.withMortonCode(read(spark, table), statCols(0), statCols(1))
-      val files = writeFiles(
-        zdf.repartitionByRange(targetFiles, c(z))
-          .sortWithinPartitions(c(z)).drop(helpers: _*), table, next)
-      val (ms, _) = recomputeMetadata(spark, table, files, statCols, Nil)
-      commit(spark, table, next, files, cur.txns, multiStats = ms,
-        op = "compact")
-    } else if (statCols.nonEmpty || valueCols.nonEmpty) {
+    val rows = read(spark, table)
+    val files = (declaredBucket(spark, table), cur.bloomCol) match {
+      case (Some(b), _) => writeFilesBucketed(rows, table, next.version, b)
+      case (None, Some(bc)) => writeFiles(
+        rows.repartition(targetFiles, c(bc)), table, next.version)
+      case _ if valueCols.isEmpty && statCols.size == 2 =>
+        val (zdf, helpers, z) =
+          Layout.withMortonCode(rows, statCols(0), statCols(1))
+        writeFiles(zdf.repartitionByRange(targetFiles, c(z))
+          .sortWithinPartitions(c(z)).drop(helpers: _*), table, next.version)
       // value-col entries may be transform names ("days(ts)",
       // "bucket(8,k)") — cluster on the DERIVED expression
-      val files = writeFiles(
-        read(spark, table)
-          .repartitionByRange(targetFiles,
-            valueCols.map(v => PartTransform.parse(v).expr)
-              ++ statCols.map(c): _*),
-        table, next)
-      val (ms, fv) = recomputeMetadata(spark, table, files, statCols, valueCols)
-      commit(spark, table, next, files, cur.txns,
-        multiStats = ms, fileValues = fv, op = "compact")
-    } else cur.statsCol match {
-      case None =>
-        val files = writeFiles(
-          read(spark, table).repartition(targetFiles), table, next)
-        commit(spark, table, next, files, cur.txns, op = "compact")
-      case Some(idxCol) =>
-        val files = writeFiles(
-          read(spark, table).repartitionByRange(targetFiles, c(idxCol)),
-          table, next)
-        val byName = files.map(f => f.split('/').last -> f).toMap
-        val stats = scanFiles(spark, files.map(new Path(table, _).toString))
-          .groupBy(input_file_name().as("__f"))
-          .agg(fmin(c(idxCol)).as("__mn"), fmax(c(idxCol)).as("__mx"))
-          .collect()
-          .flatMap { r =>
-            val name = r.getString(0).split('/').last
-            byName.get(name).map(f =>
-              f -> (r.get(1).toString.toDouble, r.get(2).toString.toDouble))
-          }.toMap
-        commit(spark, table, next, files, cur.txns, Some(idxCol), stats,
-          op = "compact")
+      case _ if statCols.nonEmpty || valueCols.nonEmpty => writeFiles(
+        rows.repartitionByRange(targetFiles,
+          valueCols.map(v => PartTransform.parse(v).expr)
+            ++ statCols.map(c): _*), table, next.version)
+      case _ => writeFiles(cur.statsCol.fold(rows.repartition(targetFiles))(
+        sc => rows.repartitionByRange(targetFiles, c(sc))), table,
+        next.version)
     }
-    next
+    val indexed = indexFiles(spark, table, next.copy(files = files), files)
+    commit(spark, table, cur.bloomCol.fold(indexed)(bc =>
+      indexed.copy(blooms = buildBlooms(spark, table, files, bc))))
+    next.version
   }
 
   /** Commit history as a DataFrame — the DESCRIBE HISTORY analog:
@@ -4099,51 +3872,18 @@ object TxTable {
       .getOrElse(ColumnMapping.Mapping(Nil))
     val headM = mappingAt(spark, table, Some(cur.version))
       .getOrElse(ColumnMapping.Mapping(Nil))
-    def rk(k: String): Option[String] = PartTransform.parse(k) match {
-      case PartIdentity(cn) => headM.logicalOf(targetM.phys(cn))
-      case PartDays(cn) =>
-        headM.logicalOf(targetM.phys(cn)).map(n => s"days($n)")
-      case PartMonths(cn) =>
-        headM.logicalOf(targetM.phys(cn)).map(n => s"months($n)")
-      case PartHours(cn) =>
-        headM.logicalOf(targetM.phys(cn)).map(n => s"hours($n)")
-      case PartYears(cn) =>
-        headM.logicalOf(targetM.phys(cn)).map(n => s"years($n)")
-      case PartBucket(nb, cn) =>
-        headM.logicalOf(targetM.phys(cn)).map(n => s"bucket($nb,$n)")
-      case PartTruncate(w, cn) =>
-        headM.logicalOf(targetM.phys(cn)).map(n => s"truncate($w,$n)")
-    }
-    val ms2 = target.multiStats.map { case (file, cols) =>
-      file -> cols.flatMap { case (k, v) => rk(k).map(_ -> v) } }
-    val fv2 = target.fileValues.map { case (file, cols) =>
-      file -> cols.flatMap { case (k, v) => rk(k).map(_ -> v) } }
-    val statsCol2 = target.statsCol.flatMap(rk)
-    val bloomCol2 = target.bloomCol.flatMap(rk)
-    // deletion predicates travel with the files they hide rows of;
-    // their columns rekey like every logical-keyed field. A predicate
-    // column DROPPED since the target cannot rekey — restoring would
-    // silently resurrect its hidden rows, so refuse loudly.
-    val dels2 = target.dels.map { d =>
-      // dotted entries (old manifests only) rekey their HEAD, like
-      // the alterMapping rekey — same refusal when the head dropped
-      def re(c: String): String = {
-        val h = c.takeWhile(_ != '.')
-        rk(h).getOrElse(
-          throw new IllegalArgumentException(
-            s"cannot restore v$version at $table: deletion predicate " +
-              s"column '$c' was dropped since — its hidden rows would " +
-              "resurrect; compact v" + version + " first")) + c.drop(h.length)
-      }
-      DelEntry(d.path, d.ranges.map { case (c, lo, hi) => (re(c), lo, hi) },
-        d.eqs.map { case (c, v2) => (re(c), v2) },
-        d.ins.map { case (c, vs) => (re(c), vs) })
-    }
-    commit(spark, table, next, target.files, cur.txns,
-      statsCol2, if (statsCol2.isDefined) target.stats else Map.empty,
-      ms2, fv2,
-      bloomCol2, if (bloomCol2.isDefined) target.blooms else Map.empty,
-      op = "restore", dels = dels2)
+    def rk(cn: String): Option[String] = headM.logicalOf(targetM.phys(cn))
+    // deletion predicates travel with the files they hide rows of and
+    // rekey like every logical-keyed field. A predicate column DROPPED
+    // since the target cannot rekey — restoring would silently
+    // resurrect its hidden rows, so refuse loudly.
+    val restored = target.rekey(rk, h => rk(h).getOrElse(
+      throw new IllegalArgumentException(
+        s"cannot restore v$version at $table: deletion predicate " +
+          s"column '$h' was dropped since — its hidden rows would " +
+          "resurrect; compact v" + version + " first")))
+    commit(spark, table, restored.copy(version = next, txns = cur.txns,
+      op = "restore", changes = Nil))
     next
   }
 

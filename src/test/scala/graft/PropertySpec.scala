@@ -388,8 +388,10 @@ class PropertySpec extends AnyFunSuite {
     for ((entries, i) <- cases(genEntries, 60).zipWithIndex) {
       val t = java.nio.file.Files
         .createTempDirectory(s"graft_prop_dels_$i").toString + "/t"
-      TxTable.commit(spark, t, 1L, Seq("data/f0.parquet"),
-        dels = entries)
+      // every file an entry names is listed: commit keeps per-file
+      // entries only for the files its snapshot lists
+      TxTable.commit(spark, t, TxTable.Snapshot(1L,
+        (0 to 4).map(i => s"data/f$i.parquet"), dels = entries))
       val got = TxTable.snapshot(spark, t).get.dels
       // MULTISET equality: the writer groups shared predicate bodies
       // under one "paths" list (sorted by head path), so entry ORDER
@@ -398,6 +400,86 @@ class PropertySpec extends AnyFunSuite {
       def ms(es0: Seq[TxTable.DelEntry]) =
         es0.groupBy(identity).view.mapValues(_.size).toMap
       assert(ms(got) == ms(entries), s"case $i: $got != $entries")
+    }
+  }
+
+  test("manifest codec round-trip: decode(encode(s)) == s over random snapshots") {
+    import graft.sources.TxTable
+    import graft.sources.TxTable.{DelEntry, Snapshot}
+    val genPath = Gen.oneOf(
+      Gen.choose(0, 9).map(i => s"data/v$i-ab12cd34-$i-0.parquet"),
+      Gen.const("file:/tmp/src/data/v1-x-0.parquet"))
+    val genCol = Gen.oneOf(Gen.identifier.map(_.take(8)),
+      Gen.const("days(ts)"), Gen.const("bucket(8,k)"))
+    val genStr = Gen.oneOf(Gen.alphaNumStr.map(_.take(6)),
+      Gen.const("q\"uo\"te"), Gen.const("back\\slash"),
+      Gen.const("new\nline"), Gen.const("unié中"))
+    // finite stats: bare JSON numbers carry no Infinity/NaN
+    val genNum = Gen.oneOf(Gen.choose(-1e12, 1e12),
+      Gen.oneOf(0.0, -3.25, 1.0e300, Double.MinPositiveValue))
+    val genSpan = Gen.zip(genNum, genNum)
+    // predicate bounds are strings, so they carry ±Infinity
+    val genBound = Gen.oneOf(genNum,
+      Gen.oneOf(Double.NegativeInfinity, Double.PositiveInfinity))
+    def mapOf[V](keys: Gen[String], v: Gen[V], min: Int = 0) =
+      Gen.choose(min, 3).flatMap(Gen.listOfN(_, Gen.zip(keys, v))).map(_.toMap)
+    val genBody = for {
+      nr <- Gen.choose(0, 2)
+      rs <- Gen.listOfN(nr, Gen.zip(genCol, genBound, genBound))
+      ne <- Gen.choose(0, 2)
+      es <- Gen.listOfN(ne, Gen.zip(genCol, genStr))
+      ni <- Gen.choose(if (nr + ne == 0) 1 else 0, 2)
+      is <- Gen.listOfN(ni, Gen.zip(genCol,
+        Gen.choose(1, 3).flatMap(Gen.listOfN(_, genStr))))
+    } yield (rs, es, is)
+    // dels in the writer's canonical order: one group per distinct
+    // predicate body, groups in order of their (distinct) head paths
+    def genDels(files: Seq[String]): Gen[Seq[DelEntry]] =
+      if (files.isEmpty) Gen.const(Nil)
+      else for {
+        bodies <- Gen.choose(0, 3).flatMap(Gen.listOfN(_, genBody))
+        groups <- Gen.sequence[List[Seq[String]], Seq[String]](
+          bodies.distinct.map(_ => Gen.someOf(files).suchThat(_.nonEmpty)
+            .map(_.toSeq)))
+      } yield bodies.distinct.zip(groups)
+        .groupBy(_._2.head).values.map(_.head).toSeq.sortBy(_._2.head)
+        .flatMap { case ((rs, es, is), ps) => ps.map(DelEntry(_, rs, es, is)) }
+    val genSnap = for {
+      version <- Gen.choose(1L, 1000000L)
+      files <- Gen.listOf(genPath).map(_.distinct)
+      txns <- mapOf(genStr, Gen.choose(0L, Long.MaxValue))
+      statsCol <- Gen.option(genCol)
+      stats <- if (statsCol.isEmpty || files.isEmpty) Gen.const(Map.empty[String, (Double, Double)])
+        else mapOf(Gen.oneOf(files), genSpan, min = 1)
+      mfiles <- Gen.someOf(files)
+      ms <- Gen.sequence[List[Map[String, (Double, Double)]],
+        Map[String, (Double, Double)]](mfiles.map(_ => mapOf(genCol, genSpan)))
+      fv <- Gen.sequence[List[Map[String, Set[String]]], Map[String, Set[String]]](
+        mfiles.map(_ => mapOf(genCol, Gen.listOf(genStr).map(_.toSet))))
+      bloomCol <- Gen.option(genCol)
+      blooms <- if (bloomCol.isEmpty || files.isEmpty) Gen.const(Map.empty[String, Array[Byte]])
+        else mapOf(Gen.oneOf(files), Gen.listOf(Gen.choose(Byte.MinValue,
+          Byte.MaxValue)).map(_.toArray), min = 1)
+      op <- Gen.oneOf("write", "append", "merge", "alter_mapping", "q\"op")
+      changes <- Gen.listOf(Gen.choose(0, 9).map(i => s"_changes/c$i-x-0.parquet"))
+      ts <- Gen.choose(0L, Long.MaxValue)
+      dels <- genDels(files)
+    } yield Snapshot(version, files, txns,
+      statsCol.filter(_ => stats.nonEmpty), stats,
+      mfiles.toSeq.zip(ms).toMap, mfiles.toSeq.zip(fv).toMap,
+      bloomCol.filter(_ => blooms.nonEmpty), blooms, op, changes, ts, dels)
+    // blooms are byte arrays: compare their contents, not references
+    def norm(s: Snapshot) =
+      (s.copy(blooms = Map.empty), s.blooms.view.mapValues(_.toSeq).toMap)
+    for ((s, i) <- cases(genSnap, 200).zipWithIndex) {
+      val body = TxTable.encodeManifest(s)
+      val got = TxTable.decodeManifest("t", s.version, body)
+      assert(norm(got) == norm(s), s"case $i: $body")
+      assert(TxTable.encodeManifest(got) == body, s"case $i re-encode")
+      // the walk form decodes the same fields, skipping the index
+      assert(TxTable.decodeManifest("t", s.version, body, full = false) ==
+        Snapshot(s.version, s.files, op = s.op, changes = s.changes,
+          ts = s.ts, dels = s.dels), s"case $i walk form")
     }
   }
 

@@ -164,6 +164,53 @@ class TxHardeningSpec extends AnyFunSuite {
     assert(TxTable.read(spark, t).columns.toSeq === Seq("k", "label"))
   }
 
+  test("manifest bodies of the previous writer decode and re-encode byte for byte") {
+    import TxTable.{DelEntry, Snapshot}
+    // bodies as the 12-parameter writer published them (ts included);
+    // the checkpoint `state` slice and every retained manifest depend
+    // on this layout staying put
+    val (a, b, c) = ("data/a.parquet", "data/b.parquet", "data/c.parquet")
+    val ins = Seq("k" -> Seq("1", "q\"uo\"te", "back\\slash"))
+    val golden = Seq(
+      """{"version":1,"files":["data/v1-a-0.parquet","data/v1-a-1.parquet"],"op":"append","ts":1792294450611,"cdc":["_changes/c1-a-0.parquet"],"txns":{"app:b":3,"ivm":7}}""" ->
+        Snapshot(1L, Seq("data/v1-a-0.parquet", "data/v1-a-1.parquet"),
+          txns = Map("ivm" -> 7L, "app:b" -> 3L), op = "append",
+          changes = Seq("_changes/c1-a-0.parquet"), ts = 1792294450611L),
+      """{"version":4,"files":["data/a.parquet","data/b.parquet","data/c.parquet"],"op":"overwrite","ts":1792294450663,"statscol":"k","stats":[{"path":"data/a.parquet","min":-1.5,"max":2.0},{"path":"data/b.parquet","min":3.0,"max":1.0E10}],"mstats":[{"path":"data/a.parquet","cols":{"k":[1.0,2.0],"x":[-3.25,0.0]},"vals":{"days(ts)":["2024-01-02"],"region":["eu","us"]}},{"path":"data/c.parquet","cols":{"k":[5.0,9.0]},"vals":{}}],"blooms":{"col":"id","files":[{"path":"data/b.parquet","b64":"AQID/w=="},{"path":"data/c.parquet","b64":"AA=="}]}}""" ->
+        Snapshot(4L, Seq(a, b, c), statsCol = Some("k"),
+          stats = Map(a -> (-1.5, 2.0), b -> (3.0, 1.0e10)),
+          multiStats = Map(a -> Map("k" -> (1.0, 2.0), "x" -> (-3.25, 0.0)),
+            c -> Map("k" -> (5.0, 9.0))),
+          fileValues = Map(a -> Map("region" -> Set("eu", "us"),
+            "days(ts)" -> Set("2024-01-02")), c -> Map.empty),
+          bloomCol = Some("id"),
+          blooms = Map(b -> Array[Byte](1, 2, 3, -1), c -> Array[Byte](0)),
+          op = "overwrite", ts = 1792294450663L),
+      """{"version":9,"files":["data/a.parquet","data/b.parquet","data/c.parquet"],"op":"merge","ts":1792294450675,"minReader":2,"dels":[{"paths":["data/a.parquet","data/b.parquet"],"r":[],"e":[],"i":[["k",["1","q\"uo\"te","back\\slash"]]]},{"paths":["data/c.parquet"],"r":[["x","-Infinity","4.5"]],"e":[["r","eu"]]},{"paths":["data/c.parquet"],"r":[],"e":[["r","new""" + "\\u000a" + """line"]]}]}""" ->
+        Snapshot(9L, Seq(a, b, c), op = "merge", ts = 1792294450675L,
+          dels = Seq(DelEntry(a, Nil, Nil, ins), DelEntry(b, Nil, Nil, ins),
+            DelEntry(c, Seq(("x", Double.NegativeInfinity, 4.5)),
+              Seq("r" -> "eu")),
+            DelEntry(c, Nil, Seq("r" -> "new\nline")))))
+    def norm(s: Snapshot) =
+      (s.copy(blooms = Map.empty), s.blooms.view.mapValues(_.toSeq).toMap)
+    golden.foreach { case (body, want) =>
+      val got = TxTable.decodeManifest("t", want.version, body)
+      assert(norm(got) == norm(want), body)
+      assert(TxTable.encodeManifest(got) == body)
+    }
+    // the pre-r18 one-entry "path" deletion form still decodes, and
+    // re-encodes in the shared-body form
+    val legacy = """{"version":3,"files":["data/a.parquet"],"op":"delete","ts":1700000000000,"dels":[{"path":"data/a.parquet","r":[["k","1.0","5.0"]],"e":[]}]}"""
+    val old = TxTable.decodeManifest("t", 3L, legacy)
+    assert(old == Snapshot(3L, Seq(a), op = "delete", ts = 1700000000000L,
+      dels = Seq(DelEntry(a, Seq(("k", 1.0, 5.0)), Nil))))
+    assert(TxTable.encodeManifest(old) == """{"version":3,"files":["data/a.parquet"],"op":"delete","ts":1700000000000,"minReader":2,"dels":[{"paths":["data/a.parquet"],"r":[["k","1.0","5.0"]],"e":[]}]}""")
+    // a pre-label manifest (no op, no ts) reads as op "write", ts 0
+    assert(TxTable.decodeManifest("t", 2L,
+      """{"version":2,"files":["data/a.parquet"]}""") == Snapshot(2L, Seq(a)))
+  }
+
   test("checkpoint state slice is layout-anchored; drift reads absent") {
     val t = freshRoot() + "/c"
     // reach the checkpoint interval so _last_checkpoint embeds state

@@ -106,8 +106,8 @@ class TxTableSpec extends AnyFunSuite {
       val tasks = (1 to n).map { i =>
         val ft = new java.util.concurrent.FutureTask(() => {
           barrier.await()
-          try { TxTable.commit(spark, t, round.toLong,
-            Seq(s"data/w$i.parquet")); true }
+          try { TxTable.commit(spark, t, TxTable.Snapshot(round.toLong,
+            Seq(s"data/w$i.parquet"))); true }
           catch { case _: TxConflictException => false }
         })
         new Thread(ft).start(); ft
@@ -747,6 +747,73 @@ class TxTableSpec extends AnyFunSuite {
     assert(after.toSeq == before.toSeq, "pruned read changed content")
   }
 
+  test("copy-on-write merge, mergeSync and applyCdc keep the table's index") {
+    import org.apache.spark.sql.functions.{col, lit}
+    val t = freshTable()
+    TxTable.overwriteIndexed(spark.range(0, 1000).select(
+      col("id").as("k"), (col("id") * 2).as("x")), t, "x")
+    def upd(ks: Seq[Long]) = ks.toDF("k").select(col("k"), (col("k") * 2).as("x"))
+    def checkIndex(step: String): Unit = {
+      val snap = TxTable.snapshot(spark, t).get
+      assert(snap.statsCol.contains("x"), s"$step dropped the index")
+      assert(snap.stats.keySet === snap.files.toSet,
+        s"$step: every file needs stats")
+      val rr = TxTable.readRange(spark, t, "x", 100.0, 140.0)
+      assert(rr.inputFiles.length < snap.files.size,
+        s"$step: readRange opened ${rr.inputFiles.length} of " +
+          s"${snap.files.size} files")
+      val full = TxTable.read(spark, t).filter(col("x").between(100, 140))
+      assert(rr.as[(Long, Long)].collect().sorted.toSeq ===
+        full.as[(Long, Long)].collect().sorted.toSeq, step)
+    }
+    TxTable.merge(spark, t, upd(Seq(55L, 2000L)), "k")
+    checkIndex("merge")
+    TxTable.mergeSync(spark, t, upd(Seq(60L, 61L)), "k",
+      scopeRanges = Seq(("x", 100.0, 130.0)))
+    checkIndex("mergeSync")
+    assert(TxTable.read(spark, t).filter(col("x").between(100, 130))
+      .as[(Long, Long)].collect().map(_._1).sorted.toSeq === Seq(60L, 61L))
+    TxTable.applyCdc(spark, t, upd(Seq(70L, 3000L))
+      .withColumn("op", lit("u")).union(upd(Seq(61L))
+        .withColumn("op", lit("d"))), "k", "op")
+    checkIndex("applyCdc")
+    // +2000, -14 scoped keys the sync batch dropped, +3000, -61
+    assert(TxTable.read(spark, t).count() === 987L)
+  }
+
+  test("overwriteIndexed over a key with NULL-only files: no NPE, exact ranges") {
+    import org.apache.spark.sql.functions.{col, lit, when}
+    val t = freshTable()
+    // 700 of 1000 keys NULL: the range exchange lands whole files of
+    // NULLs, which record no span and stay candidates
+    val df = spark.range(0, 1000).select(
+      when(col("id") >= 700, col("id")).as("k"), lit("v").as("v"))
+    TxTable.overwriteIndexed(df, t, "k")
+    val snap = TxTable.snapshot(spark, t).get
+    assert(snap.statsCol.contains("k"))
+    assert(snap.stats.size < snap.files.size, "expected NULL-only files")
+    val got = TxTable.readRange(spark, t, "k", 750.0, 760.0)
+      .select("k").as[Long].collect().sorted
+    assert(got.toSeq === (750L to 760L))
+    assert(TxTable.readRange(spark, t, "k", 0.0, 1e6).count() === 300L)
+  }
+
+  test("compact after renaming the single indexed column keeps the index") {
+    import org.apache.spark.sql.functions.col
+    val t = freshTable()
+    TxTable.overwriteIndexed(spark.range(0, 500).select(
+      col("id").as("k"), (col("id") % 50).as("x")), t, "k")
+    TxTable.renameColumn(spark, t, "k", "key")
+    TxTable.compact(spark, t, targetFiles = 2)
+    val snap = TxTable.snapshot(spark, t).get
+    assert(snap.statsCol.contains("key"))
+    assert(snap.stats.keySet === snap.files.toSet)
+    assert(TxTable.read(spark, t).columns.toSeq === Seq("key", "x"))
+    assert(TxTable.read(spark, t).select("key").as[Long].collect().sorted
+      .toSeq === (0L until 500L))
+    assert(TxTable.readRange(spark, t, "key", 10.0, 19.0).count() === 10L)
+  }
+
   test("snapshot on a never-written table is None; read throws") {
     val t = freshTable()
     assert(TxTable.snapshot(spark, t).isEmpty)
@@ -1021,12 +1088,11 @@ class TxTableSpec extends AnyFunSuite {
     // graft single-column stats + blooms onto the same file set (no
     // single API writes all three families; the commit layer is the
     // contract under test)
-    TxTable.commit(spark, t, 2L, s1.files, s1.txns,
+    TxTable.commit(spark, t, s1.next("write").copy(
       statsCol = Some("k"),
       stats = s1.files.map(f => f -> (0.0, 100.0)).toMap,
-      multiStats = s1.multiStats, fileValues = s1.fileValues,
       bloomCol = Some("k"),
-      blooms = s1.files.map(f => f -> Array[Byte](1, 2, 3)).toMap)
+      blooms = s1.files.map(f => f -> Array[Byte](1, 2, 3)).toMap))
     TxTable.overwritePartitions(df(30 -> "b"), t, "v") // v3
     val s3 = TxTable.snapshot(spark, t).get
     val untouched = s1.files.filter(f =>
