@@ -36,11 +36,23 @@ object VendorPipeline extends QueryModule {
 
   /** Overridable for the wide-schema volume probe (VendorProbe sets
     * the property to a replicated copy BEFORE first access — `root`
-    * and the memoized `vendors` are both resolved lazily). */
+    * and the memoized `vendors` are both resolved lazily). Object
+    * init reads no property and touches no file: a host without the
+    * reference still builds the whole registry, and only the vendor
+    * keys fail, by name, when they run. */
   lazy val root: String = sys.props.getOrElse("graft.vendor.root",
     "/root/reference/source_data/datasets")
   /** The merged all-vendor split (724 cols: + vendor_* dummies). */
-  val mergedRoot = "/root/reference/source_data"
+  lazy val mergedRoot = "/root/reference/source_data"
+
+  /** `<vendor>/<split>.parquet` under `root`: group 1 is the vendor
+    * (the split file's parent directory), group 2 the split. The
+    * trailing `(/[^/]*)?` also accepts a split written as a directory
+    * of part files (VendorProbe's copies). Java and RE2 read it alike,
+    * so the engine and the DuckDB oracle share this one rule. */
+  private val splitPath = """/([^/]+)/(train|test)\.parquet(/[^/]*)?$"""
+  private def fromPath(group: Int): Column =
+    regexp_extract(input_file_name(), splitPath, group)
 
   /** Listing-driven dataset discovery — the reference's dynamic-DAG
     * pattern: its Lambda copies whatever exists under the source-data
@@ -111,10 +123,8 @@ object VendorPipeline extends QueryModule {
     val allPaths = vendors.flatMap(v =>
       Seq("train", "test").map(sp => s"$root/$v/$sp.parquet"))
     s.read.schema(narrowSchema).parquet(allPaths: _*)
-      .withColumn("vendor",
-        regexp_extract(input_file_name(), "datasets/([^/]+)/", 1))
-      .withColumn("split",
-        regexp_extract(input_file_name(), "/(train|test)\\.parquet", 1))
+      .withColumn("vendor", fromPath(1))
+      .withColumn("split", fromPath(2))
   }
 
   /** Per-vendor 3-feature fit over the train split: one grouped
@@ -288,10 +298,7 @@ object VendorPipeline extends QueryModule {
         val gsch = org.apache.spark.sql.types.StructType(
           (cols :+ "__index_level_0__").map(sch(_)))
         val outCols =
-          regexp_extract(input_file_name(), "datasets/([^/]+)/", 1)
-            .as("vendor") +:
-          regexp_extract(input_file_name(), "/(train|test)\\.parquet", 1)
-            .as("split") +:
+          fromPath(1).as("vendor") +: fromPath(2).as("split") +:
           col("__index_level_0__").as("rid") +:
           fams.map { case (p, a) =>
             val fs = cols.filter(_.startsWith(p)).map(col(_).cast("long"))
@@ -430,8 +437,7 @@ object VendorPipeline extends QueryModule {
         array(pickupCols.map(col(_).cast("int")): _*), 1)
       val w = Window.partitionBy($"vendor").orderBy($"trips".desc, $"loc".asc)
       s.read.schema(gsch).parquet(allPaths: _*)
-        .withColumn("vendor",
-          regexp_extract(input_file_name(), "datasets/([^/]+)/", 1))
+        .withColumn("vendor", fromPath(1))
         .select($"vendor", $"trip_duration", pos.as("p"))
         .filter($"p" > 0)
         .select($"vendor", element_at(names, $"p".cast("int")).as("loc"),
@@ -446,18 +452,22 @@ object VendorPipeline extends QueryModule {
     })
   )
 
-  /** The six vendor files as a DuckDB UNION ALL (absolute paths — the
-    * oracle reads the same read-only reference parquet as the engine). */
-  private def rawUnion(cols: String): String = vendors.map { v =>
-    s"""SELECT '$v' AS vendor, 'train' AS split, $cols
-       |  FROM read_parquet('$root/$v/train.parquet')
-       |UNION ALL
-       |SELECT '$v', 'test', $cols
-       |  FROM read_parquet('$root/$v/test.parquet')""".stripMargin
-  }.mkString("\nUNION ALL\n")
+  /** All vendor splits as ONE DuckDB scan: a glob per split over
+    * `root` (absolute paths — the oracle reads the same read-only
+    * parquet as the engine), with `vendor` and `split` taken from each
+    * row's file name by the engine's own [[splitPath]] rule. No listing
+    * happens here, so building the oracle strings is free of I/O.
+    * `cols` never sees `filename`: pass `* EXCLUDE (filename)` for
+    * every data column. */
+  private def rawUnion(cols: String): String =
+    s"""SELECT regexp_extract(filename, '$splitPath', 1) AS vendor,
+       |  regexp_extract(filename, '$splitPath', 2) AS split, $cols
+       |FROM read_parquet(['$root/*/train.parquet', '$root/*/test.parquet'],
+       |  filename = true)""".stripMargin
 
   private val narrowCols =
     """trip_duration, passenger_count, "hour", distance"""
+  private val allCols = "* EXCLUDE (filename)"
 
   /** Per-family one-hot row sums via UNPIVOT (DuckDB has no horizontal
     * sum over a column pattern, so each family melts then re-groups on
@@ -471,7 +481,7 @@ object VendorPipeline extends QueryModule {
        |    GROUP BY vendor, split, rid)
        |  GROUP BY vendor)""".stripMargin
 
-  val oracles: Map[String, String] = Map(
+  lazy val oracles: Map[String, String] = Map(
     "pipe_vendor" ->
       s"""WITH raw AS (
          |${rawUnion(narrowCols)}),
@@ -638,7 +648,7 @@ object VendorPipeline extends QueryModule {
 
     "pipe_vendor_onehot" ->
       s"""WITH raw AS (
-         |${rawUnion("*")}),
+         |${rawUnion(allCols)}),
          |${famBad("pickup_", "pb")},
          |${famBad("dropoff_", "db")},
          |${famBad("weekday_", "wb")},
@@ -653,7 +663,7 @@ object VendorPipeline extends QueryModule {
 
     "pipe_vendor_top_pickup" ->
       s"""WITH raw AS (
-         |${rawUnion("*")}),
+         |${rawUnion(allCols)}),
          |u AS (
          |  SELECT vendor, substr(c, 8) AS loc, trip_duration FROM (
          |    SELECT vendor, trip_duration, COLUMNS('pickup_.*') FROM raw)

@@ -10,6 +10,7 @@ class ArtifactSpec extends AnyFunSuite {
   private val dir = sys.props("java.io.tmpdir") + "/graft_vendor_artifacts"
 
   test("artifact reload-and-score matches the in-memory fit exactly") {
+    TestSpark.assumeVendorFiles("pipe_vendor_artifact")
     val rescored = SparkEntry.queries("pipe_vendor_artifact")(spark, TestSpark.sf)
       .collect().map(r => r.getString(0) -> r).toMap
     assert(rescored.size == 3)
@@ -29,6 +30,7 @@ class ArtifactSpec extends AnyFunSuite {
   }
 
   test("scoring one vendor of one run prunes partitions at the scan") {
+    TestSpark.assumeVendorFiles("pipe_vendor_artifact")
     // artifact exists after the query above (same suite ordering) —
     // but don't depend on it: construct (and thus write) explicitly
     SparkEntry.queries("pipe_vendor_artifact")(spark, TestSpark.sf)
@@ -44,6 +46,7 @@ class ArtifactSpec extends AnyFunSuite {
   }
 
   test("re-running a run_id is idempotent") {
+    TestSpark.assumeVendorFiles("pipe_vendor_artifact")
     val a = SparkEntry.queries("pipe_vendor_artifact")(spark, TestSpark.sf)
       .collect().map(_.toString).sorted
     val b = SparkEntry.queries("pipe_vendor_artifact")(spark, TestSpark.sf)

@@ -104,6 +104,7 @@ class PlanSpec extends AnyFunSuite {
     // round-9 surgery: the per-vendor unionByName of six 722-column
     // relations (18 schema inferences per construction) must not come
     // back — one explicit-schema scan node reads all six files
+    TestSpark.assumeVendorFiles("pipe_vendor_top_pickup")
     val p = plan("pipe_vendor_top_pickup")
     assert("FileScan parquet".r.findAllIn(p).size == 1,
       s"top_pickup regressed to multiple scans:\n${p.take(4000)}")
@@ -111,6 +112,7 @@ class PlanSpec extends AnyFunSuite {
   }
 
   test("vendor narrow pipeline scans carry the pinned 4-field schema") {
+    TestSpark.assumeVendorFiles("pipe_vendor")
     val p = plan("pipe_vendor")
     assert(p.contains("struct<trip_duration:double,passenger_count:bigint," +
       "hour:double,distance:double>"),

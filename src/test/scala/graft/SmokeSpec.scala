@@ -30,6 +30,7 @@ class SmokeSpec extends AnyFunSuite {
 
   SparkEntry.queries.toSeq.sortBy(_._1).foreach { case (name, fn) =>
     test(s"$name executes") {
+      TestSpark.assumeVendorFiles(name)
       val df = fn(spark, TestSpark.sf)
       assert(df.count() >= 0)
     }
@@ -39,6 +40,7 @@ class SmokeSpec extends AnyFunSuite {
     .filterNot(q => Set("q_anti_join", "dedup_simhash").contains(q._1))
     .foreach { case (name, fn) =>
       test(s"$name is non-empty at sf0.001") {
+        TestSpark.assumeVendorFiles(name)
         assert(fn(spark, TestSpark.sf).limit(1).count() > 0,
           s"$name returned 0 rows — vacuous correctness check")
       }

@@ -1,6 +1,10 @@
 package graft
 
+import java.nio.file.{Files, Paths}
+
+import graft.pipeline.VendorPipeline
 import org.apache.spark.sql.SparkSession
+import org.scalatest.Assertions.assume
 
 /** One shared local session for the whole test run. */
 object TestSpark {
@@ -16,4 +20,19 @@ object TestSpark {
     .getOrCreate()
 
   val sf: String = "/root/testdata/sf0.001"
+
+  /** Cancels the calling test when `key` is a vendor-pipeline key and
+    * the reference vendor parquet it reads is absent: that parquet is
+    * not part of the repository. The `pipe_vendor*` keys read the
+    * per-vendor splits under `VendorPipeline.root`; `ml_fixed_effects`
+    * reads the merged split under `VendorPipeline.mergedRoot`. Any
+    * other key runs unconditionally. */
+  def assumeVendorFiles(key: String): Unit =
+    if (VendorPipeline.queries.contains(key)) {
+      val p =
+        if (key == "ml_fixed_effects")
+          Paths.get(VendorPipeline.mergedRoot, "train.parquet")
+        else Paths.get(VendorPipeline.root)
+      assume(Files.exists(p), s"$key reads $p, which is not on this host")
+    }
 }

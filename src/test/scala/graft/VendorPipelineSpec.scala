@@ -10,6 +10,7 @@ class VendorPipelineSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
 
   test("per-vendor pipeline fits a usable model per vendor") {
+    TestSpark.assumeVendorFiles("pipe_vendor")
     val rows = SparkEntry.queries("pipe_vendor")(spark, TestSpark.sf)
       .collect()
     assert(rows.length == 3)
@@ -27,6 +28,7 @@ class VendorPipelineSpec extends AnyFunSuite {
   }
 
   test("narrow pipeline prunes 722 columns to the 4 used at the scan") {
+    TestSpark.assumeVendorFiles("pipe_vendor")
     val df = SparkEntry.queries("pipe_vendor")(spark, TestSpark.sf)
     // formatted explain sees scans inside AQE query stages, which
     // plan.collect does not traverse
@@ -43,6 +45,7 @@ class VendorPipelineSpec extends AnyFunSuite {
   }
 
   test("wide conformance audit reads the full one-hot schema and completes") {
+    TestSpark.assumeVendorFiles("pipe_vendor_onehot")
     val df = SparkEntry.queries("pipe_vendor_onehot")(spark, TestSpark.sf)
     val explain = df.queryExecution.explainString(
       org.apache.spark.sql.execution.ExplainMode.fromString("formatted"))
@@ -51,6 +54,7 @@ class VendorPipelineSpec extends AnyFunSuite {
   }
 
   test("column-group audit plans vectorized scans under the default session") {
+    TestSpark.assumeVendorFiles("pipe_vendor_onehot")
     // Wide-schema tradeoff, round-6 resolution: Spark gates BOTH
     // whole-stage fusion and the vectorized parquet reader on
     // `spark.sql.codegen.maxFields` (default 100) — a single
@@ -71,6 +75,7 @@ class VendorPipelineSpec extends AnyFunSuite {
   }
 
   test("one-hot conformance catches the real violations in the data") {
+    TestSpark.assumeVendorFiles("pipe_vendor_onehot")
     val byVendor = SparkEntry.queries("pipe_vendor_onehot")(spark, TestSpark.sf)
       .collect().map(r => r.getString(0) ->
         (r.getAs[Long]("pickup_bad"), r.getAs[Long]("dropoff_bad"),
@@ -85,6 +90,8 @@ class VendorPipelineSpec extends AnyFunSuite {
   }
 
   test("fixed-effects fit shares slopes, absorbs per-vendor intercepts") {
+    TestSpark.assumeVendorFiles("ml_fixed_effects")
+    TestSpark.assumeVendorFiles("pipe_vendor")
     val fe = SparkEntry.queries("ml_fixed_effects")(spark, TestSpark.sf)
       .collect().map(r => r.getString(0) -> r).toMap
     assert(fe.size == 3)
@@ -106,6 +113,7 @@ class VendorPipelineSpec extends AnyFunSuite {
   }
 
   test("dataset discovery finds exactly the deployed vendor directories") {
+    TestSpark.assumeVendorFiles("pipe_vendor")
     // the reference's dynamic-DAG pattern: the vendor list comes from
     // listing the datasets prefix, not from code — a new data drop
     // appears without recompilation. Against the shipped reference
@@ -119,6 +127,7 @@ class VendorPipelineSpec extends AnyFunSuite {
   }
 
   test("top pickup locations per vendor are exact and deterministic") {
+    TestSpark.assumeVendorFiles("pipe_vendor_top_pickup")
     val rows = SparkEntry.queries("pipe_vendor_top_pickup")(spark, TestSpark.sf)
       .collect()
     assert(rows.length == 15) // 5 per vendor
