@@ -57,11 +57,9 @@ object Bench {
       // GC'd — a 180-query sweep otherwise accumulates dead blocks
       // against later queries. Dropping them between queries (outside
       // the timer; each query builds its own) keeps the block manager
-      // at single-query pressure. SPARK_GRAFT_BENCH_UNPERSIST=0 to
-      // disable.
-      if (sys.env.getOrElse("SPARK_GRAFT_BENCH_UNPERSIST", "1") == "1")
-        spark.sparkContext.getPersistentRDDs.values
-          .foreach(_.unpersist(blocking = false))
+      // at single-query pressure.
+      spark.sparkContext.getPersistentRDDs.values
+        .foreach(_.unpersist(blocking = false))
       sec
     }
 

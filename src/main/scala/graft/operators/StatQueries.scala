@@ -123,7 +123,10 @@ object StatQueries extends QueryModule {
         "g", "v", "c", Seq("med" -> 0.5))
       val medC = ExactPercentile.litCol(
         med.map { case (g, m) => g -> m("med") }, $"g")
-      val z = rows.select($"g", abs($"x" - medC).as("z"))
+      // NULL segments are no group: the oracle's inner join to `med`
+      // drops them, so they count in neither n_rows nor k_groups
+      val z = rows.filter($"g".isNotNull)
+        .select($"g", abs($"x" - medC).as("z"))
       val per = z.groupBy($"g")
         .agg(count(lit(1)).cast("double").as("n"), avg($"z").as("zb"),
           // Σ (z − z̄_j)² via the moment identity, one pass

@@ -289,7 +289,10 @@ object VendorPipeline extends QueryModule {
       // scan (Batched: true) cheap.
       // the shared 722-column footer read rides the Tables schema
       // cache (r19 verdict #1): inferred once per JVM, not per call
-      val sch = graft.Tables.schemaFor(s, s"$root/alitran/train.parquet")
+      // every vendor's train split carries the same 722 columns: read
+      // the first discovered vendor's footer, whatever the vendor names
+      val sch =
+        graft.Tables.schemaFor(s, s"$root/${vendors.head}/train.parquet")
       val dummyCols = sch.fieldNames
         .filter(c => fams.exists { case (p, _) => c.startsWith(p) })
       val allPaths = vendors.flatMap(v =>
@@ -426,7 +429,10 @@ object VendorPipeline extends QueryModule {
     // (≤384 rows/vendor).
     "pipe_vendor_top_pickup" -> ((s, _) => {
       import s.implicits._
-      val sch = graft.Tables.schemaFor(s, s"$root/alitran/train.parquet")
+      // every vendor's train split carries the same 722 columns: read
+      // the first discovered vendor's footer, whatever the vendor names
+      val sch =
+        graft.Tables.schemaFor(s, s"$root/${vendors.head}/train.parquet")
       val pickupCols = sch.fieldNames.filter(_.startsWith("pickup_")).toSeq
       val allPaths = vendors.flatMap(v =>
         Seq("train", "test").map(sp => s"$root/$v/$sp.parquet"))

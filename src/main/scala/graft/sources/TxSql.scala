@@ -59,8 +59,11 @@ import scala.jdk.CollectionConverters._
   * filters' Column translation, manifest-prune hints come from the
   * top-level conjuncts, and the rewrite is [[TxTable.deleteWhereExpr]]'s
   * pruned copy-on-write commit; inexpressible predicates refuse in
-  * `canDeleteWhere` (named error, never a wrong delete).
-  * UPDATE/MERGE stay on the API verbs (updateWhere/merge/applyCdc).
+  * `canDeleteWhere` (named error, never a wrong delete). SQL `UPDATE`
+  * and `MERGE INTO` land through `SupportsRowLevelOperations`
+  * ([[TxRowLevelOperation]]) as copy-on-write; the key-based API verbs
+  * ([[TxTable.merge]], [[TxTable.mergeSync]], [[TxTable.applyCdc]])
+  * share one core that also commits merge-on-read.
   */
 object TxSql {
   /** Register a TxTable catalog at runtime:

@@ -155,7 +155,7 @@ object TxTable {
     * `ins` is the KEY-SET form (Iceberg's equality-delete file reduced
     * to the manifest): rows whose column's canonical string form is IN
     * the recorded value set are deleted — what lets [[merge]] commit
-    * merge-on-read ([[mergeDvCounted]]) instead of rewriting candidate
+    * merge-on-read ([[mergeByKey]]) instead of rewriting candidate
     * files. Bounded by [[DvMergeMaxKeys]] at the writer, so the
     * manifest and every reader's InSet stay driver/plan-safe. */
   case class DelEntry(path: String,
@@ -1505,67 +1505,8 @@ object TxTable {
     * stats and value sets are recomputed over the fresh files
     * ([[indexFiles]]); blooms drop, as in every copy-on-write. */
   def merge(spark: SparkSession, table: String, updates: DataFrame,
-      key: String): Long = {
-    val cur = snapshot(spark, table)
-    // merge-on-read: a DV-enabled table commits the batch's keys as
-    // an IN-set deletion entry + fresh post-image files — zero
-    // pre-existing files rewrite (None → fall through to CoW when the
-    // key type is not canonically lossless or the batch exceeds
-    // DvMergeMaxKeys; see mergeDvCounted's scaladoc)
-    val dv = cur.filter(_ => deletionVectorsEnabled(spark, table))
-      .flatMap(c => mergeDvCounted(spark, table, updates, key, c))
-    if (dv.isDefined) return dv.get._1
-    val next = cur.getOrElse(Snapshot.Empty).next("merge")
-    val merged = cur match {
-      case None => updates
-      case Some(_) =>
-        // allowMissingColumns: an updates frame carrying a NEW column
-        // widens the table in the same commit (autoMerge's MERGE
-        // shape) — carried rows read null for it; the declaration
-        // widens below so SQL serves it immediately
-        read(spark, table)
-          .join(updates.select(key).distinct(), Seq(key), "left_anti")
-          .unionByName(updates, allowMissingColumns = true)
-    }
-    val changeFiles =
-      mergeChangeFiles(spark, table, cur, updates, key, next.version)
-    val files = writeFiles(merged, table, next.version)
-    commit(spark, table, indexFiles(spark, table,
-      next.copy(files = files, changes = changeFiles), files))
-    widenDeclared(spark, table, updates)
-    next.version
-  }
-
-  /** The merge's change-feed delta (opt-in): keys present in both
-    * sides pair as update_preimage (current rows) / update_postimage
-    * (update rows); keys only in `updates` are inserts. Computed as
-    * three semi/anti joins against the update KEY SET — broadcastable
-    * exactly when the merge itself is, never wider than the delta.
-    * SHARED by copy-on-write [[merge]] and merge-on-read
-    * [[mergeDvCounted]], so CDF consumers cannot tell the strategies
-    * apart (`read` is dv-aware, so pre-images are the VISIBLE rows). */
-  private def mergeChangeFiles(spark: SparkSession, table: String,
-      cur: Option[Snapshot], updates: DataFrame, key: String,
-      next: Long): Seq[String] = {
-    import org.apache.spark.sql.functions.lit
-    if (!changeFeedEnabled(spark, table)) return Nil
-    val keys = updates.select(key).distinct()
-    val delta = cur match {
-      case None => updates.withColumn(ChangeTypeCol, lit("insert"))
-      case Some(_) =>
-        val current = read(spark, table)
-        val curKeys = current.select(key).distinct()
-        current.join(keys, Seq(key), "left_semi")
-          .withColumn(ChangeTypeCol, lit("update_preimage"))
-          .unionByName(updates.join(curKeys, Seq(key), "left_semi")
-            .withColumn(ChangeTypeCol, lit("update_postimage")),
-            allowMissingColumns = true)
-          .unionByName(updates.join(curKeys, Seq(key), "left_anti")
-            .withColumn(ChangeTypeCol, lit("insert")),
-            allowMissingColumns = true)
-    }
-    writeChangeFiles(delta, table, next)
-  }
+      key: String): Long =
+    mergeByKey(spark, table, updates, key, "merge", None, None)
 
   /** MERGE full-sync by key — SQL's `WHEN MATCHED UPDATE / WHEN NOT
     * MATCHED INSERT / WHEN NOT MATCHED BY SOURCE DELETE` as one
@@ -1579,73 +1520,173 @@ object TxTable {
     * carries over byte-untouched under the manifest prune. Rows the
     * scope predicate evaluates NULL on are KEPT (SQL WHERE
     * semantics, same as [[deleteWhere]]). DV-enabled tables commit
-    * merge-on-read ([[mergeSyncDv]]): upsert pre-images hide under
+    * merge-on-read ([[mergeByKey]]): upsert pre-images hide under
     * the batch-key IN-set, vanished rows hide under a SCOPED IN-set
     * (scope AND key IN vanished — conjunctive in ONE [[DelEntry]]),
     * and ZERO pre-existing data files rewrite. */
   def mergeSync(spark: SparkSession, table: String, updates: DataFrame,
       key: String, scopeRanges: Seq[(String, Double, Double)] = Nil,
-      scopeEq: Seq[(String, String)] = Nil): Long = {
-    import org.apache.spark.sql.functions.{coalesce, lit, not}
-    val cur = snapshot(spark, table)
-    val dv = cur.filter(_ => deletionVectorsEnabled(spark, table))
-      .flatMap(c => mergeSyncDv(spark, table, updates, key,
-        scopeRanges, scopeEq, c))
-    if (dv.isDefined) return dv.get
-    val next = cur.getOrElse(Snapshot.Empty).next("merge")
-    val scopePred = predicateColumn(scopeRanges, scopeEq)
-    val merged = cur match {
-      case None => updates
-      case Some(_) =>
-        val current = read(spark, table)
-        val updKeys = updates.select(key).distinct()
-        // not-matched-by-source: anti-join keeps unmatched rows
-        // (NULL target keys never match, exactly MERGE's ON), then
-        // the scope filter drops the vanished ones
-        current.join(updKeys, Seq(key), "left_anti")
-          .filter(not(coalesce(scopePred, lit(false))))
-          .unionByName(updates, allowMissingColumns = true)
-    }
-    val changeFiles = mergeSyncChangeFiles(spark, table, cur, updates,
-      key, scopeRanges, scopeEq, next.version)
-    val files = writeFiles(merged, table, next.version)
-    commit(spark, table, indexFiles(spark, table,
-      next.copy(files = files, changes = changeFiles), files))
-    widenDeclared(spark, table, updates)
-    next.version
-  }
+      scopeEq: Seq[(String, String)] = Nil): Long =
+    mergeByKey(spark, table, updates, key, "merge", None,
+      Some((scopeRanges, scopeEq)))
 
-  /** [[mergeSync]]'s change-feed delta: [[mergeChangeFiles]]'s three
-    * arms plus the by-source DELETE arm (scoped visible rows whose
-    * key vanished). Shared by copy-on-write and merge-on-read, so
-    * CDF consumers cannot tell the strategies apart. */
-  private def mergeSyncChangeFiles(spark: SparkSession, table: String,
-      cur: Option[Snapshot], updates: DataFrame, key: String,
-      scopeRanges: Seq[(String, Double, Double)],
-      scopeEq: Seq[(String, String)], next: Long): Seq[String] = {
-    import org.apache.spark.sql.functions.{coalesce, lit}
-    if (!changeFeedEnabled(spark, table)) return Nil
-    val keys = updates.select(key).distinct()
-    val delta = cur match {
-      case None => updates.withColumn(ChangeTypeCol, lit("insert"))
-      case Some(_) =>
-        val current = read(spark, table)
-        val curKeys = current.select(key).distinct()
-        val scopePred = predicateColumn(scopeRanges, scopeEq)
-        current.join(keys, Seq(key), "left_semi")
-          .withColumn(ChangeTypeCol, lit("update_preimage"))
-          .unionByName(updates.join(curKeys, Seq(key), "left_semi")
-            .withColumn(ChangeTypeCol, lit("update_postimage")),
-            allowMissingColumns = true)
-          .unionByName(updates.join(curKeys, Seq(key), "left_anti")
-            .withColumn(ChangeTypeCol, lit("insert")),
-            allowMissingColumns = true)
-          .unionByName(current.filter(coalesce(scopePred, lit(false)))
-            .join(keys, Seq(key), "left_anti")
-            .withColumn(ChangeTypeCol, lit("delete")),
-            allowMissingColumns = true)
+  /** The one key-based MERGE core of [[merge]], [[mergeSync]] and
+    * [[applyCdc]]: every `batch` key leaves the current image and the
+    * batch's upsert rows re-enter. Without `opCol` every row upserts;
+    * with it a "d" row deletes its key and every other row upserts (a
+    * NULL op hides its key and re-enters nothing). A defined `scope`
+    * (conjunctive ranges/equalities, empty = whole table) adds the
+    * by-source DELETE of current rows inside it whose key is absent
+    * from the batch: NULL target keys never match, exactly MERGE's
+    * ON, and rows the scope evaluates NULL on are KEPT. An upsert
+    * column the table lacks widens it in the same commit (autoMerge's
+    * MERGE shape: carried rows read null for it), and the declaration
+    * widens with it so SQL serves it immediately.
+    *
+    * Copy-on-write rewrites the table as anti-join + union. A
+    * DV-enabled table commits merge-on-read instead — Delta's DV-MERGE
+    * / Iceberg's equality-delete shape, reduced to the manifest: the
+    * batch's distinct keys record as ONE shared IN-set [[DelEntry]]
+    * body on the candidate files (hiding every pre-image in place),
+    * the vanished keys as a SCOPED IN-set (scope AND key IN vanished —
+    * the entry language is conjunctive, so the hide is exact even
+    * when a key also has rows OUTSIDE the scope), and the upserts land
+    * as fresh post-image files. ZERO pre-existing data files rewrite —
+    * the daily-upsert write path at 100 TB costs one manifest commit
+    * plus the batch's own bytes. It falls back to copy-on-write when
+    * the table is empty (nothing to hide), the key type is not
+    * canonically lossless ([[dvMergeKeyLossless]]), the key sets
+    * exceed [[DvMergeMaxKeys]], or a scoped visible row carries a
+    * NULL key (an IN-set cannot hide NULL; CoW can). Content-equal to
+    * copy-on-write by construction: the IN-set hides exactly the rows
+    * the anti-join drops (same canonical cast both sides), fresh files
+    * carry no dels so post-images matching their own key stay
+    * visible, and both strategies record the SAME change-feed delta.
+    * Returns the committed version. */
+  private def mergeByKey(spark: SparkSession, table: String,
+      batch: DataFrame, key: String, op: String, opCol: Option[String],
+      scope: Option[(Seq[(String, Double, Double)], Seq[(String, String)])]
+      ): Long = {
+    import org.apache.spark.sql.functions.{broadcast, coalesce, col, lit, not}
+    val cur = snapshot(spark, table)
+    val upserts = opCol.fold(batch)(o => batch.filter(col(o) =!= "d").drop(o))
+    val inScope = scope.map { case (ranges, eqs) =>
+      coalesce(predicateColumn(ranges, eqs), lit(false))
     }
-    writeChangeFiles(delta, table, next)
+
+    // the change-feed delta (opt-in), ONE recording for both
+    // strategies (`read` is dv-aware, so images are the VISIBLE rows):
+    // keys present on both sides pair as update_preimage (current
+    // rows) / update_postimage (upsert rows); upsert keys only in the
+    // batch are inserts; a "d" op on an existing key emits its current
+    // rows as deletes (a "d" on an absent key changes nothing, so it
+    // records nothing); scoped rows whose key vanished are deletes.
+    // Only the arms that apply are built — semi/anti joins against
+    // key sets, broadcastable exactly when the merge itself is, never
+    // wider than the delta.
+    def changeFiles(v: Long): Seq[String] =
+      if (!changeFeedEnabled(spark, table)) Nil
+      else writeChangeFiles(cur match {
+        case None => upserts.withColumn(ChangeTypeCol, lit("insert"))
+        case Some(_) =>
+          val current = read(spark, table)
+          val curKeys = current.select(col(key)).distinct()
+          def arm(rows: DataFrame, kind: String) =
+            rows.withColumn(ChangeTypeCol, lit(kind))
+          val deleted = opCol.map(o => arm(current.join(
+            batch.filter(col(o) === "d").select(col(key)).distinct(),
+            Seq(key), "left_semi"), "delete"))
+          val vanished = inScope.map(p => arm(current.filter(p)
+            .join(batch.select(col(key)).distinct(), Seq(key), "left_anti"),
+            "delete"))
+          (deleted.toSeq ++ Seq(
+            arm(current.join(upserts.select(col(key)).distinct(), Seq(key),
+              "left_semi"), "update_preimage"),
+            arm(upserts.join(curKeys, Seq(key), "left_semi"),
+              "update_postimage"),
+            arm(upserts.join(curKeys, Seq(key), "left_anti"), "insert")) ++
+            vanished).reduce(_.unionByName(_, allowMissingColumns = true))
+      }, table, v)
+
+    // merge-on-read; None falls back to copy-on-write
+    def mergeOnRead(c: Snapshot): Option[Long] = {
+      val keyType = batch.schema.fields.find(_.name == key).map(_.dataType)
+      if (!keyType.exists(dvMergeKeyLossless)) return None
+      // bounded driver state: the batch's distinct keys in canonical
+      // form — limit(cap+1) bounds the collect BEFORE it runs
+      val hideRaw = batch.filter(col(key).isNotNull)
+        .select(col(key).cast("string")).distinct()
+        .limit(DvMergeMaxKeys + 1)
+        .collect().map(_.getString(0))
+      if (hideRaw.length > DvMergeMaxKeys) return None
+      // vanished keys: one bounded pass over the VISIBLE scoped rows,
+      // anti-joined against the broadcast batch key set. NULL target
+      // keys never match MERGE's ON, so they count as vanished — but
+      // an IN-set cannot express NULL: surface them and fall back.
+      val vanishedRows = inScope.fold(Array.empty[org.apache.spark.sql.Row]) {
+        p =>
+          import spark.implicits.newStringEncoder
+          val batchDf = spark.createDataset(hideRaw.toSeq).toDF("__sync_k")
+          read(spark, table).filter(p)
+            .select(col(key).cast("string").as("__sync_k")).distinct()
+            .join(broadcast(batchDf), Seq("__sync_k"), "left_anti")
+            .limit(DvMergeMaxKeys + 1)
+            .collect()
+      }
+      if (vanishedRows.exists(_.isNullAt(0))) return None
+      val vanished = vanishedRows.map(_.getString(0))
+      if (hideRaw.length + vanished.length > DvMergeMaxKeys) return None
+      val (ranges, eqs) = scope.getOrElse((Nil, Nil))
+      requireDvColumns(spark, table, c,
+        (Seq(key) ++ ranges.map(_._1) ++ eqs.map(_._1)).distinct)
+      val v = c.version + 1
+      val hideKeys = hideRaw.sorted.toSeq
+      val vanKeys = vanished.sorted.toSeq
+      val hideDels =
+        if (hideKeys.isEmpty) Nil
+        else candidateFilesForKeys(c, key, hideKeys, keyType)
+          .map(f => DelEntry(f, Nil, Nil, Seq(key -> hideKeys)))
+      // the by-source entry's candidates: files the scope prune admits
+      // AND the vanished-key prune admits (the entry is the conjunction)
+      val syncDels =
+        if (vanKeys.isEmpty) Nil
+        else candidateFiles(c, ranges, canonicalValueEq(spark, table, c, eqs))
+          .intersect(candidateFilesForKeys(c, key, vanKeys, keyType))
+          .map(f => DelEntry(f, ranges, eqs, Seq(key -> vanKeys)))
+      // change feed first: it reads the PRE-merge (visible) table
+      val changes = changeFiles(v)
+      val fresh = writeFilesDispatch(upserts, table, v)
+      // fresh post-image files get index metadata over the same tracked
+      // columns (old files' entries stay valid as supersets)
+      commit(spark, table, indexFiles(spark, table,
+        c.next(op, changes).copy(files = c.files ++ fresh,
+          dels = c.dels ++ hideDels ++ syncDels), fresh))
+      Some(v)
+    }
+
+    val version = cur
+      .filter(c => c.files.nonEmpty && deletionVectorsEnabled(spark, table))
+      .flatMap(mergeOnRead)
+      .getOrElse {
+        val next = cur.getOrElse(Snapshot.Empty).next(op)
+        val merged = cur match {
+          case None => upserts
+          case Some(_) =>
+            // every batch key (upserted, deleted or NULL-op) leaves the
+            // current image; a scope also drops the vanished rows
+            val carried = read(spark, table)
+              .join(batch.select(col(key)).distinct(), Seq(key), "left_anti")
+            inScope.fold(carried)(p => carried.filter(not(p)))
+              .unionByName(upserts, allowMissingColumns = true)
+        }
+        val changes = changeFiles(next.version)
+        val files = writeFiles(merged, table, next.version)
+        commit(spark, table, indexFiles(spark, table,
+          next.copy(files = files, changes = changes), files))
+        next.version
+      }
+    widenDeclared(spark, table, upserts)
+    version
   }
 
   /** Incremental consumption: the rows ADDED after `sinceVersion`,
@@ -1896,6 +1937,7 @@ object TxTable {
     * change row per key — because "apply order within a batch" is
     * undefined for a set; multiple ops per key fail fast (the same
     * contract Delta's MERGE enforces via its multiple-match error).
+    * An upsert column the table lacks widens it, as in [[merge]].
     * Returns the committed version. */
   def applyCdc(spark: SparkSession, table: String, changes: DataFrame,
       key: String, opCol: String): Long = {
@@ -1904,97 +1946,7 @@ object TxTable {
       .agg(count(lit(1)).as("__n")).filter(col("__n") > 1).count()
     require(dupKeys == 0,
       s"unconsolidated CDC batch: $dupKeys keys appear more than once")
-    val cur = snapshot(spark, table)
-    // merge-on-read (the mergeDvCounted discipline): every changed
-    // key hides as one IN-set entry, upserts land as fresh files —
-    // zero pre-existing rewrites. Same lossless-key and key-count
-    // gates; None falls through to copy-on-write.
-    val dv = cur.filter(_ => deletionVectorsEnabled(spark, table))
-      .flatMap(c => applyCdcDv(spark, table, changes, key, opCol, c))
-    if (dv.isDefined) return dv.get
-    val next = cur.getOrElse(Snapshot.Empty).next("cdc")
-    val upserts = changes.filter(col(opCol) =!= "d").drop(opCol)
-    val merged = cur match {
-      case None => upserts
-      case Some(_) =>
-        // every changed key (deleted OR updated) leaves the current
-        // image; updates then re-enter from the batch
-        read(spark, table)
-          .join(changes.select(col(key)).distinct(), Seq(key), "left_anti")
-          .unionByName(upserts)
-    }
-    val changeFiles = cdcChangeFiles(spark, table, cur, changes, key,
-      opCol, next.version)
-    val files = writeFiles(merged, table, next.version)
-    commit(spark, table, indexFiles(spark, table,
-      next.copy(files = files, changes = changeFiles), files))
-    next.version
-  }
-
-  /** The CDC batch's change-feed delta (opt-in): a "d" op on an
-    * EXISTING key emits that key's current rows as deletes (a "d" on
-    * an absent key changes nothing, so it records nothing); an upsert
-    * on an existing key pairs preimage/postimage; an upsert on a new
-    * key is an insert. SHARED by the copy-on-write and merge-on-read
-    * [[applyCdc]] paths — feed consumers cannot tell them apart
-    * (`read` is dv-aware, so images are the VISIBLE rows). */
-  private def cdcChangeFiles(spark: SparkSession, table: String,
-      cur: Option[Snapshot], changes: DataFrame, key: String,
-      opCol: String, next: Long): Seq[String] = {
-    import org.apache.spark.sql.functions.{col, lit}
-    if (!changeFeedEnabled(spark, table)) return Nil
-    val upserts = changes.filter(col(opCol) =!= "d").drop(opCol)
-    val delta = cur match {
-      case None => upserts.withColumn(ChangeTypeCol, lit("insert"))
-      case Some(_) =>
-        val current = read(spark, table)
-        val curKeys = current.select(col(key)).distinct()
-        val delKeys = changes.filter(col(opCol) === "d")
-          .select(col(key)).distinct()
-        val upKeys = upserts.select(col(key)).distinct()
-        current.join(delKeys, Seq(key), "left_semi")
-          .withColumn(ChangeTypeCol, lit("delete"))
-          .unionByName(current.join(upKeys, Seq(key), "left_semi")
-            .withColumn(ChangeTypeCol, lit("update_preimage")))
-          .unionByName(upserts.join(curKeys, Seq(key), "left_semi")
-            .withColumn(ChangeTypeCol, lit("update_postimage")))
-          .unionByName(upserts.join(curKeys, Seq(key), "left_anti")
-            .withColumn(ChangeTypeCol, lit("insert")))
-    }
-    writeChangeFiles(delta, table, next)
-  }
-
-  /** [[applyCdc]] as a merge-on-read commit — identical gates and
-    * mechanics to [[mergeDvCounted]], with the CDC twist that "d"
-    * keys contribute to the hide set but nothing to the fresh files. */
-  private def applyCdcDv(spark: SparkSession, table: String,
-      changes: DataFrame, key: String, opCol: String,
-      cur: Snapshot): Option[Long] = {
-    import org.apache.spark.sql.functions.col
-    if (cur.files.isEmpty) return None
-    val keyType = changes.schema.fields.find(_.name == key).map(_.dataType)
-    if (!keyType.exists(dvMergeKeyLossless)) return None
-    val keysRaw = changes.filter(col(key).isNotNull)
-      .select(col(key).cast("string")).distinct()
-      .limit(DvMergeMaxKeys + 1)
-      .collect().map(_.getString(0))
-    if (keysRaw.length > DvMergeMaxKeys) return None
-    requireDvColumns(spark, table, cur, Seq(key))
-    val v = cur.version + 1
-    val keys = keysRaw.sorted.toSeq
-    val touched =
-      if (keys.isEmpty) Nil
-      else candidateFilesForKeys(cur, key, keys, keyType)
-    val changeFiles = cdcChangeFiles(spark, table, Some(cur), changes,
-      key, opCol, v)
-    val upserts = changes.filter(col(opCol) =!= "d").drop(opCol)
-    val fresh = writeFilesDispatch(upserts, table, v)
-    val ins = Seq(key -> keys)
-    commit(spark, table, indexFiles(spark, table, cur.next("cdc", changeFiles)
-      .copy(files = cur.files ++ fresh,
-        dels = cur.dels ++ touched.map(f => DelEntry(f, Nil, Nil, ins))),
-      fresh))
-    Some(v)
+    mergeByKey(spark, table, changes, key, "cdc", Some(opCol), None)
   }
 
   /** Exactly-once streaming append: apply `df` as `(appId, epochId)`
@@ -3127,10 +3079,10 @@ object TxTable {
     * DV'd files that pure-append tables should never pay.
     *
     * Scope, stated loudly: [[deleteWhere]]/[[updateWhere]] (predicate
-    * DML), SQL DELETE/UPDATE under the lossless gate, [[merge]] (API
-    * upsert) and [[applyCdc]] (op-typed batches) — the latter two via
-    * the IN-set [[DelEntry]] form up to [[DvMergeMaxKeys]] distinct
-    * keys ([[mergeDvCounted]]/[[applyCdcDv]]) — all commit
+    * DML), SQL DELETE/UPDATE under the lossless gate, [[merge]] and
+    * [[mergeSync]] (API upsert) and [[applyCdc]] (op-typed batches) —
+    * the latter three via the IN-set [[DelEntry]] form up to
+    * [[DvMergeMaxKeys]] distinct keys ([[mergeByKey]]) — all commit
     * merge-on-read. SQL MERGE INTO stays COPY-ON-WRITE even with DVs
     * enabled: the SQL row-level path is Spark's group-based
     * ReplaceData, which hands this table the POST-state of every
@@ -3199,7 +3151,7 @@ object TxTable {
 
   /** Key types whose canonical string form (`cast(col as string)`)
     * round-trips EXACTLY — the predicate-losslessness gate for
-    * [[mergeDvCounted]]'s IN-set entries, the same discipline as
+    * [[mergeByKey]]'s IN-set entries, the same discipline as
     * [[TxSql.filterLossless]]: float/double (NaN, -0.0), timestamp
     * (session-zone rendering) and binary keys fall back to
     * copy-on-write rather than risk a drifted replay. */
@@ -3278,132 +3230,6 @@ object TxTable {
       case Seq(b: PartBucket) => writeFilesBucketed(df, table, version, b)
       case _ => writeFiles(df, table, version)
     }
-
-  /** MERGE as a merge-on-read commit — Delta's DV-MERGE / Iceberg's
-    * equality-delete shape, reduced to the manifest: the batch's
-    * distinct keys record as ONE shared IN-set [[DelEntry]] body on
-    * the candidate files (hiding every pre-image in place) and the
-    * batch itself lands as fresh post-image files. ZERO pre-existing
-    * data files rewrite — the daily-upsert write path at 100 TB costs
-    * one manifest commit plus the batch's own bytes. None → fall back
-    * to copy-on-write when the key type is not canonically lossless
-    * ([[dvMergeKeyLossless]]), the batch exceeds [[DvMergeMaxKeys]],
-    * or the table is empty (first write has nothing to hide).
-    * Content-equal to the CoW [[merge]] by construction: the IN-set
-    * hides exactly the rows the anti-join drops (same canonical cast
-    * both sides), fresh files carry no dels so post-images matching
-    * their own key stay visible, and CDF images come from the SAME
-    * recording ([[mergeChangeFiles]]). */
-  private[graft] def mergeDvCounted(spark: SparkSession, table: String,
-      updates: DataFrame, key: String,
-      cur: Snapshot): Option[(Long, Int, Int)] = {
-    import org.apache.spark.sql.functions.col
-    if (cur.files.isEmpty) return None
-    val keyType = updates.schema.fields.find(_.name == key).map(_.dataType)
-    if (!keyType.exists(dvMergeKeyLossless)) return None
-    // bounded driver state: the batch's distinct keys in canonical
-    // form — limit(cap+1) bounds the collect BEFORE it runs
-    val keysRaw = updates.filter(col(key).isNotNull)
-      .select(col(key).cast("string")).distinct()
-      .limit(DvMergeMaxKeys + 1)
-      .collect().map(_.getString(0))
-    if (keysRaw.length > DvMergeMaxKeys) return None
-    requireDvColumns(spark, table, cur, Seq(key))
-    val v = cur.version + 1
-    val keys = keysRaw.sorted.toSeq
-    val touched =
-      if (keys.isEmpty) Nil
-      else candidateFilesForKeys(cur, key, keys, keyType)
-    // change feed first: it reads the PRE-merge (visible) table
-    val changeFiles =
-      mergeChangeFiles(spark, table, Some(cur), updates, key, v)
-    val fresh = writeFilesDispatch(updates, table, v)
-    // fresh post-image files get index metadata over the same tracked
-    // columns (old files' entries stay valid as supersets)
-    val ins = Seq(key -> keys)
-    commit(spark, table, indexFiles(spark, table,
-      cur.next("merge", changeFiles).copy(files = cur.files ++ fresh,
-        dels = cur.dels ++ touched.map(f => DelEntry(f, Nil, Nil, ins))),
-      fresh))
-    widenDeclared(spark, table, updates)
-    Some((v, touched.size, cur.files.size))
-  }
-
-  /** [[mergeSync]] as a merge-on-read commit — [[mergeDvCounted]]'s
-    * mechanics plus the by-source arm: the vanished keys (visible
-    * scoped rows whose key is absent from the batch) record as a
-    * SCOPED IN-set [[DelEntry]] (scope AND key IN vanished — the
-    * entry language is conjunctive, so the hide is exact even when a
-    * key also has rows OUTSIDE the scope), the upsert keys record as
-    * the usual unscoped IN-set, and the batch lands as fresh
-    * post-image files. ZERO pre-existing files rewrite. None → fall
-    * back to copy-on-write when the key type is not canonically
-    * lossless, the combined key sets exceed [[DvMergeMaxKeys]], a
-    * scoped visible row carries a NULL key (an IN-set cannot hide
-    * NULL; CoW can), or the table is empty. */
-  private def mergeSyncDv(spark: SparkSession, table: String,
-      updates: DataFrame, key: String,
-      scopeRanges: Seq[(String, Double, Double)],
-      scopeEq: Seq[(String, String)],
-      cur: Snapshot): Option[Long] = {
-    import org.apache.spark.sql.functions.{broadcast, coalesce, col, lit}
-    if (cur.files.isEmpty) return None
-    val keyType = updates.schema.fields.find(_.name == key).map(_.dataType)
-    if (!keyType.exists(dvMergeKeyLossless)) return None
-    val batchRaw = updates.filter(col(key).isNotNull)
-      .select(col(key).cast("string")).distinct()
-      .limit(DvMergeMaxKeys + 1)
-      .collect().map(_.getString(0))
-    if (batchRaw.length > DvMergeMaxKeys) return None
-    // vanished keys: one bounded pass over the VISIBLE scoped rows,
-    // anti-joined against the broadcast batch key set. NULL target
-    // keys never match MERGE's ON, so they count as vanished — but
-    // an IN-set cannot express NULL: surface them and fall back.
-    val scopePred = predicateColumn(scopeRanges, scopeEq)
-    import spark.implicits.newStringEncoder
-    val batchDf = spark.createDataset(batchRaw.toSeq).toDF("__sync_k")
-    val vanishedRows = read(spark, table)
-      .filter(coalesce(scopePred, lit(false)))
-      .select(col(key).cast("string").as("__sync_k")).distinct()
-      .join(broadcast(batchDf), Seq("__sync_k"), "left_anti")
-      .limit(DvMergeMaxKeys + 1)
-      .collect()
-    if (vanishedRows.exists(_.isNullAt(0))) return None
-    val vanished = vanishedRows.map(_.getString(0))
-    if (batchRaw.length + vanished.length > DvMergeMaxKeys) return None
-    requireDvColumns(spark, table, cur,
-      (Seq(key) ++ scopeRanges.map(_._1) ++ scopeEq.map(_._1)).distinct)
-    val v = cur.version + 1
-    val batchKeys = batchRaw.sorted.toSeq
-    val vanKeys = vanished.sorted.toSeq
-    val touchedUpsert =
-      if (batchKeys.isEmpty) Nil
-      else candidateFilesForKeys(cur, key, batchKeys, keyType)
-    // the by-source entry's candidates: files the scope prune admits
-    // AND the vanished-key prune admits (the entry is the conjunction)
-    val touchedSync =
-      if (vanKeys.isEmpty) Nil
-      else candidateFiles(cur, scopeRanges,
-        canonicalValueEq(spark, table, cur, scopeEq))
-        .intersect(candidateFilesForKeys(cur, key, vanKeys, keyType))
-    // change feed first: it reads the PRE-merge (visible) table
-    val changeFiles = mergeSyncChangeFiles(spark, table, Some(cur),
-      updates, key, scopeRanges, scopeEq, v)
-    val fresh = writeFilesDispatch(updates, table, v)
-    val upsertDels =
-      if (batchKeys.isEmpty) Nil
-      else touchedUpsert.map(f =>
-        DelEntry(f, Nil, Nil, Seq(key -> batchKeys)))
-    val syncDels =
-      if (vanKeys.isEmpty) Nil
-      else touchedSync.map(f =>
-        DelEntry(f, scopeRanges, scopeEq, Seq(key -> vanKeys)))
-    commit(spark, table, indexFiles(spark, table,
-      cur.next("merge", changeFiles).copy(files = cur.files ++ fresh,
-        dels = cur.dels ++ upsertDels ++ syncDels), fresh))
-    widenDeclared(spark, table, updates)
-    Some(v)
-  }
 
   /** Per-file DELETION PRESSURE of the head snapshot: `(table-relative
     * file, total rows, hidden rows)` for every file carrying deletion
@@ -3639,23 +3465,21 @@ object TxTable {
   def deleteWhereExpr(spark: SparkSession, table: String,
       cond: org.apache.spark.sql.Column,
       ranges: Seq[(String, Double, Double)] = Nil,
-      valueEq: Seq[(String, String)] = Nil): Long = {
-    import org.apache.spark.sql.functions.{coalesce, lit, not}
-    copyOnWrite(spark, table, ranges, valueEq,
-      _.filter(not(coalesce(cond, lit(false)))), op = "delete",
-      changeRows = _.filter(coalesce(cond, lit(false)))
-        .withColumn(ChangeTypeCol, lit("delete")))._1
-  }
+      valueEq: Seq[(String, String)] = Nil): Long =
+    deleteWhereCounted(spark, table, ranges, valueEq, Some(cond))._1
 
   /** [[deleteWhere]] exposing (version, rewrittenFiles, totalFiles) so
-    * callers (and specs) can assert the prune actually skipped files. */
+    * callers (and specs) can assert the prune actually skipped files.
+    * `cond` is [[deleteWhereExpr]]'s exact row predicate; without it
+    * the conjunctive predicate itself decides. */
   private[graft] def deleteWhereCounted(spark: SparkSession, table: String,
       ranges: Seq[(String, Double, Double)],
-      valueEq: Seq[(String, String)] = Nil): (Long, Int, Int) = {
+      valueEq: Seq[(String, String)] = Nil,
+      cond: Option[org.apache.spark.sql.Column] = None): (Long, Int, Int) = {
     import org.apache.spark.sql.functions.{coalesce, lit, not}
     // keep = NOT(pred IS TRUE): a NULL predicate (null in a predicate
     // column) must KEEP the row, exactly SQL DELETE's WHERE semantics
-    val pred = predicateColumn(ranges, valueEq)
+    val pred = cond.getOrElse(predicateColumn(ranges, valueEq))
     copyOnWrite(spark, table, ranges, valueEq,
       _.filter(not(coalesce(pred, lit(false)))), op = "delete",
       changeRows = _.filter(coalesce(pred, lit(false)))

@@ -307,51 +307,78 @@ class PropertySpec extends AnyFunSuite {
     import graft.sources.TxTable
     import spark.implicits._
     // the merge-on-read path's whole contract in one property: for
+    // ANY key-based MERGE verb (merge; mergeSync over a random key
+    // range; applyCdc with random u/d ops over consolidated keys),
     // ANY base table and ANY batch (overlapping keys, fresh keys,
     // duplicate batch keys, adversarial string values), the
-    // DV-enabled merge must read back EXACTLY what the copy-on-write
-    // twin reads. A candidate-prune bug (file skipped that held a
-    // key), a canonical-form mismatch, or a resurrection through
-    // fresh files all falsify it.
+    // DV-enabled table must read back EXACTLY what the copy-on-write
+    // twin reads, and record the same change feed for the commit. A
+    // candidate-prune bug (file skipped that held a key), a
+    // canonical-form mismatch, a resurrection through fresh files or
+    // a strategy-specific feed arm all falsify it.
     val genVal = Gen.oneOf(Gen.alphaNumStr.map(_.take(8)),
       Gen.const("q\"uo\"te"), Gen.const("unié中"))
     val genCase = for {
+      verb <- Gen.oneOf("merge", "mergeSync", "applyCdc")
       nBase <- Gen.choose(5, 40)
       base <- Gen.listOfN(nBase,
         Gen.zip(Gen.choose(0L, 30L), genVal))
       nBatch <- Gen.choose(1, 15)
-      batch <- Gen.listOfN(nBatch,
-        Gen.zip(Gen.choose(0L, 45L), genVal)) // overlaps + fresh keys
-    } yield (base, batch)
-    for (((base, batch), i) <- cases(genCase, 8).zipWithIndex) {
+      batch <- Gen.listOfN(nBatch, Gen.zip(
+        Gen.choose(0L, 45L), genVal, // overlaps + fresh keys
+        Gen.oneOf("u", "d")))
+      lo <- Gen.choose(0L, 35L)
+      hi <- Gen.choose(lo, 45L)
+    } yield (verb, base, batch, (lo, hi))
+    for (((verb, base, batch, (lo, hi)), i) <-
+        cases(genCase, 8).zipWithIndex) {
+      info(s"case $i: $verb")
       val root = java.nio.file.Files
         .createTempDirectory(s"graft_prop_mdv_$i").toString
       val (dvDir, cowDir) = (s"$root/dv", s"$root/cow")
       val baseDf = base.toDF("k", "v")
-      val batchDf = batch.toDF("k", "v")
-      for (d <- Seq(dvDir, cowDir))
+      for (d <- Seq(dvDir, cowDir)) {
+        TxTable.enableChangeFeed(spark, d)
         TxTable.overwriteIndexedMulti(baseDf, d, statCols = Seq("k"))
+      }
       TxTable.enableDeletionVectors(spark, dvDir)
-      TxTable.merge(spark, dvDir, batchDf, "k")
-      TxTable.merge(spark, cowDir, batchDf, "k")
-      val got = TxTable.read(spark, dvDir)
-        .as[(Long, String)].collect().sorted.toSeq
-      val want = TxTable.read(spark, cowDir)
-        .as[(Long, String)].collect().sorted.toSeq
-      assert(got == want, s"case $i: DV merge diverged from CoW\n" +
-        s"base=$base\nbatch=$batch\ndv=$got\ncow=$want")
-      // and the DV side really was merge-on-read (an all-fresh-keys
-      // batch legitimately prunes to ZERO candidates — no entry).
-      // "Fresh" means NOT PRESENT IN THE BASE KEY SET — the old
-      // `forall(_ > maxBase)` proxy was too strict and flaked on
-      // random draws where a batch key fell inside the base's key
-      // RANGE without matching any base row (no preimage to hide →
-      // correctly no IN-set; the got == want gate above already
-      // proved the semantics).
-      val baseKeys = base.map(_._1).toSet
-      assert(TxTable.snapshot(spark, dvDir).get.dels.nonEmpty ||
-        !batch.exists(b => baseKeys(b._1)),
-        s"case $i: merge did not record an IN-set")
+      // applyCdc takes a consolidated batch: one (u|d) row per key
+      val cdc = batch.groupBy(_._1).values.map(_.head).toSeq
+      val apply: String => Unit = verb match {
+        case "merge" => d => TxTable.merge(spark, d,
+          batch.map(b => (b._1, b._2)).toDF("k", "v"), "k")
+        case "mergeSync" => d => TxTable.mergeSync(spark, d,
+          batch.map(b => (b._1, b._2)).toDF("k", "v"), "k",
+          scopeRanges = Seq(("k", lo.toDouble, hi.toDouble)))
+        case "applyCdc" => d => TxTable.applyCdc(spark, d,
+          cdc.toDF("k", "v", "op"), "k", "op")
+      }
+      apply(dvDir)
+      apply(cowDir)
+      val tables = Seq(dvDir, cowDir).map(d => TxTable.read(spark, d)
+        .as[(Long, String)].collect().sorted.toSeq)
+      val feeds = Seq(dvDir, cowDir).map(d =>
+        TxTable.changeFeed(spark, d, 1L, Some(2L))
+          .select($"k", $"v", col(TxTable.ChangeTypeCol))
+          .as[(Long, String, String)].collect().sorted.toSeq)
+      val what = s"case $i ($verb, scope [$lo, $hi])\nbase=$base\n" +
+        s"batch=$batch"
+      assert(tables(0) == tables(1), s"$what: DV table diverged from " +
+        s"CoW\ndv=${tables(0)}\ncow=${tables(1)}")
+      assert(feeds(0) == feeds(1), s"$what: DV change feed diverged " +
+        s"from CoW\ndv=${feeds(0)}\ncow=${feeds(1)}")
+      // and the DV side really was merge-on-read: every v1 file
+      // survives, and whenever the commit hid a base row (the feed
+      // holds its pre-image or delete) an IN-set entry recorded it.
+      // A batch that touches no base key legitimately prunes to ZERO
+      // candidates — no entry.
+      val (v1, v2) = (TxTable.snapshot(spark, dvDir, Some(1L)).get,
+        TxTable.snapshot(spark, dvDir).get)
+      assert(v1.files.toSet.subsetOf(v2.files.toSet),
+        s"$what: DV commit rewrote a pre-existing file")
+      assert(v2.dels.nonEmpty || !feeds(1).exists(r =>
+        r._3 == "update_preimage" || r._3 == "delete"),
+        s"$what: DV commit did not record an IN-set")
     }
   }
 

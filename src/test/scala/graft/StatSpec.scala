@@ -44,4 +44,29 @@ class StatSpec extends AnyFunSuite {
     // check the sign when the rounded gap is resolvable
     assert(math.abs(pa - pb) < 2e-4 || math.signum(z) == math.signum(pa - pb))
   }
+
+  test("q_levene counts only non-NULL segments, like the oracle's inner join") {
+    import org.apache.spark.sql.functions.{col, lit, when}
+    // a corpus copy whose first ordering customer has a NULL segment
+    val dir = java.nio.file.Files.createTempDirectory("graft_levene_")
+    java.nio.file.Files.copy(java.nio.file.Paths.get(s"$sf/orders.parquet"),
+      dir.resolve("orders.parquet"))
+    val victim = Tables.orders(spark, dir.toString)
+      .select(col("o_custkey")).head().get(0)
+    Tables.customer(spark, sf)
+      .withColumn("c_mktsegment", when(col("c_custkey") === lit(victim),
+        lit(null).cast("string")).otherwise(col("c_mktsegment")))
+      .write.parquet(dir.resolve("customer.parquet").toString)
+    val joined = Tables.orders(spark, dir.toString)
+      .join(Tables.customer(spark, dir.toString),
+        col("o_custkey") === col("c_custkey"))
+    assert(joined.filter(col("c_mktsegment").isNull).count() > 0)
+    val grouped = joined.filter(col("c_mktsegment").isNotNull)
+    val r = StatQueries.queries("q_levene")(spark, dir.toString)
+      .collect().head
+    assert(r.getLong(0) == grouped.count(), "n_rows counted NULL-group rows")
+    assert(r.getLong(1) ==
+      grouped.select(col("c_mktsegment")).distinct().count(),
+      "k_groups counted the NULL group")
+  }
 }

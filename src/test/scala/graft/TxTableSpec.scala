@@ -1242,6 +1242,24 @@ class TxTableSpec extends AnyFunSuite {
       (3, "c", Some(30L))))
   }
 
+  test("applyCdc follows merge's schema rule: a NEW column widens table and declaration") {
+    val t = freshTable()
+    TxTable.append(df(1 -> "a", 2 -> "b", 3 -> "c"), t) // v1: (k, v)
+    TxTable.declareSchema(spark, t, TxTable.read(spark, t).schema)
+    // the batch carries `score`: 2 updates, 3 deletes, 4 inserts;
+    // carried row 1 reads null for it, and the op column never lands
+    TxTable.applyCdc(spark, t, Seq[(Int, String, Option[Long], String)](
+      (2, "B", Some(20L), "u"), (3, "c", None, "d"), (4, "d", Some(40L), "i"))
+      .toDF("k", "v", "score", "op"), "k", "op") // v2
+    val got = TxTable.read(spark, t)
+      .select($"k", $"v", $"score").as[(Int, String, Option[Long])]
+      .collect().sortBy(_._1).toSeq
+    assert(got === Seq((1, "a", None), (2, "B", Some(20L)),
+      (4, "d", Some(40L))))
+    assert(TxTable.declaredSchema(spark, t).get.fieldNames.toSeq ===
+      Seq("k", "v", "score"))
+  }
+
   test("vacuumOlderThan drops exactly the pre-cutoff prefix; head survives") {
     val t = freshTable()
     TxTable.overwrite(df(1 -> "a"), t) // v1
