@@ -342,13 +342,12 @@ class PropertySpec extends AnyFunSuite {
         TxTable.overwriteIndexedMulti(baseDf, d, statCols = Seq("k"))
       }
       TxTable.enableDeletionVectors(spark, dvDir)
+      val upserts = batch.map(b => (b._1, b._2)).toDF("k", "v")
       // applyCdc takes a consolidated batch: one (u|d) row per key
       val cdc = batch.groupBy(_._1).values.map(_.head).toSeq
       val apply: String => Unit = verb match {
-        case "merge" => d => TxTable.merge(spark, d,
-          batch.map(b => (b._1, b._2)).toDF("k", "v"), "k")
-        case "mergeSync" => d => TxTable.mergeSync(spark, d,
-          batch.map(b => (b._1, b._2)).toDF("k", "v"), "k",
+        case "merge" => d => TxTable.merge(spark, d, upserts, "k")
+        case "mergeSync" => d => TxTable.mergeSync(spark, d, upserts, "k",
           scopeRanges = Seq(("k", lo.toDouble, hi.toDouble)))
         case "applyCdc" => d => TxTable.applyCdc(spark, d,
           cdc.toDF("k", "v", "op"), "k", "op")
