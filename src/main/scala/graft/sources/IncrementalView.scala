@@ -87,7 +87,7 @@ object IncrementalView {
         signedRows(feed, keyCol, valCol))
       try {
         TxTable.overwriteWithTxns(spark, dst, Map(appId -> srcHead),
-          Map(appId -> consumed))(TxTable.writeFiles(merged, dst, _))
+          Map(appId -> consumed))(TxTable.writeFiles(merged, dst, _).paths)
         return srcHead
       } catch {
         case _: TxTable.TxConflictException =>
@@ -201,7 +201,8 @@ object IncrementalView {
               replacement.repartitionByRange(
                 math.min(nParts, math.max(1, survivors.size)),
                 col(keyCol)),
-              dst, next0)
+              dst, next0, TxTable.indexCols(
+                dstSnap.getOrElse(TxTable.Snapshot.Empty), Seq(keyCol))).data
           TxTable.dynamicOverwriteCommit(spark, dst, fresh, Seq(keyCol),
             extraTuples = emptied, addTxns = Map(appId -> srcHead),
             requireTxn = Some(appId -> consumed))
@@ -301,7 +302,7 @@ object IncrementalView {
         TxTable.overwriteWithTxns(spark, dst,
           Map(markA -> headA, markB -> headB),
           Map(markA -> consumedA, markB -> consumedB))(
-          TxTable.writeFiles(merged, dst, _))
+          TxTable.writeFiles(merged, dst, _).paths)
         return (headA, headB)
       } catch {
         case _: TxTable.TxConflictException =>
@@ -422,7 +423,8 @@ object IncrementalView {
               replacement.repartitionByRange(
                 math.min(nParts, math.max(1, survivors.size)),
                 col(grpCol)),
-              dst, next0)
+              dst, next0, TxTable.indexCols(
+                dstSnap.getOrElse(TxTable.Snapshot.Empty), Seq(grpCol))).data
           TxTable.dynamicOverwriteCommit(spark, dst, fresh, Seq(grpCol),
             extraTuples = emptied,
             addTxns = Map(markA -> headA, markB -> headB),
@@ -463,7 +465,7 @@ object IncrementalView {
       try {
         TxTable.overwriteWithTxns(spark, dst, Map(appId -> epochId),
           Map(appId -> dstSnap.flatMap(_.txns.get(appId)).getOrElse(0L)))(
-          TxTable.writeFiles(merged, dst, _))
+          TxTable.writeFiles(merged, dst, _).paths)
         return true
       } catch {
         case _: TxTable.TxConflictException =>
@@ -658,12 +660,12 @@ object IncrementalView {
         var rescanned = 0L
         TxTable.overwriteWithTxns(spark, dst, Map(appId -> srcHead),
           Map(appId -> consumed)) { v =>
-          val files = TxTable.writeFiles(merged, dst, v)
+          val files = TxTable.writeFiles(merged, dst, v).paths
           val keys = exhausted.get("keys").asInstanceOf[Seq[Row]]
             .map(_.get(0))
           rescanned = keys.size.toLong
           if (keys.isEmpty) files
-          else files ++ TxTable.writeFiles(rebuilt(keys), dst, v)
+          else files ++ TxTable.writeFiles(rebuilt(keys), dst, v).paths
         }
         return (srcHead, rescanned)
       } catch {

@@ -16,7 +16,7 @@ import org.apache.spark.sql.vectorized.ColumnarBatch
   * with ZERO Exchange (Spark's SPJ, SPARK-37375):
   *
   *   - the write path laid out ONE bucket per file
-  *     ([[TxTable.writeFilesBucketed]]) and recorded singleton bucket
+  *     ([[TxTable.writeFiles]] with a bucket) and recorded singleton bucket
   *     value sets in the manifest;
   *   - this wrapper re-groups the delegate parquet scan's planned
   *     file partitions BY BUCKET — one [[HasPartitionKey]] input

@@ -34,8 +34,9 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
   * semantics (exactly Delta/Iceberg before runtime group filtering);
   * the pruned-rewrite fast path exists on the API verbs
   * (`updateWhere`/`deleteWhere`), and SQL DELETE already routes
-  * through it via `SupportsDelete`. Index metadata does not carry
-  * (the files it described are replaced), matching `overwrite`.
+  * through it via `SupportsDelete`. The table's index follows the
+  * rewrite: the writing tasks record the replacement files' entries
+  * over the columns the snapshot tracks, as the API verbs do.
   */
 private[sources] class TxRowLevelOperationBuilder(spark: SparkSession,
     path: String, snap: TxTable.Snapshot, schema: StructType,
@@ -96,7 +97,7 @@ private[sources] class TxRowLevelOperation(spark: SparkSession,
         // logical (rows are positional — names never touch the data)
         val physSchema = mapping.fold(schema)(_.physicalize(schema))
         val delegate = ParquetScanBuilder(spark,
-          new TxFileIndex(spark, path, restricted, physSchema),
+          new TxManifestIndex(spark, path, restricted, physSchema),
           physSchema, physSchema, options).build()
         val logicalScan = mapping match {
           case None => delegate
@@ -117,11 +118,7 @@ private[sources] class TxRowLevelOperation(spark: SparkSession,
     new WriteBuilder {
       override def build(): Write = new Write {
         override def toBatch: BatchWrite =
-          // mapped tables: tasks write rows positionally — hand the
-          // factory the PHYSICAL field names so the written files
-          // agree with every other file in the table
-          new TxReplaceBatchWrite(path,
-            mapping.fold(info.schema())(_.physicalize(info.schema())),
+          new TxReplaceBatchWrite(path, info.schema(),
             snap, () => candidates,
             cmd match {
               case RowLevelOperation.Command.UPDATE => "update"
@@ -150,11 +147,14 @@ private[sources] class TxReplaceBatchWrite(path: String, schema: StructType,
     mapping: Option[ColumnMapping.Mapping] = None)
     extends BatchWrite {
   private val tag = java.util.UUID.randomUUID().toString.take(8)
+  private val index = TxTable.indexCols(snap)
 
+  // `schema` is LOGICAL; mapped tables' tasks write rows positionally
+  // under the PHYSICAL field names, so the written files agree with
+  // every other file in the table
   override def createBatchWriterFactory(
       info: PhysicalWriteInfo): DataWriterFactory =
-    new TxParquetWriterFactory(path, schema, tag,
-      TxConfCarrier.capture(SparkSession.active))
+    TxParquetWriterFactory(path, schema, mapping, tag, index)
 
   override def commit(messages: Array[WriterCommitMessage]): Unit = {
     val spark = SparkSession.active
@@ -163,7 +163,8 @@ private[sources] class TxReplaceBatchWrite(path: String, schema: StructType,
       throw new TxTable.TxConflictException(
         s"table changed since analysis (v${snap.version} -> v$head) at " +
           s"$path: re-run the statement against the new head")
-    val files = TxV2Files.names(messages)
+    val written = TxV2Files.written(messages)
+    val files = written.map(_.path)
     // CHECK constraints gate HERE for the task-written path (the rows
     // never passed writeFiles' in-plan filter): one scan of only the
     // replacement files, before any manifest references them — a
@@ -191,7 +192,7 @@ private[sources] class TxReplaceBatchWrite(path: String, schema: StructType,
       if (!TxTable.changeFeedEnabled(spark, path)) Nil
       else {
         import org.apache.spark.sql.functions.lit
-        // raw file frames are PHYSICAL; writeChangeFiles expects the
+        // raw file frames are PHYSICAL; writeFiles expects the
         // LOGICAL contract (it re-physicalizes) — translate first
         def logical(df: org.apache.spark.sql.DataFrame) =
           mapping.fold(df)(_.toLogical(df))
@@ -211,15 +212,15 @@ private[sources] class TxReplaceBatchWrite(path: String, schema: StructType,
           .withColumn(TxTable.ChangeTypeCol, lit(preType))
           .unionByName(post.exceptAll(pre)
             .withColumn(TxTable.ChangeTypeCol, lit(postType)))
-        TxTable.writeChangeFiles(delta, path, snap.version + 1)
+        TxTable.writeFiles(delta, path, snap.version + 1,
+          data = false, changes = true).changes
       }
     // untouched files keep their index metadata and dels; replaced
     // files' entries drop with them (their dels folded into the
     // rewrite: the op scan served visible rows), and the task-written
-    // files carry none (absent metadata -> always a candidate ->
-    // correct, unpruned)
-    TxTable.commit(spark, path,
-      snap.next(op, changes).copy(files = untouched ++ files))
+    // files carry the entries their tasks recorded
+    TxTable.commit(spark, path, TxTable.withIndex(
+      snap.next(op, changes).copy(files = untouched ++ files), index, written))
   }
 
   override def abort(messages: Array[WriterCommitMessage]): Unit =
@@ -236,20 +237,27 @@ private[sources] class TxReplaceBatchWrite(path: String, schema: StructType,
   * ONE atomic manifest commit, racing writers lose with
   * `TxConflictException` and their files stay unreferenced. */
 private[sources] class TxDynPartBatchWrite(path: String,
-    schema: StructType, partCols: Seq[String]) extends BatchWrite {
+    schema: StructType, partCols: Seq[String],
+    mapping: Option[ColumnMapping.Mapping]) extends BatchWrite {
   private val tag = java.util.UUID.randomUUID().toString.take(8)
 
+  // the tasks record the entries of the columns the head tracks plus
+  // the partition transforms; a column a racing commit starts tracking
+  // is simply absent from these files' entries (always a candidate)
   override def createBatchWriterFactory(
-      info: PhysicalWriteInfo): DataWriterFactory =
-    new TxParquetWriterFactory(path, schema, tag,
-      TxConfCarrier.capture(SparkSession.active))
+      info: PhysicalWriteInfo): DataWriterFactory = {
+    val spark = SparkSession.active
+    TxParquetWriterFactory(path, schema, mapping, tag, TxTable.indexCols(
+      TxTable.snapshot(spark, path).getOrElse(TxTable.Snapshot.Empty),
+      partCols.map(TxTable.PartTransform.parse(_).name)))
+  }
 
   override def commit(messages: Array[WriterCommitMessage]): Unit = {
     val spark = SparkSession.active
-    val files = TxV2Files.names(messages)
+    val written = TxV2Files.written(messages)
     // same written-file constraint gate as the row-level path
-    TxConstraintGate(spark, path, files)
-    TxTable.dynamicOverwriteCommit(spark, path, files, partCols)
+    TxConstraintGate(spark, path, written.map(_.path))
+    TxTable.dynamicOverwriteCommit(spark, path, written, partCols)
     ()
   }
 
@@ -269,15 +277,14 @@ private[sources] class TxDynPartBatchWrite(path: String,
   * discarded; lost commit races rebase and re-check. Append output
   * mode only. */
 private[sources] class TxStreamingWrite(path: String, schema: StructType,
-    queryId: String)
+    mapping: Option[ColumnMapping.Mapping], queryId: String)
     extends org.apache.spark.sql.connector.write.streaming.StreamingWrite {
   private val tag = java.util.UUID.randomUUID().toString.take(8)
 
   override def createStreamingWriterFactory(info: PhysicalWriteInfo)
       : org.apache.spark.sql.connector.write.streaming
         .StreamingDataWriterFactory =
-    new TxParquetWriterFactory(path, schema, tag,
-      TxConfCarrier.capture(SparkSession.active))
+    TxParquetWriterFactory(path, schema, mapping, tag)
 
   override def commit(epochId: Long,
       messages: Array[WriterCommitMessage]): Unit = {
@@ -289,7 +296,7 @@ private[sources] class TxStreamingWrite(path: String, schema: StructType,
       TxV2Files.discard(path, messages)
       return
     }
-    val files = TxV2Files.names(messages)
+    val files = TxV2Files.written(messages).map(_.path)
     // constraint gate before the epoch commit: a violating micro-batch
     // fails the epoch (and the query) — the table never sees it
     TxConstraintGate(spark, path, files)
@@ -303,17 +310,15 @@ private[sources] class TxStreamingWrite(path: String, schema: StructType,
 }
 
 /** The files the tasks of a V2 write reported: their table-relative
-  * names for the manifest, or their deletion when the write is
-  * dropped (abort, replayed epoch). */
+  * paths with what the tasks recorded of them, for the manifest, or
+  * their deletion when the write is dropped (abort, replayed epoch). */
 private object TxV2Files {
-  def names(messages: Array[WriterCommitMessage]): Seq[String] =
-    messages.toSeq.map { case TxParquetCommit(f) =>
-      s"data/${new Path(f).getName}"
-    }
+  def written(messages: Array[WriterCommitMessage]): Seq[TxWritten] =
+    messages.toSeq.map { case TxParquetCommit(_, w) => w }
 
   def discard(path: String, messages: Array[WriterCommitMessage]): Unit = {
     val fs = TxTable.fs(SparkSession.active, new Path(path))
-    messages.collect { case TxParquetCommit(f) =>
+    messages.collect { case TxParquetCommit(f, _) =>
       fs.delete(new Path(f), false)
     }
     ()
@@ -337,19 +342,35 @@ private object TxConstraintGate {
 /** Task-side writers of the three V2 paths: one [[TxParquetDataWriter]]
   * per task, written in place under data/ with a writer-unique,
   * attempt-unique name (`tag` carries the epoch on the streaming
-  * path, so a replayed epoch's twins never collide). */
+  * path, so a replayed epoch's twins never collide), recording the
+  * `probe`'s index entries. `schema` is the files' PHYSICAL schema. */
 private class TxParquetWriterFactory(path: String, schema: StructType,
-    tag: String, conf: TxConfCarrier) extends DataWriterFactory
+    tag: String, conf: TxConfCarrier, probe: Option[TxIndexProbe])
+    extends DataWriterFactory
     with org.apache.spark.sql.connector.write.streaming
       .StreamingDataWriterFactory {
   override def createWriter(partitionId: Int,
-      taskId: Long): DataWriter[InternalRow] =
-    new TxParquetDataWriter(
-      new Path(path, f"data/rl-$tag-$partitionId%05d-$taskId.parquet"),
-      schema.length, conf.toConf(schema))
+      taskId: Long): DataWriter[InternalRow] = {
+    val rel = f"data/rl-$tag-$partitionId%05d-$taskId.parquet"
+    new TxParquetDataWriter(new Path(path, rel), rel, schema.length,
+      conf.toConf(schema), probe)
+  }
 
   override def createWriter(partitionId: Int, taskId: Long,
       epochId: Long): DataWriter[InternalRow] =
-    new TxParquetWriterFactory(path, schema, s"$tag-e$epochId", conf)
+    new TxParquetWriterFactory(path, schema, s"$tag-e$epochId", conf, probe)
       .createWriter(partitionId, taskId)
+}
+
+private object TxParquetWriterFactory {
+  /** The factory for rows of the LOGICAL `schema` of a table with
+    * `mapping`, recording `index`'s entries. */
+  def apply(path: String, schema: StructType,
+      mapping: Option[ColumnMapping.Mapping], tag: String,
+      index: TxTable.IndexCols = TxTable.IndexCols.Empty): TxParquetWriterFactory = {
+    val spark = SparkSession.active
+    new TxParquetWriterFactory(path,
+      mapping.fold(schema)(_.physicalize(schema)), tag,
+      TxConfCarrier.capture(spark), TxIndexProbe(spark, schema, index))
+  }
 }

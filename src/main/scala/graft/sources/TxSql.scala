@@ -9,7 +9,7 @@ import org.apache.spark.sql.connector.catalog.{Identifier, SupportsRead, Support
 import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.connector.read.ScanBuilder
 import org.apache.spark.sql.connector.write.{LogicalWriteInfo, SupportsTruncate, V1Write, Write, WriteBuilder}
-import org.apache.spark.sql.execution.datasources.{InMemoryFileIndex, PartitionDirectory}
+import org.apache.spark.sql.execution.datasources.PartitionDirectory
 import org.apache.spark.sql.execution.datasources.v2.parquet.ParquetScanBuilder
 import org.apache.spark.sql.sources.{DataSourceRegister, InsertableRelation}
 import org.apache.spark.sql.types.{ByteType, IntegerType, LongType, NumericType, ShortType, StringType, StructType}
@@ -26,9 +26,9 @@ import scala.jdk.CollectionConverters._
   * Architecture (Spark-first, the Delta connector's shape reduced to
   * its invariants):
   *
-  *   - [[TxFileIndex]] — a `PartitioningAwareFileIndex` whose
-  *     `listFiles` maps Catalyst data filters onto the manifest's own
-  *     pruning language (numeric ranges → per-file min/max stats,
+  *   - [[TxManifestIndex]] — a [[TxFileIndex]] of the snapshot's
+  *     files (no directory listing) whose `listFiles` maps Catalyst
+  *     data filters onto the manifest's own pruning language (numeric ranges → per-file min/max stats,
   *     string equality → per-file value sets + bloom probes) and
   *     returns only candidate files. File skipping happens at PLAN
   *     time on the driver, before a single executor task launches —
@@ -460,7 +460,7 @@ object TxSql {
 
   /** The file names (data/<name> relative form) surviving every
     * manifest prune for the given Catalyst filters — the single
-    * pruning decision [[TxFileIndex]] and the specs share. String
+    * pruning decision [[TxManifestIndex]] and the specs share. String
     * equalities probe the bloom index directly (the stored canonical
     * form of a string column IS the string). Numeric
     * point-equalities (lo == hi ranges) probe it only when the bloom
@@ -514,18 +514,16 @@ object TxSql {
   }
 }
 
-/** Manifest-pruning file index over one pinned snapshot: the listing
-  * is the snapshot's file set (no directory walk — the manifest IS
-  * the listing, the lakehouse O(1)-metadata property), and
-  * `listFiles` drops every file the manifest metadata can prove
-  * holds no matching row. */
-private[sources] class TxFileIndex(spark: SparkSession, table: String,
+/** Manifest-pruning file index over one pinned snapshot: a
+  * [[TxFileIndex]] of the snapshot's files (the manifest IS the
+  * listing, the lakehouse O(1)-metadata property: one status per
+  * file, no directory walk), whose `listFiles` drops every file the
+  * manifest metadata can prove holds no matching row. */
+private[sources] class TxManifestIndex(spark: SparkSession, table: String,
     snap: TxTable.Snapshot, tableSchema: StructType,
     nameToLogical: String => String = identity,
     logicalSchema: Option[StructType] = None)
-    extends InMemoryFileIndex(spark,
-      snap.files.map(f => new Path(table, f)),
-      Map.empty[String, String], None) {
+    extends TxFileIndex(spark, snap.files.map(f => new Path(table, f))) {
 
   /** Files surviving the last `listFiles` prune — observable so specs
     * can assert the SQL path prunes exactly as `readWhere` does. */
@@ -717,7 +715,7 @@ private[sources] class TxSparkTable(spark: SparkSession, path: String,
   /** Exposed for specs: the index whose prune decisions back scans.
     * Filters reach it in physical form on mapped tables; the
     * manifest is keyed logical — hence the name translation. */
-  private[sources] val index = new TxFileIndex(spark, path, snap, physSchema,
+  private[sources] val index = new TxManifestIndex(spark, path, snap, physSchema,
     nameToLogical =
       n => mapping.flatMap(_.logicalOf(n)).getOrElse(n),
     logicalSchema = Some(dataSchema))
@@ -876,11 +874,7 @@ private[sources] class TxSparkTable(spark: SparkSession, path: String,
             Array.empty
           override def toBatch
               : org.apache.spark.sql.connector.write.BatchWrite =
-            // the factory writes rows positionally; on a mapped table
-            // the field NAMES must be the files' physical ones
-            new TxDynPartBatchWrite(path,
-              mapping.fold(info.schema())(_.physicalize(info.schema())),
-              partCols)
+            new TxDynPartBatchWrite(path, info.schema(), partCols, mapping)
         } else new V1Write {
           override def toInsertableRelation: InsertableRelation =
             new InsertableRelation {
@@ -903,8 +897,7 @@ private[sources] class TxSparkTable(spark: SparkSession, path: String,
               .write.streaming.StreamingWrite = {
             require(!replace,
               "txtable streaming sink supports append output mode only")
-            new TxStreamingWrite(path,
-              mapping.fold(info.schema())(_.physicalize(info.schema())),
+            new TxStreamingWrite(path, info.schema(), mapping,
               info.queryId())
           }
         }

@@ -225,44 +225,80 @@ object TxTable {
     * ([[scanFiles]]); `mergeSchema` unions every footer through
     * Spark's inference. The argument alone decides: the session's
     * `spark.sql.parquet.mergeSchema` does not apply here, so reads and
-    * the DML rewrites built on them keep one footer's schema. */
+    * the DML rewrites built on them keep one footer's schema.
+    * `unionFooters` instead reads EVERY file's footer on the driver
+    * and scans all groups with their union — what a rewrite of files
+    * from both sides of a column-adding append needs, so the added
+    * column survives it. */
   private[sources] def readFilesDv(spark: SparkSession, table: String,
       snap: Snapshot, files: Seq[String],
       m: Option[ColumnMapping.Mapping],
-      mergeSchema: Boolean = false): DataFrame = {
-    def rd(fs: Seq[String]) =
-      scanFiles(spark, fs.map(new Path(table, _).toString), Some(mergeSchema))
-    if (snap.dels.isEmpty)
-      return toLogicalFrame(rd(files), m)
+      mergeSchema: Boolean = false,
+      unionFooters: Boolean = false): DataFrame = {
     val byFile = snap.delsByFile
     val groups =
-      files.groupBy(f => delSignature(byFile.getOrElse(f, Nil)))
-    groups.toSeq.sortBy(_._2.headOption.getOrElse("")).map {
-      case (_, fs) =>
-        applyDels(toLogicalFrame(rd(fs), m),
-          byFile.getOrElse(fs.head, Nil))
-    }.reduce(_.unionByName(_, allowMissingColumns = true))
+      if (snap.dels.isEmpty) Seq(files)
+      else files.groupBy(f => delSignature(byFile.getOrElse(f, Nil)))
+        .values.toSeq.sortBy(_.headOption.getOrElse(""))
+    def dvs(fs: Seq[String]) = byFile.getOrElse(fs.head, Nil)
+    val frames =
+      if (mergeSchema) groups.map(fs => fs -> scanFiles(spark,
+        fs.map(new Path(table, _).toString), Some(true)))
+      else {
+        val indexes = groups.map(fs =>
+          fs -> new TxFileIndex(spark, fs.map(new Path(table, _))))
+        val union =
+          if (unionFooters) indexes.head._2.footerSchema(all = true,
+            indexes.flatMap(_._2.allFiles()))
+          else None
+        indexes.map { case (fs, ix) => fs -> scanIndex(spark, ix, union) }
+      }
+    frames.map { case (fs, df) => applyDels(toLogicalFrame(df, m), dvs(fs)) }
+      .reduce(_.unionByName(_, allowMissingColumns = true))
   }
 
   /** The one scan of table-owned parquet files (data, change and view
     * files; absolute `paths`). `mergeSchema` defaults to the session's
     * `spark.sql.parquet.mergeSchema`, as for a plain parquet read.
-    * Without merging, Spark's inference reads just the footer of the
-    * first file by path name, in a Spark job of its own; these files
-    * are immutable, so that footer is read here on the driver instead
-    * and handed to the reader as its schema — the same schema, no job.
-    * Merging reads, no paths, or an unreadable first file keep Spark's
-    * inference (and its error reporting). */
+    * Without merging, the scan is a parquet relation over a
+    * [[TxFileIndex]] of exactly these files — no data-source lookup,
+    * no directory listing (and so no listing job, however many files)
+    * — whose schema is the footer of the first file by path name, the
+    * one Spark's own inference would read, read here on the driver.
+    * A missing file fails here, naming its path. Merging reads and no
+    * paths keep Spark's inference and its error reporting. */
   private[graft] def scanFiles(spark: SparkSession, paths: Seq[String],
       mergeSchema: Option[Boolean] = None): DataFrame = {
     val merging = mergeSchema.getOrElse(
       spark.conf.get("spark.sql.parquet.mergeSchema", "false").toBoolean)
-    val footer =
-      if (merging || paths.isEmpty) None
-      else org.apache.spark.sql.execution.datasources.parquet
-        .GraftFooterBridge.schemaOf(spark, paths)
-    footer.fold(spark.read.option("mergeSchema", merging))(spark.read.schema)
-      .parquet(paths: _*)
+    if (merging || paths.isEmpty)
+      spark.read.option("mergeSchema", merging).parquet(paths: _*)
+    else scanIndex(spark, new TxFileIndex(spark, paths.map(new Path(_))), None)
+  }
+
+  /** `index`'s files as a frame of `schema`, by default its first
+    * file's footer. A footer that cannot be read under
+    * `spark.sql.files.ignoreCorruptFiles` hands the read to Spark's
+    * inference, which skips the file its own way. */
+  private def scanIndex(spark: SparkSession, index: TxFileIndex,
+      schema: Option[org.apache.spark.sql.types.StructType]): DataFrame =
+    schema.orElse(index.footerSchema(all = false)) match {
+      case Some(s) => org.apache.spark.sql.execution.datasources.parquet
+        .GraftFooterBridge.frame(spark, index, s)
+      case None => spark.read.parquet(index.rootPaths.map(_.toString): _*)
+    }
+
+  /** The rows a rewrite of `files` of `snap` starts from: their
+    * VISIBLE rows (standing deletion predicates apply first, so a
+    * rewrite never resurrects hidden rows), in LOGICAL names, with the
+    * union of the files' footers — a column an append added survives
+    * the rewrite of files from before and after it. */
+  private def rewriteRows(spark: SparkSession, table: String,
+      snap: Snapshot, files: Seq[String]): DataFrame = {
+    if (files.isEmpty)
+      throw new IllegalArgumentException(s"version ${snap.version} is empty")
+    readFilesDv(spark, table, snap, files,
+      mappingAt(spark, table, Some(snap.version)), unionFooters = true)
   }
 
   /** The file system of every TxTable file operation: the fork-free
@@ -736,52 +772,148 @@ object TxTable {
     readFilesDv(spark, table, snap, snap.files, m, mergeSchema)
   }
 
-  /** Write `df`'s rows as new immutable files for `version`; returns
-    * their table-relative paths. Tasks write the files in place under
-    * data/ ([[TxParquetWriter]]): nothing reads them until a commit
-    * lists them, so readers never see them before that. The names
-    * carry a writer-unique tag and the task attempt: two writers
-    * racing to the same version never share a path, so the commit
-    * loser cannot clobber the winner's files. The loser's files, like
-    * those of a failed task attempt, stay in data/ unreferenced by any
-    * commit until [[vacuum]] reclaims them (past its `graceMs`). */
-  private[graft] def writeFiles(df: DataFrame, table: String,
-      version: Long): Seq[String] = {
+  /** Write `df`'s rows as new immutable files for `version`, in ONE
+    * Spark job. Tasks write the files in place ([[TxParquetWriter]]):
+    * nothing reads them until a commit lists them, so readers never
+    * see them before that. The names carry a writer-unique tag and the
+    * task attempt: two writers racing to the same version never share
+    * a path, so the commit loser cannot clobber the winner's files.
+    * The loser's files, like those of a failed task attempt, stay
+    * unreferenced by any commit until [[vacuum]] reclaims them (past
+    * its `graceMs`).
+    *
+    * The rows go to data/ (`data`), to the version's change files
+    * under _changes/ (`changes`; each row carries [[ChangeTypeCol]]),
+    * or, with both, to either by their [[OutCol]] — a DML's rewrite
+    * and its change rows are one job ([[armed]] builds such frames).
+    * Every data file records the `index` entries of its own rows,
+    * collected by the writing task. With `bucket` the data files take
+    * the ONE-BUCKET-PER-FILE layout a storage-partitioned join needs:
+    * rows cluster into `bucket.n` tasks on the bucket value and each
+    * task writes one file per bucket it holds, so every bucket lands
+    * in exactly one file; the bucket value is not stored (it derives
+    * from the data column, and the singleton value sets the SPJ scan
+    * groups by come from `index`). */
+  private[graft] def writeFiles(df: DataFrame, table: String, version: Long,
+      index: IndexCols = IndexCols.Empty, bucket: Option[PartBucket] = None,
+      data: Boolean = true, changes: Boolean = false): Written = {
+    import org.apache.spark.sql.functions.{col, lit}
+    require(data || changes)
     val spark = df.sparkSession
+    val routed = data && changes
+    val meta = Set(OutCol, ChangeTypeCol, BucketCol)
     // the df→file boundary: every writer hands in a LOGICAL frame;
-    // CHECK constraints gate here (in-plan, logical names), then
-    // files always store PHYSICAL names (ColumnMapping invariant)
-    val dfG = enforceConstraints(spark, table, df)
-    val dfP = mappingAt(spark, table).fold(dfG)(_.toPhysical(dfG))
-    TxParquetWriter(dfP, dataDir(table), s"v$version-${writerTag()}")
-      .map("data/" + _)
+    // CHECK constraints gate its data rows here (in-plan, logical
+    // names), then files always store PHYSICAL names (ColumnMapping
+    // invariant; the meta columns are unmapped and pass through)
+    val dfG = if (!data) df
+      else enforceConstraints(spark, table, df,
+        if (routed) col(OutCol) === 0 else lit(true))
+    // the bucket expression names the LOGICAL column — derive it
+    // BEFORE physicalization (a renamed source column no longer
+    // exists after toPhysical)
+    val dfB = bucket.fold(dfG)(t => dfG.withColumn(BucketCol, t.expr))
+    val dfP = mappingAt(spark, table).fold(dfB)(_.toPhysical(dfB))
+    val phys = dfP.columns.toSeq.filterNot(meta)
+    val lead = Seq(OutCol).filter(_ => routed) ++ bucket.map(_ => BucketCol)
+    val trail = Seq(ChangeTypeCol).filter(_ => changes)
+    val rows = dfP.select((lead ++ phys ++ trail).map(col): _*)
+    val dataSchema = org.apache.spark.sql.types.StructType(phys.map(dfP.schema(_)))
+    val tag = writerTag()
+    val outs =
+      (if (!data) Nil else Seq(TxParquetWriter.Out(dataDir(table).toString,
+        s"v$version-$tag", dataSchema, TxIndexProbe(spark,
+          org.apache.spark.sql.types.StructType(df.schema.filterNot(f => meta(f.name))),
+          index)))) ++
+      (if (!changes) Nil else Seq(TxParquetWriter.Out(changesDir(table).toString,
+        s"c$version-$tag", dataSchema.add(dfP.schema(ChangeTypeCol)))))
+    val written = TxParquetWriter(
+      bucket.fold(rows)(t => rows.repartition(t.n, col(BucketCol))), outs,
+      bucket.map(_ => BucketCol))
+    Written(if (data) written.head else Nil,
+      if (changes) written.last.map(_.path) else Nil)
   }
 
   private def writerTag(): String =
     java.util.UUID.randomUUID().toString.take(8)
 
-  /** [[writeFiles]] with the ONE-BUCKET-PER-FILE layout a
-    * storage-partitioned join needs: rows cluster into `t.n` tasks on
-    * the bucket value and each task writes one file per bucket it
-    * holds, so every bucket lands in exactly one file — the bucket
-    * value is NOT stored in the file (it derives from the data
-    * column; [[recomputeMetadata]] re-derives the singleton value
-    * sets the SPJ scan groups by). Same in-place, tagged discipline
-    * as [[writeFiles]]. */
-  private[graft] def writeFilesBucketed(df: DataFrame, table: String,
-      version: Long, t: PartBucket): Seq[String] = {
-    import org.apache.spark.sql.functions.col
-    val spark = df.sparkSession
-    val dfG = enforceConstraints(spark, table, df)
-    // the bucket expression names the LOGICAL column — derive it
-    // BEFORE physicalization (a renamed source column no longer
-    // exists after toPhysical; the helper column itself is unmapped
-    // and passes through untouched)
-    val dfB = dfG.withColumn("__graft_bucket", t.expr)
-    val dfP = mappingAt(spark, table).fold(dfB)(_.toPhysical(dfB))
-    TxParquetWriter(dfP.repartition(t.n, col("__graft_bucket")),
-      dataDir(table), s"v$version-${writerTag()}",
-      bucketCol = Some("__graft_bucket")).map("data/" + _)
+  /** A routed [[writeFiles]] row's output: 0 = data, 1 = change. */
+  private[graft] val OutCol = "__graft_out"
+  private val BucketCol = "__graft_bucket"
+
+  /** What one [[writeFiles]] job wrote: the data files with their row
+    * counts and index entries, and the change files (table-relative). */
+  private[graft] case class Written(data: Seq[TxWritten],
+      changes: Seq[String]) {
+    def paths: Seq[String] = data.map(_.path)
+  }
+
+  /** The index columns a write records per data file: the single
+    * [[overwriteIndexed]] column, the multi-column stats and the value
+    * sets (partition transform entries such as "days(ts)" included),
+    * with value sets capped at `cap` distinct values. */
+  private[graft] case class IndexCols(statsCol: Option[String] = None,
+      statCols: Seq[String] = Nil, valueCols: Seq[String] = Nil,
+      cap: Int = 16)
+
+  private[graft] object IndexCols {
+    val Empty: IndexCols = IndexCols()
+  }
+
+  /** The index columns `s` tracks, plus `addValueCols` — what a rewrite
+    * of `s`'s files records so the table's data-skipping index stays
+    * alive (Delta's OPTIMIZE/DML recompute stats the same way). */
+  private[graft] def indexCols(s: Snapshot,
+      addValueCols: Seq[String] = Nil): IndexCols =
+    IndexCols(s.statsCol,
+      s.multiStats.values.flatMap(_.keys).toSeq.distinct.sorted,
+      (s.fileValues.values.flatMap(_.keys).toSeq ++ addValueCols)
+        .distinct.sorted)
+
+  /** `next` plus the index entries its freshly written `files` carry
+    * over the columns `cols` names: the single stats column's spans,
+    * and — when `cols` names any multi-column stats or value sets —
+    * those. A file with no rows records nothing (always a candidate).
+    * Blooms are not rebuilt: a fresh file without one is always a
+    * candidate. Entries of files `next` no longer lists drop in
+    * [[commit]]. */
+  private[graft] def withIndex(next: Snapshot, cols: IndexCols,
+      files: Seq[TxWritten]): Snapshot = {
+    val rows = files.filter(_.rows > 0)
+    val multi = cols.statCols.nonEmpty || cols.valueCols.nonEmpty
+    next.copy(
+      stats = cols.statsCol.fold(next.stats)(sc => next.stats ++
+        rows.flatMap(w => w.stats.get(sc).map(w.path -> _))),
+      multiStats = if (!multi) next.multiStats else next.multiStats ++
+        rows.map(w => w.path -> w.stats.filter(e => cols.statCols.contains(e._1))),
+      fileValues = if (!multi) next.fileValues else next.fileValues ++
+        rows.map(w => w.path -> w.values))
+  }
+
+  /** One output row of [[armed]]: for each input row where `when`
+    * holds, a row of `values` routed to output `out` (0 = data, 1 =
+    * change) with change type `changeType`. */
+  private case class Arm(out: Int, when: org.apache.spark.sql.Column,
+      values: Seq[org.apache.spark.sql.Column], changeType: String = null)
+
+  /** The rows `arms` make of `df`'s rows, named `cols`, in ONE pass
+    * over `df`: with any change arm, [[OutCol]] + `cols` +
+    * [[ChangeTypeCol]], the frame a routed [[writeFiles]] takes; with
+    * only a data arm, its rows as a plain frame. */
+  private def armed(df: DataFrame, cols: Seq[String],
+      arms: Seq[Arm]): DataFrame = {
+    import org.apache.spark.sql.functions.{array, col, explode, lit, struct, when}
+    def named(vs: Seq[org.apache.spark.sql.Column]) =
+      vs.zip(cols).map { case (v, c) => v.as(c) }
+    arms match {
+      case Seq(a) if a.out == 0 => df.filter(a.when).select(named(a.values): _*)
+      case _ =>
+        val rows = arms.map(a => when(a.when, struct(
+          (lit(a.out).as(OutCol) +: named(a.values)) :+
+            lit(a.changeType).cast("string").as(ChangeTypeCol): _*)))
+        df.select(explode(array(rows: _*)).as("__row"))
+          .filter(col("__row").isNotNull).select("__row.*")
+    }
   }
 
   /** The change-type metadata column carried inside recorded change
@@ -815,23 +947,6 @@ object TxTable {
 
   def changeFeedEnabled(spark: SparkSession, table: String): Boolean =
     fs(spark, logDir(table)).exists(cdfMarkerPath(table))
-
-  /** Write `df` (data columns + [[ChangeTypeCol]]) as `version`'s
-    * change files under `_changes/` — written in place and tagged like
-    * [[writeFiles]], so racing writers never share a path. Returns
-    * table-relative paths; the caller records them in the manifest it
-    * commits (change files an uncommitted loser wrote stay
-    * unreferenced until vacuum). */
-  private[sources] def writeChangeFiles(df: DataFrame, table: String,
-      version: Long): Seq[String] = {
-    val spark = df.sparkSession
-    // change files store physical names like data files (the meta
-    // _change_type column passes through identity); changeFeed maps
-    // them back to logical at read time
-    val dfP = mappingAt(spark, table).fold(df)(_.toPhysical(df))
-    TxParquetWriter(dfP, changesDir(table), s"c$version-${writerTag()}")
-      .map("_changes/" + _)
-  }
 
   /** JSON string escape for manifest bodies — partition VALUES are
     * data-derived, so quotes/backslashes/control chars must encode. */
@@ -1324,14 +1439,17 @@ object TxTable {
     * with a named error carrying the row (Delta's
     * DELTA_VIOLATE_CONSTRAINT shape) — the table never sees them. */
   private def enforceConstraints(spark: SparkSession, table: String,
-      df: DataFrame): DataFrame = {
-    import org.apache.spark.sql.functions.{coalesce, concat, expr, lit, raise_error, struct, to_json, when}
+      df: DataFrame, isData: org.apache.spark.sql.Column): DataFrame = {
+    import org.apache.spark.sql.functions.{coalesce, concat, expr, lit, not, raise_error, struct, to_json, when}
+    // only data rows are gated: a routed frame's change rows are old
+    // rows or copies of its data rows
+    val shown = df.columns.toSeq.filterNot(Set(OutCol, ChangeTypeCol))
     constraints(spark, table).foldLeft(df) { case (acc, (n, e)) =>
       acc.filter(
-        when(coalesce(expr(e), lit(true)), lit(true))
+        when(not(isData) || coalesce(expr(e), lit(true)), lit(true))
           .otherwise(raise_error(concat(
             lit(s"CHECK constraint '$n' violated ($e) at $table, row: "),
-            to_json(struct(acc.columns.toSeq.map(
+            to_json(struct(shown.map(
               org.apache.spark.sql.functions.col): _*))))))
     }
   }
@@ -1423,7 +1541,7 @@ object TxTable {
     val next = snapshot(spark, table).getOrElse(Snapshot.Empty)
       .next("overwrite")
     commit(spark, table,
-      next.copy(files = writeFiles(df, table, next.version)))
+      next.copy(files = writeFiles(df, table, next.version).paths))
     next.version
   }
 
@@ -1473,7 +1591,7 @@ object TxTable {
     val next = snapshot(spark, table).getOrElse(Snapshot.Empty)
       .next("append")
     commit(spark, table, next.copy(
-      files = next.files ++ writeFiles(df, table, next.version)))
+      files = next.files ++ writeFiles(df, table, next.version).paths))
     widenDeclared(spark, table, df)
     next.version
   }
@@ -1502,8 +1620,8 @@ object TxTable {
     * semantics are the same anti-join+union as `q_cdc_apply`; what
     * this adds is the atomicity — a reader mid-merge sees version N
     * or N+1, never a mixture. The table's index follows the rewrite:
-    * stats and value sets are recomputed over the fresh files
-    * ([[indexFiles]]); blooms drop, as in every copy-on-write. */
+    * the writing tasks record stats and value sets of the fresh files
+    * ([[withIndex]]); blooms drop, as in every copy-on-write. */
   def merge(spark: SparkSession, table: String, updates: DataFrame,
       key: String): Long =
     mergeByKey(spark, table, updates, key, "merge", None, None)
@@ -1567,46 +1685,66 @@ object TxTable {
       batch: DataFrame, key: String, op: String, opCol: Option[String],
       scope: Option[(Seq[(String, Double, Double)], Seq[(String, String)])]
       ): Long = {
-    import org.apache.spark.sql.functions.{broadcast, coalesce, col, lit, not}
+    import org.apache.spark.sql.functions.{broadcast, coalesce, col, lit, max, not}
     val cur = snapshot(spark, table)
     val upserts = opCol.fold(batch)(o => batch.filter(col(o) =!= "d").drop(o))
     val inScope = scope.map { case (ranges, eqs) =>
       coalesce(predicateColumn(ranges, eqs), lit(false))
     }
+    val feed = changeFeedEnabled(spark, table)
 
-    // the change-feed delta (opt-in), ONE recording for both
-    // strategies (`read` is dv-aware, so images are the VISIBLE rows):
-    // keys present on both sides pair as update_preimage (current
-    // rows) / update_postimage (upsert rows); upsert keys only in the
-    // batch are inserts; a "d" op on an existing key emits its current
-    // rows as deletes (a "d" on an absent key changes nothing, so it
-    // records nothing); scoped rows whose key vanished are deletes.
-    // Only the arms that apply are built — semi/anti joins against
-    // key sets, broadcastable exactly when the merge itself is, never
-    // wider than the delta.
-    def changeFiles(v: Long): Seq[String] =
-      if (!changeFeedEnabled(spark, table)) Nil
-      else writeChangeFiles(cur match {
-        case None => upserts.withColumn(ChangeTypeCol, lit("insert"))
-        case Some(_) =>
-          val current = read(spark, table)
-          val curKeys = current.select(col(key)).distinct()
-          def arm(rows: DataFrame, kind: String) =
-            rows.withColumn(ChangeTypeCol, lit(kind))
-          val deleted = opCol.map(o => arm(current.join(
-            batch.filter(col(o) === "d").select(col(key)).distinct(),
-            Seq(key), "left_semi"), "delete"))
-          val vanished = inScope.map(p => arm(current.filter(p)
-            .join(batch.select(col(key)).distinct(), Seq(key), "left_anti"),
-            "delete"))
-          (deleted.toSeq ++ Seq(
-            arm(current.join(upserts.select(col(key)).distinct(), Seq(key),
-              "left_semi"), "update_preimage"),
-            arm(upserts.join(curKeys, Seq(key), "left_semi"),
-              "update_postimage"),
-            arm(upserts.join(curKeys, Seq(key), "left_anti"), "insert")) ++
-            vanished).reduce(_.unionByName(_, allowMissingColumns = true))
-      }, table, v)
+    // The rows of the commit's ONE write job, one pass over each side:
+    // the current rows whose key is not in the batch (carried, only for
+    // copy-on-write; a scope also drops the vanished ones), every
+    // upsert row, and with the change feed on the version's delta,
+    // ONE recording for both strategies (`read` is dv-aware, so images
+    // are the VISIBLE rows): current rows of upserted keys are
+    // update_preimage, upsert rows whose key exists are
+    // update_postimage and the others insert, and current rows whose
+    // key leaves without an upsert ("d" or NULL op), or vanished from
+    // the scope, are delete (a "d" on an absent key records nothing).
+    def rows(carry: Boolean): DataFrame = {
+      val current = cur.filter(_.files.nonEmpty)
+        .map(c => rewriteRows(spark, table, c, c.files))
+      if (!feed) {
+        // every batch key (upserted, deleted or NULL-op) leaves the
+        // current image; a scope also drops the vanished rows
+        val carried = current.filter(_ => carry).map { c =>
+          val kept = c.join(batch.select(col(key)).distinct(), Seq(key), "left_anti")
+          inScope.fold(kept)(p => kept.filter(not(p)))
+        }
+        carried.fold(upserts)(_.unionByName(upserts, allowMissingColumns = true))
+      } else {
+        // `__up`: whether an upsert row re-enters the key (false for a
+        // "d" or NULL op); NULL for a current key the batch lacks
+        val batchKeys = opCol.fold(
+          batch.select(col(key)).distinct().withColumn("__up", lit(true)))(o =>
+          batch.groupBy(col(key))
+            .agg(max(coalesce(col(o) =!= "d", lit(false))).as("__up")))
+        val inBatch = col("__up").isNotNull
+        val fromCurrent = current.map { c =>
+          val values = c.columns.toSeq.map(col)
+          val vanished = inScope.fold(lit(false))(p => not(inBatch) && p)
+          armed(c.join(batchKeys, Seq(key), "left"), c.columns.toSeq,
+            (if (carry) Seq(Arm(0, not(inBatch) && not(vanished), values))
+             else Nil) ++ Seq(
+              Arm(1, inBatch && col("__up"), values, "update_preimage"),
+              Arm(1, (inBatch && not(col("__up"))) || vanished, values,
+                "delete")))
+        }
+        val hits = current.fold(upserts.withColumn("__hit", lit(null).cast("boolean"))) {
+          c => upserts.join(c.join(batchKeys, Seq(key), "left_semi")
+            .select(col(key)).distinct().withColumn("__hit", lit(true)),
+            Seq(key), "left")
+        }
+        val cols = upserts.columns.toSeq
+        val fromBatch = armed(hits, cols, Seq(Arm(0, lit(true), cols.map(col)),
+          Arm(1, col("__hit").isNotNull, cols.map(col), "update_postimage"),
+          Arm(1, col("__hit").isNull, cols.map(col), "insert")))
+        fromCurrent.fold(fromBatch)(_.unionByName(fromBatch,
+          allowMissingColumns = true))
+      }
+    }
 
     // merge-on-read; None falls back to copy-on-write
     def mergeOnRead(c: Snapshot): Option[Long] = {
@@ -1653,14 +1791,15 @@ object TxTable {
         else candidateFiles(c, ranges, canonicalValueEq(spark, table, c, eqs))
           .intersect(candidateFilesForKeys(c, key, vanKeys, keyType))
           .map(f => DelEntry(f, ranges, eqs, Seq(key -> vanKeys)))
-      // change feed first: it reads the PRE-merge (visible) table
-      val changes = changeFiles(v)
-      val fresh = writeFilesDispatch(upserts, table, v)
-      // fresh post-image files get index metadata over the same tracked
-      // columns (old files' entries stay valid as supersets)
-      commit(spark, table, indexFiles(spark, table,
-        c.next(op, changes).copy(files = c.files ++ fresh,
-          dels = c.dels ++ hideDels ++ syncDels), fresh))
+      // fresh post-image files keep the declared bucket layout and get
+      // index entries over the same tracked columns (old files' entries
+      // stay valid as supersets)
+      val index = indexCols(c)
+      val w = writeFiles(rows(carry = false), table, v, index,
+        declaredBucket(spark, table), changes = feed)
+      commit(spark, table, withIndex(c.next(op, w.changes).copy(
+        files = c.files ++ w.paths, dels = c.dels ++ hideDels ++ syncDels),
+        index, w.data))
       Some(v)
     }
 
@@ -1668,21 +1807,13 @@ object TxTable {
       .filter(c => c.files.nonEmpty && deletionVectorsEnabled(spark, table))
       .flatMap(mergeOnRead)
       .getOrElse {
-        val next = cur.getOrElse(Snapshot.Empty).next(op)
-        val merged = cur match {
-          case None => upserts
-          case Some(_) =>
-            // every batch key (upserted, deleted or NULL-op) leaves the
-            // current image; a scope also drops the vanished rows
-            val carried = read(spark, table)
-              .join(batch.select(col(key)).distinct(), Seq(key), "left_anti")
-            inScope.fold(carried)(p => carried.filter(not(p)))
-              .unionByName(upserts, allowMissingColumns = true)
-        }
-        val changes = changeFiles(next.version)
-        val files = writeFiles(merged, table, next.version)
-        commit(spark, table, indexFiles(spark, table,
-          next.copy(files = files, changes = changes), files))
+        val prev = cur.getOrElse(Snapshot.Empty)
+        val next = prev.next(op)
+        val index = indexCols(prev)
+        val w = writeFiles(rows(carry = true), table, next.version, index,
+          changes = feed)
+        commit(spark, table, withIndex(
+          next.copy(files = w.paths, changes = w.changes), index, w.data))
         next.version
       }
     widenDeclared(spark, table, upserts)
@@ -1968,7 +2099,7 @@ object TxTable {
       val cur = snapshot(spark, table).getOrElse(Snapshot.Empty)
       if (cur.txns.get(appId).exists(_ >= epochId)) return false
       val next = cur.next("append")
-      val files = writeFiles(df, table, next.version)
+      val files = writeFiles(df, table, next.version).paths
       try {
         // index metadata carries forward exactly as in append: the
         // described files remain live, new files are simply unindexed
@@ -2019,11 +2150,11 @@ object TxTable {
     // collapse a small table to ONE file, which defeats the stats
     val nParts = math.max(2,
       spark.sessionState.conf.numShufflePartitions)
-    val files = writeFiles(df.repartitionByRange(nParts, c(col)), table,
-      next.version)
-    val (ms, _) = recomputeMetadata(spark, table, files, Seq(col), Nil)
-    commit(spark, table, next.copy(files = files, statsCol = Some(col),
-      stats = ms.flatMap { case (f, m) => m.get(col).map(f -> _) }))
+    val index = IndexCols(statsCol = Some(col))
+    val w = writeFiles(df.repartitionByRange(nParts, c(col)), table,
+      next.version, index)
+    commit(spark, table, withIndex(next.copy(files = w.paths,
+      statsCol = Some(col)), index, w.data))
     next.version
   }
 
@@ -2079,12 +2210,11 @@ object TxTable {
     val nParts = math.max(2,
       spark.sessionState.conf.numShufflePartitions)
     val cluster = (valueCols ++ statCols).map(c)
-    val files = writeFiles(
-      df.repartitionByRange(nParts, cluster: _*), table, next.version)
-    val (ms, fv) = recomputeMetadata(spark, table, files, statCols,
-      valueCols, maxValuesPerFile)
-    commit(spark, table, next.copy(files = files, multiStats = ms,
-      fileValues = fv))
+    val index = IndexCols(None, statCols, valueCols, maxValuesPerFile)
+    val w = writeFiles(df.repartitionByRange(nParts, cluster: _*), table,
+      next.version, index)
+    commit(spark, table, withIndex(next.copy(files = w.paths,
+      multiStats = Map.empty, fileValues = Map.empty), index, w.data))
     next.version
   }
 
@@ -2132,15 +2262,17 @@ object TxTable {
     // cluster on the partition transforms so each new file is tight
     // in them (value sets recorded below make the NEXT overwrite
     // prune) — a days(ts) table clusters whole days per file
-    val next0 = snapshot(spark, table).map(_.version + 1).getOrElse(1L)
+    val cur = snapshot(spark, table).getOrElse(Snapshot.Empty)
+    val index = indexCols(cur, transforms.map(_.name))
     val fresh = transforms match {
       // bucket layout: one bucket per file (the SPJ invariant)
-      case Seq(b: PartBucket) => writeFilesBucketed(df, table, next0, b)
+      case Seq(b: PartBucket) =>
+        writeFiles(df, table, cur.version + 1, index, Some(b))
       case _ => writeFiles(
         df.repartitionByRange(nParts, transforms.map(_.expr): _*),
-        table, next0)
+        table, cur.version + 1, index)
     }
-    dynamicOverwriteCommit(spark, table, fresh, partCols, maxPartitions)
+    dynamicOverwriteCommit(spark, table, fresh.data, partCols, maxPartitions)
   }
 
   /** Commit an already-written replacement file set as a dynamic
@@ -2154,7 +2286,7 @@ object TxTable {
     * time — racing writers contend on the protocol and the loser's
     * staged files stay unreferenced, like every other path. */
   private[sources] def dynamicOverwriteCommit(spark: SparkSession,
-      table: String, fresh: Seq[String], partCols: Seq[String],
+      table: String, freshFiles: Seq[TxWritten], partCols: Seq[String],
       maxPartitions: Int = 10000,
       extraTuples: Seq[Seq[String]] = Nil,
       addTxns: Map[String, Long] = Map.empty,
@@ -2185,6 +2317,7 @@ object TxTable {
     // (explicitly-named partitions to replace even with no incoming
     // rows — the emptied-group delete of partial IVM) keep the
     // commit alive without fresh files.
+    val fresh = freshFiles.map(_.path)
     if (fresh.isEmpty && extraTuples.isEmpty) return cur.version
     // fresh files came through writeFiles / the physicalized V2
     // factory, so they store physical names; partCols are logical —
@@ -2245,36 +2378,27 @@ object TxTable {
         incoming.map(t => org.apache.spark.sql.Row.fromSeq(t)), 1),
       org.apache.spark.sql.types.StructType(transforms.indices.map(i =>
         org.apache.spark.sql.types.StructField(s"__k$i",
-          org.apache.spark.sql.types.StringType)))))
+          org.apache.spark.sql.types.StringType))))
+      .withColumn("__rep", lit(true)))
     val joinKeys = transforms.indices.map(i => s"__k$i")
     def withKeys(df: DataFrame): DataFrame =
       transforms.zipWithIndex.foldLeft(df) { case (acc, (t, i)) =>
         acc.withColumn(s"__k$i", t.expr) }
-    // standing deletion predicates on touched files apply first, so
-    // the remainder rewrite never resurrects hidden rows
-    val touchedDf = () => readFilesDv(spark, table, cur, touched, dynMapping)
-    val changeFiles: Seq[String] =
-      if (!changeFeedEnabled(spark, table)) Nil
-      else if (fresh.isEmpty && touched.isEmpty) Nil
-      else {
-        val dels =
-          if (touched.isEmpty) freshDf().limit(0)
-            .withColumn(ChangeTypeCol, lit("delete"))
-          else withKeys(touchedDf())
-            .join(tupleDf, joinKeys, "left_semi")
-            .drop(joinKeys: _*)
-            .withColumn(ChangeTypeCol, lit("delete"))
-        val ins =
-          if (fresh.isEmpty) dels.limit(0)
-          else freshDf().withColumn(ChangeTypeCol, lit("insert"))
-        writeChangeFiles(dels.unionByName(ins), table, next.version)
-      }
-    val remainder: Seq[String] =
-      if (touched.isEmpty) Nil
-      else writeFiles(
-        withKeys(touchedDf())
-          .join(tupleDf, joinKeys, "left_anti")
-          .drop(joinKeys: _*), table, next.version)
+    // ONE job writes the remainder and, with the feed on, the replaced rows as
+    // `delete` and the incoming frame as `insert`.
+    val feed = changeFeedEnabled(spark, table) &&
+      (fresh.nonEmpty || touched.nonEmpty)
+    val fromTouched = if (touched.isEmpty) None else {
+      val t = withKeys(rewriteRows(spark, table, cur, touched))
+      val cols = t.columns.toSeq.filterNot(joinKeys.contains)
+      val tj = t.join(tupleDf, joinKeys, "left")
+      val replaced = org.apache.spark.sql.functions.col("__rep").isNotNull
+      val values = cols.map(org.apache.spark.sql.functions.col)
+      Some(armed(tj, cols, Arm(0, !replaced, values) +:
+        (if (feed) Seq(Arm(1, replaced, values, "delete")) else Nil)))
+    }
+    val inserts = if (!feed || fresh.isEmpty) None else Some(freshDf()
+      .withColumn(OutCol, lit(1)).withColumn(ChangeTypeCol, lit("insert")))
     // every index entry (blooms included) carries over on untouched
     // files and is recomputed over the tracked columns plus the
     // partition transforms on rewritten+fresh ones — copyOnWrite's
@@ -2282,10 +2406,17 @@ object TxTable {
     // disabled point-lookup/range pruning after one dynamic overwrite
     // on an indexed table); rewritten/fresh files get no bloom
     // (absent → never pruned → still correct)
-    commit(spark, table, indexFiles(spark, table,
-      next.copy(files = untouched ++ remainder ++ fresh,
-        txns = cur.txns ++ addTxns, changes = changeFiles),
-      remainder ++ fresh, transforms.map(_.name)))
+    val index = indexCols(cur, transforms.map(_.name))
+    val w = (fromTouched ++ inserts).reduceOption(
+      _.unionByName(_, allowMissingColumns = true)) match {
+      case None => Written(Nil, Nil)
+      case Some(rows) => writeFiles(rows, table, next.version, index,
+        data = touched.nonEmpty, changes = feed)
+    }
+    commit(spark, table, withIndex(
+      next.copy(files = untouched ++ w.paths ++ fresh,
+        txns = cur.txns ++ addTxns, changes = w.changes),
+      index, w.data ++ freshFiles))
     next.version
   }
 
@@ -2303,15 +2434,16 @@ object TxTable {
     val next = snapshot(spark, table).getOrElse(Snapshot.Empty)
       .next("append")
     val nParts = math.max(2, spark.sessionState.conf.numShufflePartitions)
-    val files = transforms match {
+    val index = indexCols(next, transforms.map(_.name))
+    val w = transforms match {
       // bucket layout: one bucket per file (the SPJ invariant)
-      case Seq(b: PartBucket) => writeFilesBucketed(df, table, next.version, b)
+      case Seq(b: PartBucket) => writeFiles(df, table, next.version, index, Some(b))
       case _ => writeFiles(
         df.repartitionByRange(nParts, transforms.map(_.expr): _*),
-        table, next.version)
+        table, next.version, index)
     }
-    commit(spark, table, indexFiles(spark, table,
-      next.copy(files = next.files ++ files), files, transforms.map(_.name)))
+    commit(spark, table, withIndex(
+      next.copy(files = next.files ++ w.paths), index, w.data))
     next.version
   }
 
@@ -2632,7 +2764,7 @@ object TxTable {
   /** `bucket(n, col)` — Iceberg's bucket transform over Spark's own
     * Murmur3 (`functions.hash`, seed 42): partition value =
     * `pmod(hash(col), n)` as a canonical string. The write path lays
-    * out ONE bucket per file ([[writeFilesBucketed]]), which is what
+    * out ONE bucket per file ([[writeFiles]]' `bucket`), which is what
     * lets the SQL scan report `KeyGroupedPartitioning` and two
     * same-bucketed tables join with ZERO Exchange (storage-partitioned
     * join). Derivation matches [[TxPartitionFunctions.Bucket]]
@@ -2694,7 +2826,7 @@ object TxTable {
       .next("overwrite")
     val nParts = math.max(2, spark.sessionState.conf.numShufflePartitions)
     val files = writeFiles(df.repartition(nParts, c(col)), table,
-      next.version)
+      next.version).paths
     commit(spark, table, next.copy(files = files, bloomCol = Some(col),
       blooms = buildBlooms(spark, table, files, col, fpp)))
     next.version
@@ -2811,12 +2943,13 @@ object TxTable {
       .next("overwrite")
     val nParts = math.max(2, spark.sessionState.conf.numShufflePartitions)
     val (zdf, helpers, z) = Layout.withMortonCode(df, colA, colB)
-    val files = writeFiles(
+    val index = IndexCols(statCols = Seq(colA, colB))
+    val w = writeFiles(
       zdf.repartitionByRange(nParts, c(z))
         .sortWithinPartitions(c(z))
-        .drop(helpers: _*), table, next.version)
-    val (ms, _) = recomputeMetadata(spark, table, files, Seq(colA, colB), Nil)
-    commit(spark, table, next.copy(files = files, multiStats = ms))
+        .drop(helpers: _*), table, next.version, index)
+    commit(spark, table, withIndex(
+      next.copy(files = w.paths, multiStats = Map.empty), index, w.data))
     next.version
   }
 
@@ -2939,126 +3072,49 @@ object TxTable {
     snap.files.filter(f => viaMulti(f) && viaSingle(f))
   }
 
-  /** Per-file manifest metadata of freshly written files — the ONE
-    * per-file aggregation: (min, max) of each of `statCols` and the
-    * value set of each of `valueCols`, in one pass grouped by file.
-    * A file whose stat column holds only NULLs records no span for it
-    * (it stays a candidate for every range); value sets above
-    * `maxValuesPerFile` distinct values record nothing for that (file,
-    * column). */
-  private def recomputeMetadata(spark: SparkSession, table: String,
-      files: Seq[String], statCols: Seq[String], valueCols: Seq[String],
-      maxValuesPerFile: Int = 16):
-      (Map[String, Map[String, (Double, Double)]],
-        Map[String, Map[String, Set[String]]]) = {
-    import org.apache.spark.sql.functions.{col => c, collect_set, input_file_name, max => fmax, min => fmin}
-    if (files.isEmpty || (statCols.isEmpty && valueCols.isEmpty))
-      return (Map.empty, Map.empty)
-    val byName = files.map(f => f.split('/').last -> f).toMap
-    val aggs =
-      statCols.flatMap(s => Seq(
-        fmin(c(s)).cast("double").as(s"__mn_$s"),
-        fmax(c(s)).cast("double").as(s"__mx_$s"))) ++
-      // value entries may be transforms ("days(ts)"): the recorded
-      // set is the transform's derived canonical strings; plain
-      // column names parse to identity (= the previous cast)
-      valueCols.map(v =>
-        collect_set(PartTransform.parse(v).expr).as(s"__vs_$v"))
-    val rows = toLogicalFrame(
-      scanFiles(spark, files.map(new Path(table, _).toString)),
-      mappingAt(spark, table))
-      .groupBy(input_file_name().as("__f"))
-      .agg(aggs.head, aggs.tail: _*)
-      .collect()
-    val ms = rows.flatMap { r =>
-      byName.get(r.getString(0).split('/').last).map { f =>
-        f -> statCols.filterNot(s => r.isNullAt(r.fieldIndex(s"__mn_$s")))
-          .map(s => s ->
-            (r.getAs[Double](s"__mn_$s"), r.getAs[Double](s"__mx_$s"))).toMap
-      }
-    }.toMap
-    val fv = rows.flatMap { r =>
-      byName.get(r.getString(0).split('/').last).map { f =>
-        f -> valueCols.flatMap { v =>
-          val vs = r.getAs[scala.collection.Seq[String]](s"__vs_$v").toSet
-          if (vs.size <= maxValuesPerFile) Some(v -> vs) else None
-        }.toMap
-      }
-    }.toMap
-    (ms, fv)
-  }
-
-  /** `next` plus index entries for its freshly written `files` over
-    * every index column `next` tracks — the single stats column, the
-    * multi-column stats and the value sets, plus `addValueCols` — from
-    * ONE [[recomputeMetadata]] pass, so a rewrite keeps the table's
-    * data-skipping index alive (Delta's OPTIMIZE/DML recompute stats
-    * the same way). Blooms are not rebuilt: a fresh file without one
-    * is always a candidate. Entries of files `next` no longer lists
-    * drop in [[commit]]. */
-  private def indexFiles(spark: SparkSession, table: String,
-      next: Snapshot, files: Seq[String],
-      addValueCols: Seq[String] = Nil): Snapshot = {
-    val statCols = next.multiStats.values.flatMap(_.keys).toSeq.distinct
-    val valueCols =
-      (next.fileValues.values.flatMap(_.keys).toSeq ++ addValueCols).distinct
-    val (ms, fv) = recomputeMetadata(spark, table, files,
-      (statCols ++ next.statsCol).distinct.sorted, valueCols.sorted)
-    val multi = statCols.nonEmpty || valueCols.nonEmpty
-    next.copy(
-      stats = next.statsCol.fold(next.stats)(sc => next.stats ++
-        ms.flatMap { case (f, m) => m.get(sc).map(f -> _) }),
-      multiStats = if (!multi) next.multiStats else next.multiStats ++
-        ms.map { case (f, m) => f -> m.filter(e => statCols.contains(e._1)) },
-      fileValues = if (!multi) next.fileValues else next.fileValues ++ fv)
-  }
-
   /** Shared copy-on-write DML core: files the manifest metadata can
     * prove hold NO matching row carry over into the next version
     * untouched (same bytes, same paths — at 100 TB a one-partition
     * delete rewrites that partition's files, not the table); candidate
-    * files are re-read, transformed by `rewrite`, and written fresh.
-    * Per-file metadata survives: carried-over files keep their
-    * recorded entries, rewritten files get recomputed ones over the
-    * same columns. Returns (version, candidates, total). */
+    * files are re-read and written fresh as `arms` make their rows,
+    * given the candidate frame's columns: the data arm is the rewrite,
+    * the change arms the version's row-level delta, kept only when the
+    * change feed is on. Both come from ONE pass over the candidates in
+    * ONE write job, and the same prune bounds the change rows, so a
+    * one-partition delete records one partition's changes. Per-file
+    * metadata survives: carried-over files keep their recorded
+    * entries, rewritten files get fresh ones over the same columns
+    * from the writing tasks. Returns (version, candidates, total). */
   private def copyOnWrite(spark: SparkSession, table: String,
       ranges: Seq[(String, Double, Double)],
-      valueEq: Seq[(String, String)],
-      rewrite: DataFrame => DataFrame,
-      op: String = "write",
-      changeRows: DataFrame => DataFrame = null): (Long, Int, Int) = {
+      valueEq: Seq[(String, String)], op: String,
+      arms: Seq[String] => Seq[Arm]): (Long, Int, Int) = {
     val cur = snapshot(spark, table).getOrElse(
       throw new IllegalArgumentException(s"no committed version at $table"))
-    val v = cur.version + 1
+    val next = cur.next(op)
     // prune with CANONICAL probe values (see canonicalValueEq): a
     // wrong prune here would silently skip rows the DML should touch
     val touched =
       candidateFiles(cur, ranges, canonicalValueEq(spark, table, cur, valueEq))
     val untouched = cur.files.filterNot(touched.toSet)
-    // change feed (opt-in): `changeRows` maps the TOUCHED-files frame
-    // to the version's row-level delta (+ _change_type) — the same
-    // prune bounds the change write, so a one-partition delete
-    // records one partition's changes, never the table's.
-    // touchedDf serves LOGICAL names: the rewrite/changeRows closures
-    // come from user predicates; writeFiles re-physicalizes. Standing
-    // deletion predicates apply FIRST — a rewrite of a DV'd file must
-    // start from its VISIBLE rows, never resurrect hidden ones.
-    val cowMapping = mappingAt(spark, table, Some(cur.version))
-    val touchedDf = () => readFilesDv(spark, table, cur, touched, cowMapping)
-    val changeFiles: Seq[String] =
-      if (changeRows == null || touched.isEmpty ||
-        !changeFeedEnabled(spark, table)) Nil
-      else writeChangeFiles(changeRows(touchedDf()), table, v)
-    val rewritten: Seq[String] =
-      if (touched.isEmpty) Nil
-      else writeFiles(rewrite(touchedDf()), table, v)
+    val index = indexCols(cur)
+    // the candidates serve LOGICAL names: the arms come from user
+    // predicates; writeFiles re-physicalizes
+    val w =
+      if (touched.isEmpty) Written(Nil, Nil)
+      else {
+        val feed = changeFeedEnabled(spark, table)
+        val t = rewriteRows(spark, table, cur, touched)
+        writeFiles(armed(t, t.columns.toSeq,
+          arms(t.columns.toSeq).filter(a => feed || a.out == 0)),
+          table, next.version, index, changes = feed)
+      }
     // untouched files keep every entry (blooms and dels included);
-    // rewritten files folded their dels in (touchedDf applied them)
+    // rewritten files folded their dels in (the read applied them)
     // and lose their blooms (absent bloom → never pruned → correct)
-    commit(spark, table, indexFiles(spark, table,
-      cur.next(op, changeFiles).copy(files = untouched ++ rewritten),
-      rewritten))
-    (v, touched.size, cur.files.size)
+    commit(spark, table, withIndex(next.copy(
+      files = untouched ++ w.paths, changes = w.changes), index, w.data))
+    (next.version, touched.size, cur.files.size)
   }
 
   // ======== merge-on-read deletion vectors ========
@@ -3218,19 +3274,6 @@ object TxTable {
     }
   }
 
-  /** [[writeFiles]] respecting the table's declared layout: a
-    * single-`bucket()` table keeps its one-bucket-per-file SPJ
-    * invariant for EVERY fresh file set (DV update post-images, merge
-    * batches), so storage-partitioned joins survive merge-on-read DML;
-    * everything else writes plainly. */
-  private def writeFilesDispatch(df: DataFrame, table: String,
-      version: Long): Seq[String] =
-    declaredPartitions(df.sparkSession, table)
-      .map(PartTransform.parse) match {
-      case Seq(b: PartBucket) => writeFilesBucketed(df, table, version, b)
-      case _ => writeFiles(df, table, version)
-    }
-
   /** Per-file DELETION PRESSURE of the head snapshot: `(table-relative
     * file, total rows, hidden rows)` for every file carrying deletion
     * predicates — what surfaces "this file is 40% deleted" so
@@ -3295,22 +3338,23 @@ object TxTable {
     }
     if (scoped.isEmpty) return (cur.version, 0)
     val next = cur.next("compact")
-    val scopedDf = readFilesDv(spark, table, cur, scoped,
-      mappingAt(spark, table, Some(cur.version)))
+    val scopedDf = rewriteRows(spark, table, cur, scoped)
     val statCols = cur.multiStats.values.flatMap(_.keys).toSeq.distinct.sorted
     val valueCols = cur.fileValues.values.flatMap(_.keys).toSeq.distinct.sorted
     val cluster = valueCols.map(v => PartTransform.parse(v).expr) ++
       statCols.map(c)
-    val fresh = declaredBucket(spark, table) match {
+    val index = indexCols(cur)
+    val w = declaredBucket(spark, table) match {
       // single-bucket table: folded files keep the SPJ layout
-      case Some(b) => writeFilesBucketed(scopedDf, table, next.version, b)
+      case Some(b) => writeFiles(scopedDf, table, next.version, index, Some(b))
       case None => writeFiles(
         if (cluster.nonEmpty)
           scopedDf.repartitionByRange(targetFiles, cluster: _*)
-        else scopedDf.repartition(targetFiles), table, next.version)
+        else scopedDf.repartition(targetFiles), table, next.version, index)
     }
-    commit(spark, table, indexFiles(spark, table,
-      next.copy(files = cur.files.filterNot(scoped.toSet) ++ fresh), fresh))
+    commit(spark, table, withIndex(
+      next.copy(files = cur.files.filterNot(scoped.toSet) ++ w.paths),
+      index, w.data))
     (next.version, scoped.size)
   }
 
@@ -3338,11 +3382,12 @@ object TxTable {
     // records, so CDF consumers can't tell the strategies apart
     val changeFiles: Seq[String] =
       if (touched.isEmpty || !changeFeedEnabled(spark, table)) Nil
-      else writeChangeFiles(
+      else writeFiles(
         readFilesDv(spark, table, cur, touched,
           mappingAt(spark, table, Some(cur.version)))
           .filter(coalesce(pred, lit(false)))
-          .withColumn(ChangeTypeCol, lit("delete")), table, v)
+          .withColumn(ChangeTypeCol, lit("delete")), table, v,
+        data = false, changes = true).changes
     commit(spark, table, cur.next("delete", changeFiles).copy(
       dels = cur.dels ++ touched.map(f => DelEntry(f, ranges, valueEq))))
     (v, touched.size, cur.files.size)
@@ -3357,37 +3402,37 @@ object TxTable {
   private def updateWhereDv(spark: SparkSession, table: String,
       ranges: Seq[(String, Double, Double)],
       valueEq: Seq[(String, String)],
-      applySet: DataFrame => DataFrame): Long = {
+      arms: Seq[String] => Seq[Arm]): Long = {
     import org.apache.spark.sql.functions.{coalesce, lit}
     val cur = snapshot(spark, table).getOrElse(
       throw new IllegalArgumentException(s"no committed version at $table"))
     requireDvColumns(spark, table, cur,
       (ranges.map(_._1) ++ valueEq.map(_._1)).distinct)
-    val v = cur.version + 1
+    val next = cur.next("update")
     val touched =
       candidateFiles(cur, ranges, canonicalValueEq(spark, table, cur, valueEq))
-    val pred = predicateColumn(ranges, valueEq)
-    val matched = () => readFilesDv(spark, table, cur, touched,
-      mappingAt(spark, table, Some(cur.version)))
-      .filter(coalesce(pred, lit(false)))
-    val changeFiles: Seq[String] =
-      if (touched.isEmpty || !changeFeedEnabled(spark, table)) Nil
-      else writeChangeFiles(
-        matched().withColumn(ChangeTypeCol, lit("update_preimage"))
-          .unionByName(applySet(matched())
-            .withColumn(ChangeTypeCol, lit("update_postimage"))),
-        table, v)
-    val fresh: Seq[String] =
-      if (touched.isEmpty) Nil
-      else writeFilesDispatch(applySet(matched()), table, v)
+    // ONE job writes the post-images (in the declared bucket layout)
+    // and, with the feed on, the pre/post change rows
+    val index = indexCols(cur)
+    val w =
+      if (touched.isEmpty) Written(Nil, Nil)
+      else {
+        val feed = changeFeedEnabled(spark, table)
+        val matched = rewriteRows(spark, table, cur, touched)
+          .filter(coalesce(predicateColumn(ranges, valueEq), lit(false)))
+        writeFiles(armed(matched, matched.columns.toSeq,
+          arms(matched.columns.toSeq).filter(a => feed || a.out == 0)),
+          table, next.version, index, declaredBucket(spark, table),
+          changes = feed)
+      }
     // fresh post-image files get index metadata over the same tracked
     // columns, so they prune like any other file; old files' entries
     // stay valid as supersets
-    commit(spark, table, indexFiles(spark, table,
-      cur.next("update", changeFiles).copy(files = cur.files ++ fresh,
-        dels = cur.dels ++ touched.map(f => DelEntry(f, ranges, valueEq))),
-      fresh))
-    v
+    commit(spark, table, withIndex(next.copy(changes = w.changes,
+      files = cur.files ++ w.paths,
+      dels = cur.dels ++ touched.map(f => DelEntry(f, ranges, valueEq))),
+      index, w.data))
+    next.version
   }
 
   /** DELETE rows matching the conjunctive predicate (every range AND
@@ -3429,30 +3474,23 @@ object TxTable {
     require(ranges.nonEmpty || valueEq.nonEmpty,
       "unconditional UPDATE: use overwrite with the transformed frame")
     val pred = predicateColumn(ranges, valueEq)
-    // the one SET projection, reused by the rewrite (whole frame,
-    // predicate-gated per row) and the change feed's postimage
-    // (matched rows only — pred is true there, so the gate passes)
-    def applySet(df: DataFrame): DataFrame = {
-      val unknown = set.keySet -- df.columns.toSet
+    val hit = coalesce(pred, lit(false))
+    // the one SET projection, reused by the rewrite (every row,
+    // predicate-gated) and the change feed's postimage (matched rows
+    // only — pred is true there, so the gate passes). ONE projection:
+    // all RHS evaluate against the original row
+    def arms(cols: Seq[String]): Seq[Arm] = {
+      val unknown = set.keySet -- cols.toSet
       require(unknown.isEmpty,
         s"UPDATE SET on nonexistent column(s): ${unknown.toSeq.sorted.mkString(", ")}")
-      // ONE projection: all RHS evaluate against the original row
-      df.select(df.columns.map { colName =>
-        set.get(colName) match {
-          case Some(expr) => when(pred, expr).otherwise(c(colName)).as(colName)
-          case None => c(colName)
-        }
-      }: _*)
+      val after = cols.map(n => set.get(n).fold(c(n))(e => when(pred, e).otherwise(c(n))))
+      Seq(Arm(0, lit(true), after),
+        Arm(1, hit, cols.map(c), "update_preimage"),
+        Arm(1, hit, after, "update_postimage"))
     }
     if (deletionVectorsEnabled(spark, table))
-      return updateWhereDv(spark, table, ranges, valueEq, applySet)
-    copyOnWrite(spark, table, ranges, valueEq, applySet, op = "update",
-      changeRows = { df =>
-        val matched = df.filter(coalesce(pred, lit(false)))
-        matched.withColumn(ChangeTypeCol, lit("update_preimage"))
-          .unionByName(applySet(matched)
-            .withColumn(ChangeTypeCol, lit("update_postimage")))
-      })._1
+      updateWhereDv(spark, table, ranges, valueEq, arms)
+    else copyOnWrite(spark, table, ranges, valueEq, "update", arms)._1
   }
 
   /** DELETE rows matching an ARBITRARY row predicate `cond` (the SQL
@@ -3476,14 +3514,13 @@ object TxTable {
       ranges: Seq[(String, Double, Double)],
       valueEq: Seq[(String, String)] = Nil,
       cond: Option[org.apache.spark.sql.Column] = None): (Long, Int, Int) = {
-    import org.apache.spark.sql.functions.{coalesce, lit, not}
+    import org.apache.spark.sql.functions.{coalesce, col, lit, not}
     // keep = NOT(pred IS TRUE): a NULL predicate (null in a predicate
     // column) must KEEP the row, exactly SQL DELETE's WHERE semantics
-    val pred = cond.getOrElse(predicateColumn(ranges, valueEq))
-    copyOnWrite(spark, table, ranges, valueEq,
-      _.filter(not(coalesce(pred, lit(false)))), op = "delete",
-      changeRows = _.filter(coalesce(pred, lit(false)))
-        .withColumn(ChangeTypeCol, lit("delete")))
+    val hit = coalesce(cond.getOrElse(predicateColumn(ranges, valueEq)),
+      lit(false))
+    copyOnWrite(spark, table, ranges, valueEq, "delete", cols => Seq(
+      Arm(0, not(hit), cols.map(col)), Arm(1, hit, cols.map(col), "delete")))
   }
 
   /** PARTITION-SCOPED compaction (Delta's `OPTIMIZE ... WHERE` /
@@ -3518,17 +3555,17 @@ object TxTable {
     val untouched = cur.files.filterNot(scoped.toSet)
     // compaction FOLDS deletion predicates: scoped files rewrite from
     // their visible rows and shed their dels (Delta's DV-fold)
-    val scopedDf = readFilesDv(spark, table, cur, scoped,
-      mappingAt(spark, table, Some(cur.version)))
-    val files = declaredBucket(spark, table) match {
+    val scopedDf = rewriteRows(spark, table, cur, scoped)
+    val index = indexCols(cur, Seq(t.name))
+    val w = declaredBucket(spark, table) match {
       // single-bucket table: the scoped rewrite keeps the SPJ layout
-      case Some(b) => writeFilesBucketed(scopedDf, table, next.version, b)
+      case Some(b) => writeFiles(scopedDf, table, next.version, index, Some(b))
       case None => writeFiles(
         scopedDf.repartitionByRange(targetFiles, t.expr), table,
-        next.version)
+        next.version, index)
     }
-    commit(spark, table, indexFiles(spark, table,
-      next.copy(files = untouched ++ files), files, Seq(t.name)))
+    commit(spark, table, withIndex(
+      next.copy(files = untouched ++ w.paths), index, w.data))
     next.version
   }
 
@@ -3538,7 +3575,7 @@ object TxTable {
     * evolving a live table to `bucket(n, col)` leaves pre-evolution
     * files without singleton bucket value sets, which parks SPJ
     * until natural compaction touches them. This rewrites EXACTLY
-    * the non-conforming files through [[writeFilesBucketed]] (one
+    * the non-conforming files in the bucket layout of [[writeFiles]] (one
     * bucket per file), recording the bucket value sets the SPJ
     * report needs; already-conforming files carry over
     * byte-untouched, and the migrated files' deletion predicates
@@ -3563,19 +3600,19 @@ object TxTable {
     if (nonConforming.isEmpty) return (cur.version, 0, 0)
     val scoped = nonConforming.take(maxFiles)
     val next = cur.next("compact")
-    val scopedDf = readFilesDv(spark, table, cur, scoped,
-      mappingAt(spark, table, Some(cur.version)))
-    val fresh = writeFilesBucketed(scopedDf, table, next.version, b)
-    commit(spark, table, indexFiles(spark, table,
-      next.copy(files = cur.files.filterNot(scoped.toSet) ++ fresh), fresh,
-      Seq(b.name)))
+    val scopedDf = rewriteRows(spark, table, cur, scoped)
+    val index = indexCols(cur, Seq(b.name))
+    val w = writeFiles(scopedDf, table, next.version, index, Some(b))
+    commit(spark, table, withIndex(
+      next.copy(files = cur.files.filterNot(scoped.toSet) ++ w.paths),
+      index, w.data))
     (next.version, scoped.size, nonConforming.size - scoped.size)
   }
 
   /** Whether `table` declares the single-`bucket()` layout whose
     * one-bucket-per-file invariant is LOAD-BEARING (storage-
     * partitioned joins ride it). Compaction/fold rewrites route
-    * through [[writeFilesBucketed]] for these tables — `targetFiles`
+    * through [[writeFiles]]' bucket layout for these tables — `targetFiles`
     * yields to the bucket count, and the zero-Exchange join survives
     * OPTIMIZE / DV folds instead of silently degrading to shuffles. */
   private def declaredBucket(spark: SparkSession,
@@ -3595,7 +3632,8 @@ object TxTable {
     * mid-compaction sees the old layout or the new one, never a mix.
     * EVERY index survives compaction (Delta's OPTIMIZE recomputes
     * stats the same way): stats and value sets are recomputed over
-    * the new files ([[indexFiles]]) and per-file blooms rebuilt. The
+    * the new files by the writing tasks ([[withIndex]]) and per-file
+    * blooms rebuilt. The
     * layout is dispatched on what the snapshot carries:
     *   - declared single `bucket()` → one bucket per file (SPJ);
     *   - bloom-indexed → re-hash-cluster on the key ([[readPoint]]
@@ -3618,29 +3656,30 @@ object TxTable {
     val next = cur.next("compact")
     val statCols = cur.multiStats.values.flatMap(_.keys).toSeq.distinct.sorted
     val valueCols = cur.fileValues.values.flatMap(_.keys).toSeq.distinct.sorted
-    val rows = read(spark, table)
-    val files = (declaredBucket(spark, table), cur.bloomCol) match {
-      case (Some(b), _) => writeFilesBucketed(rows, table, next.version, b)
-      case (None, Some(bc)) => writeFiles(
-        rows.repartition(targetFiles, c(bc)), table, next.version)
+    val rows = rewriteRows(spark, table, cur, cur.files)
+    val index = indexCols(cur)
+    def write(df: DataFrame, bucket: Option[PartBucket] = None) =
+      writeFiles(df, table, next.version, index, bucket)
+    val w = (declaredBucket(spark, table), cur.bloomCol) match {
+      case (Some(b), _) => write(rows, Some(b))
+      case (None, Some(bc)) => write(rows.repartition(targetFiles, c(bc)))
       case _ if valueCols.isEmpty && statCols.size == 2 =>
         val (zdf, helpers, z) =
           Layout.withMortonCode(rows, statCols(0), statCols(1))
-        writeFiles(zdf.repartitionByRange(targetFiles, c(z))
-          .sortWithinPartitions(c(z)).drop(helpers: _*), table, next.version)
+        write(zdf.repartitionByRange(targetFiles, c(z))
+          .sortWithinPartitions(c(z)).drop(helpers: _*))
       // value-col entries may be transform names ("days(ts)",
       // "bucket(8,k)") — cluster on the DERIVED expression
-      case _ if statCols.nonEmpty || valueCols.nonEmpty => writeFiles(
+      case _ if statCols.nonEmpty || valueCols.nonEmpty => write(
         rows.repartitionByRange(targetFiles,
           valueCols.map(v => PartTransform.parse(v).expr)
-            ++ statCols.map(c): _*), table, next.version)
-      case _ => writeFiles(cur.statsCol.fold(rows.repartition(targetFiles))(
-        sc => rows.repartitionByRange(targetFiles, c(sc))), table,
-        next.version)
+            ++ statCols.map(c): _*))
+      case _ => write(cur.statsCol.fold(rows.repartition(targetFiles))(
+        sc => rows.repartitionByRange(targetFiles, c(sc))))
     }
-    val indexed = indexFiles(spark, table, next.copy(files = files), files)
+    val indexed = withIndex(next.copy(files = w.paths), index, w.data)
     commit(spark, table, cur.bloomCol.fold(indexed)(bc =>
-      indexed.copy(blooms = buildBlooms(spark, table, files, bc))))
+      indexed.copy(blooms = buildBlooms(spark, table, w.paths, bc))))
     next.version
   }
 

@@ -526,6 +526,101 @@ class PropertySpec extends AnyFunSuite {
       assert(PartTransform.parse(b.name) == b, s"round-trip: ${b.name}")
     }
   }
+
+  test("task-side index entries == a per-file groupBy(input_file_name) aggregation (6 cases)") {
+    import graft.sources.TxTable
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types._
+    val gen = for {
+      n <- Gen.choose(0, 240)
+      parts <- Gen.choose(1, 5)
+      distinct <- Gen.choose(2, 40)
+      seed <- Gen.choose(0L, Long.MaxValue)
+      mapped <- Gen.oneOf(false, true)
+      allNull <- Gen.oneOf(false, true)
+    } yield (n, parts, distinct, seed, mapped, allNull)
+    val schema = StructType(Seq(StructField("k", LongType),
+      StructField("d", DoubleType), StructField("m", DecimalType(10, 2)),
+      StructField("dt", DateType), StructField("ts", TimestampType),
+      StructField("s", StringType), StructField("z", LongType)))
+    val cap = 16
+    val seen = scala.collection.mutable.Set.empty[String]
+    for (((n, parts, distinct, seed, mapped, allNull), i) <-
+        cases(gen, 6).zipWithIndex) {
+      val rnd = new scala.util.Random(seed)
+      def maybe(a: => Any): Any = if (rnd.nextInt(8) == 0) null else a
+      val rows = (0 until n).map { _ =>
+        val j = rnd.nextInt(distinct)
+        Row(maybe(j.toLong), maybe(j * 1.5),
+          maybe(new java.math.BigDecimal(j).movePointLeft(2)),
+          maybe(java.sql.Date.valueOf(java.time.LocalDate.of(2024, 1, 1)
+            .plusDays(j.toLong))),
+          maybe(java.sql.Timestamp.valueOf(java.time.LocalDateTime
+            .of(2024, 1, 1, 0, 0).plusHours(7L * j))),
+          // mostly numeric strings, some that do not cast to double
+          maybe(if (rnd.nextInt(6) == 0) s"x$j" else j.toString),
+          if (allNull) null else maybe(j.toLong * 3))
+      }
+      val t = java.nio.file.Files.createTempDirectory("graft_probe_")
+        .toString + "/t"
+      // a column-mapped table: files store the physical name of `s`
+      val sName = if (mapped) "s2" else "s"
+      val frame0 = spark.createDataFrame(
+        java.util.Arrays.asList(rows: _*), schema)
+      if (mapped) {
+        TxTable.overwrite(frame0.limit(1), t)
+        TxTable.renameColumn(spark, t, "s", sName)
+      }
+      val frame = frame0.withColumnRenamed("s", sName).repartition(parts)
+      val statCols = Seq("k", "d", "m", "dt", "ts", sName, "z")
+      val valueCols = Seq("k", sName, "dt", "m", "days(ts)", "bucket(4,k)",
+        s"truncate(2,$sName)")
+      val written = TxTable.writeFiles(frame, t, 99L,
+        TxTable.IndexCols(None, statCols, valueCols, cap)).data
+      // the oracle: one aggregation per file over the written files
+      val logical = TxTable.mappingAt(spark, t).fold(TxTable.scanFiles(spark,
+        written.map(w => new org.apache.hadoop.fs.Path(t, w.path).toString)))(
+        m => m.toLogical(TxTable.scanFiles(spark, written.map(w =>
+          new org.apache.hadoop.fs.Path(t, w.path).toString))))
+        .withColumn("__f", input_file_name())
+      def name(f: String) = f.split('/').last
+      val counts = logical.groupBy("__f").count().collect()
+        .map(r => name(r.getString(0)) -> r.getLong(1)).toMap
+      // a bound the session cannot cast to double records no span
+      val spans: Map[String, Map[String, (Double, Double)]] =
+        statCols.flatMap { c =>
+          scala.util.Try(logical.groupBy("__f").agg(
+            expr(s"try_cast(min(`$c`) as double)"),
+            expr(s"try_cast(max(`$c`) as double)")).collect().toSeq)
+            .getOrElse(Nil).collect {
+              case r if !r.isNullAt(1) && !r.isNullAt(2) =>
+                (name(r.getString(0)), c, (r.getDouble(1), r.getDouble(2)))
+            }
+        }.groupBy(_._1).map { case (f, es) => f -> es.map(e => e._2 -> e._3).toMap }
+      val sets: Map[String, Map[String, Set[String]]] = {
+        val aggs = valueCols.map(v =>
+          collect_set(TxTable.PartTransform.parse(v).expr).as(v))
+        logical.groupBy("__f").agg(aggs.head, aggs.tail: _*).collect()
+          .map(r => name(r.getString(0)) -> valueCols.flatMap { v =>
+            val vs = r.getAs[scala.collection.Seq[String]](v).toSet
+            if (vs.size <= cap) Some(v -> vs) else None
+          }.toMap).toMap
+      }
+      assert(written.map(w => name(w.path) -> w.rows).filter(_._2 > 0).toMap ===
+        counts, s"case $i: row counts")
+      written.foreach { w =>
+        val f = name(w.path)
+        assert(w.stats === spans.getOrElse(f, Map.empty), s"case $i $f stats")
+        assert(w.values === sets.getOrElse(f, Map.empty), s"case $i $f values")
+      }
+      seen ++= written.filter(_.rows > 0).flatMap(w =>
+        (if (!w.values.contains("k")) Seq("value-set cap") else Nil) ++
+          (if (!w.stats.contains("z")) Seq("all-NULL column") else Nil) ++
+          (if (w.values.contains("days(ts)")) Seq("transform") else Nil))
+    }
+    // the draw is not vacuous: each rule decided some file
+    assert(seen === Set("value-set cap", "all-NULL column", "transform"))
+  }
 }
 
 

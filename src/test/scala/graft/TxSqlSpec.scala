@@ -1055,4 +1055,24 @@ class TxSqlSpec extends AnyFunSuite {
       .select($"op").as[String].collect().toSeq ===
       Seq("create", "append", "append", "delete", "update"))
   }
+
+  test("SQL UPDATE on an overwriteIndexed table: every live file keeps stats, readRange prunes") {
+    val root = freshRoot()
+    val dir = s"$root/t"
+    TxTable.overwriteIndexed((1 to 40).map(i => (i.toLong, i * 10L))
+      .toDF("k", "cents"), dir, "cents")
+    val before = TxTable.snapshot(spark, dir).get
+    assert(before.files.size > 2 && before.files.forall(before.stats.contains))
+    TxSql.installCatalog(spark, "txidx", root)
+    spark.sql("UPDATE txidx.t SET cents = cents + 1 WHERE cents <= 50")
+    val snap = TxTable.snapshot(spark, dir).get
+    assert(snap.files.toSet != before.files.toSet, "the update rewrote a file")
+    assert(snap.files.forall(snap.stats.contains),
+      s"files without stats: ${snap.files.filterNot(snap.stats.contains)}")
+    // a range inside one untouched file opens that file alone
+    assert(TxTable.pruneFiles(snap, "cents", 390.0, 400.0).size === 1)
+    assert(TxTable.readRange(spark, dir, "cents", 390.0, 400.0)
+      .as[(Long, Long)].collect().sorted.toSeq === Seq((39L, 390L), (40L, 400L)))
+    assert(TxTable.readRange(spark, dir, "cents", 11.0, 51.0).count() === 5L)
+  }
 }

@@ -1771,12 +1771,20 @@ class TxTableSpec extends AnyFunSuite {
     TxTable.enableDeletionVectors(spark, dv)
     TxTable.overwrite(df(1 -> "a", 2 -> "b", 3 -> "c"), dv)
     TxTable.deleteWhere(spark, dv, Seq(("k", 2.0, 2.0)))
+    // more files than Spark's listing lists on the driver (32)
+    val wide = freshTable()
+    TxTable.overwrite(spark.range(0, 400, 1, 40).toDF("k"), wide)
+    assert(TxTable.snapshot(spark, wide).get.files.size === 40)
+    val root = new java.io.File(wide).getParent
+    graft.sources.TxSql.installCatalog(spark, "txwide", root)
     val built = Seq(
       "read" -> (() => TxTable.read(spark, t)),
       "read(asOf)" -> (() => TxTable.read(spark, t, asOf = Some(1))),
       "readRange" -> (() => TxTable.readRange(spark, t, "k", 3.0, 12.0)),
       "changeFeed" -> (() => TxTable.changeFeed(spark, t, 0L)),
-      "read with deletion vectors" -> (() => TxTable.read(spark, dv)))
+      "read with deletion vectors" -> (() => TxTable.read(spark, dv)),
+      "read of 40 files" -> (() => TxTable.read(spark, wide)),
+      "SQL scan of 40 files" -> (() => spark.sql("SELECT k FROM txwide.t")))
     built.foreach { case (name, make) =>
       var frame: org.apache.spark.sql.DataFrame = null
       val jobs = jobsDuring { frame = make() }
@@ -2003,7 +2011,7 @@ class TxTableSpec extends AnyFunSuite {
     /** writeFiles' files and df.write.parquet's for the same frame. */
     def both(frame: org.apache.spark.sql.DataFrame,
         table: String = freshTable()): (Seq[String], Seq[String]) = {
-      val ours = TxTable.writeFiles(frame, table, 99L)
+      val ours = TxTable.writeFiles(frame, table, 99L).paths
         .map(f => new org.apache.hadoop.fs.Path(table, f).toString)
       val ref = Files.createTempDirectory("graft_ref_").toString + "/out"
       frame.write.parquet(ref)
@@ -2091,5 +2099,80 @@ class TxTableSpec extends AnyFunSuite {
     assert(sets.forall(_.exists(_.size == 1)) &&
       sets.flatMap(_.get).flatten.toSet.size === 4, s"bucket sets: $sets")
     assert(TxTable.read(spark, t).count() === 120L)
+  }
+
+  test("a table whose data file is gone fails when the frame is built, naming the file") {
+    val t = freshTable()
+    TxTable.overwrite(df(1 -> "a", 2 -> "b"), t)
+    val gone = TxTable.snapshot(spark, t).get.files.head
+    assert(new java.io.File(t, gone).delete())
+    val e = intercept[Exception](TxTable.read(spark, t))
+    assert(e.getMessage.contains(gone.split('/').last), e.getMessage)
+  }
+
+  test("applyCdc records a key its NULL op hides as a change-feed delete") {
+    Seq(false, true).foreach { dv =>
+      val t = freshTable()
+      TxTable.enableChangeFeed(spark, t)
+      if (dv) TxTable.enableDeletionVectors(spark, t)
+      TxTable.overwrite(df(1 -> "a", 2 -> "b", 3 -> "c"), t)
+      val v = TxTable.applyCdc(spark, t,
+        Seq((1, "A", "u"), (2, "B", null)).toDF("k", "v", "op"), "k", "op")
+      assert(TxTable.read(spark, t).as[(Int, String)].collect().sorted.toSeq
+        === Seq(1 -> "A", 3 -> "c"), s"dv=$dv: table")
+      val feed = TxTable.changeFeed(spark, t, v - 1)
+        .select($"k", $"v", col(TxTable.ChangeTypeCol))
+        .as[(Int, String, String)].collect().sorted.toSeq
+      assert(feed === Seq((1, "A", "update_postimage"),
+        (1, "a", "update_preimage"), (2, "b", "delete")), s"dv=$dv: feed")
+    }
+  }
+
+  test("DML and compaction on an evolved table keep the column an append added") {
+    Seq(false, true).foreach { dv =>
+      val t = freshTable()
+      if (dv) TxTable.enableDeletionVectors(spark, t)
+      TxTable.overwrite(df(1 -> "a", 2 -> "b"), t)
+      TxTable.append(Seq((3, "c", 30L), (4, "d", 40L)).toDF("k", "v", "x"), t)
+      // touches the file before the append and the file after it
+      TxTable.updateWhere(spark, t, Seq(("k", 2.0, 3.0)), Nil,
+        Map("v" -> lit("u")))
+      def rows = TxTable.read(spark, t, mergeSchema = true)
+        .select($"k", $"v", $"x").as[(Int, String, Option[Long])]
+        .collect().sortBy(_._1).toSeq
+      assert(rows === Seq((1, "a", None), (2, "u", None), (3, "u", Some(30L)),
+        (4, "d", Some(40L))), s"dv=$dv: update")
+      TxTable.deleteWhere(spark, t, Seq(("k", 1.0, 1.0)))
+      assert(rows === Seq((2, "u", None), (3, "u", Some(30L)),
+        (4, "d", Some(40L))), s"dv=$dv: delete")
+      TxTable.merge(spark, t, Seq((2, "m", 20L)).toDF("k", "v", "x"), "k")
+      TxTable.compact(spark, t, 1)
+      assert(rows === Seq((2, "m", Some(20L)), (3, "u", Some(30L)),
+        (4, "d", Some(40L))), s"dv=$dv: merge + compact")
+    }
+  }
+
+  test("with the change feed on, an indexed update or delete commit is one job; compact at most 3") {
+    val t = freshTable()
+    TxTable.enableChangeFeed(spark, t)
+    TxTable.overwriteIndexed((1 to 40).map(i => (i, s"v$i")).toDF("k", "v"),
+      t, "k")
+    val update = jobsDuring(TxTable.updateWhere(spark, t,
+      Seq(("k", 1.0, 5.0)), Nil, Map("v" -> lit("u"))))
+    val delete = jobsDuring(TxTable.deleteWhere(spark, t,
+      Seq(("k", 30.0, 35.0))))
+    val compact = jobsDuring(TxTable.compact(spark, t, 2))
+    assert(update === 1, "update commit jobs")
+    assert(delete === 1, "delete commit jobs")
+    assert(compact <= 3, s"compact commit jobs: $compact")
+    // the commits did their work and kept the index
+    val snap = TxTable.snapshot(spark, t).get
+    assert(TxTable.read(spark, t).count() === 34L)
+    assert(TxTable.read(spark, t).filter($"v" === "u").count() === 5L)
+    assert(snap.files.forall(snap.stats.contains), s"stats: ${snap.stats}")
+    assert(TxTable.changeFeed(spark, t, 1L, Some(3L))
+      .groupBy(col(TxTable.ChangeTypeCol)).count().as[(String, Long)]
+      .collect().toMap === Map("update_preimage" -> 5L,
+        "update_postimage" -> 5L, "delete" -> 6L))
   }
 }
