@@ -2384,8 +2384,8 @@ object TxTable {
     def withKeys(df: DataFrame): DataFrame =
       transforms.zipWithIndex.foldLeft(df) { case (acc, (t, i)) =>
         acc.withColumn(s"__k$i", t.expr) }
-    // ONE job writes the remainder and, with the feed on, the replaced rows as
-    // `delete` and the incoming frame as `insert`.
+    // ONE job writes the remainder and, with the feed on, the
+    // replaced rows as `delete` and the incoming frame as `insert`
     val feed = changeFeedEnabled(spark, table) &&
       (fresh.nonEmpty || touched.nonEmpty)
     val fromTouched = if (touched.isEmpty) None else {
