@@ -578,10 +578,9 @@ class PropertySpec extends AnyFunSuite {
       val written = TxTable.writeFiles(frame, t, 99L,
         TxTable.IndexCols(None, statCols, valueCols, cap)).data
       // the oracle: one aggregation per file over the written files
-      val logical = TxTable.mappingAt(spark, t).fold(TxTable.scanFiles(spark,
-        written.map(w => new org.apache.hadoop.fs.Path(t, w.path).toString)))(
-        m => m.toLogical(TxTable.scanFiles(spark, written.map(w =>
-          new org.apache.hadoop.fs.Path(t, w.path).toString))))
+      val files = TxTable.scanFiles(spark,
+        written.map(w => new org.apache.hadoop.fs.Path(t, w.path).toString))
+      val logical = TxTable.mappingAt(spark, t).fold(files)(_.toLogical(files))
         .withColumn("__f", input_file_name())
       def name(f: String) = f.split('/').last
       val counts = logical.groupBy("__f").count().collect()
