@@ -460,7 +460,10 @@ object TxSql {
 
   /** The file names (data/<name> relative form) surviving every
     * manifest prune for the given Catalyst filters — the single
-    * pruning decision [[TxManifestIndex]] and the specs share. String
+    * pruning decision [[TxManifestIndex]] and the specs share. Stats
+    * prune by [[TxTable.candidateFiles]], the rule of the API DML
+    * verbs (multi-column stats and value sets, and the single
+    * [[TxTable.overwriteIndexed]] column). String
     * equalities probe the bloom index directly (the stored canonical
     * form of a string column IS the string). Numeric
     * point-equalities (lo == hi ranges) probe it only when the bloom
@@ -482,7 +485,7 @@ object TxSql {
   private[sources] def candidateNamesPruned(snap: TxTable.Snapshot,
       ranges: Seq[(String, Double, Double)],
       valueEq: Seq[(String, String)], schema: StructType): Set[String] = {
-    val viaStats = TxTable.pruneFilesWhere(snap, ranges, valueEq).toSet
+    val viaStats = TxTable.candidateFiles(snap, ranges, valueEq).toSet
     val viaBloom = snap.bloomCol match {
       case Some(bc) =>
         val integral = schema.find(_.name == bc).exists(f =>

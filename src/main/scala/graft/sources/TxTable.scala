@@ -1000,6 +1000,31 @@ object TxTable {
       writeCheckpoint(f, table, next.version, Some(body))
   }
 
+  /** Attempts [[retrying]] makes before a lost race is the error. */
+  private val MaxAttempts = 10
+
+  /** Run `attempt` until it commits: a [[TxConflictException]] (a
+    * racing writer took the version, or moved a marker the attempt
+    * read) re-runs it, from its own fresh reads, up to [[MaxAttempts]]
+    * times — the rebase loop of every exactly-once writer
+    * ([[appendEpoch]], [[appendEpochFiles]] and the
+    * [[IncrementalView]] verbs). `verb` names the writer in the error
+    * that gives up. */
+  private[sources] def retrying[T](verb: String, table: String)(
+      attempt: => T): T = {
+    var lost = 0
+    while (true) {
+      try return attempt
+      catch {
+        case _: TxConflictException =>
+          lost += 1
+          if (lost >= MaxAttempts) throw new TxConflictException(
+            s"$verb lost $MaxAttempts races at $table")
+      }
+    }
+    throw new IllegalStateException("unreachable")
+  }
+
   /** CREATE TABLE with a declared schema and no rows yet: commit an
     * empty version 1 so the table EXISTS transactionally (two racing
     * CREATEs get one winner through the commit protocol, the loser a
@@ -2092,31 +2117,13 @@ object TxTable {
     * — which may now contain this very epoch (the racer was a
     * replayed twin), making retry-then-skip correct. */
   def appendEpoch(df: DataFrame, table: String, appId: String,
-      epochId: Long, maxRetries: Int = 10): Boolean = {
+      epochId: Long): Boolean = {
     val spark = df.sparkSession
-    var attempts = 0
-    while (true) {
-      val cur = snapshot(spark, table).getOrElse(Snapshot.Empty)
-      if (cur.txns.get(appId).exists(_ >= epochId)) return false
-      val next = cur.next("append")
-      val files = writeFiles(df, table, next.version).paths
-      try {
-        // index metadata carries forward exactly as in append: the
-        // described files remain live, new files are simply unindexed
-        commit(spark, table, next.copy(files = cur.files ++ files,
-          txns = cur.txns + (appId -> epochId)))
-        return true
-      } catch {
-        case _: TxConflictException =>
-          attempts += 1
-          if (attempts >= maxRetries)
-            throw new TxConflictException(
-              s"appendEpoch lost $maxRetries races at $table")
-        // loser's freshly-written files stay orphaned (never
-        // referenced); vacuum reclaims them
-      }
-    }
-    false // unreachable
+    val cur = snapshot(spark, table).getOrElse(Snapshot.Empty)
+    // the frame is written once; a lost race re-commits the same files
+    cur.txns.get(appId).forall(_ < epochId) && appendEpochFiles(spark,
+      table, writeFiles(df, table, cur.version + 1).paths, appId, epochId,
+      "appendEpoch")
   }
 
   /** Index/layout metadata is TOP-LEVEL-column only (the manifest's
@@ -2290,7 +2297,6 @@ object TxTable {
       maxPartitions: Int = 10000,
       extraTuples: Seq[Seq[String]] = Nil,
       addTxns: Map[String, Long] = Map.empty,
-      requireTxn: Option[(String, Long)] = None,
       requireTxns: Map[String, Long] = Map.empty): Long = {
     import org.apache.spark.sql.functions.{broadcast, lit}
     // entries may be transforms ("days(ts)"): the partition VALUE is
@@ -2304,7 +2310,7 @@ object TxTable {
     // caller computed its replacement against a consumption marker;
     // if another maintainer advanced it since, committing would
     // double-apply — conflict out so the caller rebases
-    (requireTxns ++ requireTxn).foreach { case (app, expected) =>
+    requireTxns.foreach { case (app, expected) =>
       val got = cur.txns.getOrElse(app, 0L)
       if (got != expected) throw new TxConflictException(
         s"marker $app moved ($expected -> $got) at $table: rebase")
@@ -2455,24 +2461,18 @@ object TxTable {
     * twins, lost races rebase and re-check the marker first. */
   private[sources] def appendEpochFiles(spark: SparkSession, table: String,
       files: Seq[String], appId: String, epochId: Long,
-      maxRetries: Int = 10): Boolean = {
-    var attempts = 0
-    while (true) {
+      verb: String = "appendEpochFiles"): Boolean =
+    retrying(verb, table) {
       val cur = snapshot(spark, table).getOrElse(Snapshot.Empty)
-      if (cur.txns.get(appId).exists(_ >= epochId)) return false
-      try {
+      // index metadata carries forward exactly as in append: the
+      // described files remain live, new files are simply unindexed;
+      // a loser's files stay orphaned (never referenced) for vacuum
+      cur.txns.get(appId).forall(_ < epochId) && {
         commit(spark, table, cur.next("append").copy(
           files = cur.files ++ files, txns = cur.txns + (appId -> epochId)))
-        return true
-      } catch {
-        case _: TxConflictException =>
-          attempts += 1
-          if (attempts >= maxRetries) throw new TxConflictException(
-            s"appendEpochFiles lost $maxRetries races at $table")
+        true
       }
     }
-    false // unreachable
-  }
 
   /** Split a comma-joined partition-entry list at paren depth 0 —
     * `bucket(8,k)` carries a comma INSIDE its transform syntax. */
@@ -2825,27 +2825,25 @@ object TxTable {
     val next = snapshot(spark, table).getOrElse(Snapshot.Empty)
       .next("overwrite")
     val nParts = math.max(2, spark.sessionState.conf.numShufflePartitions)
-    val files = writeFiles(df.repartition(nParts, c(col)), table,
-      next.version).paths
-    commit(spark, table, next.copy(files = files, bloomCol = Some(col),
-      blooms = buildBlooms(spark, table, files, col, fpp)))
+    val w = writeFiles(df.repartition(nParts, c(col)), table, next.version)
+    commit(spark, table, next.copy(files = w.paths, bloomCol = Some(col),
+      blooms = buildBlooms(spark, table, w.data, col, fpp)))
     next.version
   }
 
   /** Per-file bloom filters over `col` for freshly written `files` —
     * shared by [[overwriteIndexedBloom]] and [[compact]]'s index
-    * recompute. Blooms are sized from the WRITTEN files' parquet row
-    * counts (footer-metadata count, no data scan) — never by
-    * re-evaluating the source df, whose lineage could be
-    * nondeterministic between passes. */
+    * recompute. Blooms are sized from the row counts the writing tasks
+    * recorded (no job) — never by re-evaluating the source df, whose
+    * lineage could be nondeterministic between passes. */
   private def buildBlooms(spark: SparkSession, table: String,
-      files: Seq[String], col: String,
+      files: Seq[TxWritten], col: String,
       fpp: Double = 0.01): Map[String, Array[Byte]] = {
     import org.apache.spark.sql.functions.{col => c, input_file_name}
     val written = toLogicalFrame(
-      scanFiles(spark, files.map(new Path(table, _).toString)),
+      scanFiles(spark, files.map(f => new Path(table, f.path).toString)),
       mappingAt(spark, table))
-    val total = math.max(1000L, written.count())
+    val total = math.max(1000L, files.map(_.rows).sum)
     val perFile = math.max(1000L, 2L * total / files.size)
     val built = written
       .select(input_file_name().as("__f"), c(col).cast("string").as("__k"))
@@ -2856,7 +2854,7 @@ object TxTable {
         (f, k) => { f.putString(k); f },
         (a, b) => { a.mergeInPlace(b); a })
       .collect()
-    val byName = files.map(f => f.split('/').last -> f).toMap
+    val byName = files.map(f => f.path.split('/').last -> f.path).toMap
     built.flatMap { case (path, bf) =>
       byName.get(path.split('/').last).map { f =>
         val bos = new java.io.ByteArrayOutputStream()
@@ -3058,7 +3056,7 @@ object TxTable {
     * [[overwriteIndexed]] column and the [[overwriteIndexedMulti]]
     * per-file stats/value sets). Files without metadata are always
     * candidates — pruning is an optimization, never a filter. */
-  private def candidateFiles(snap: Snapshot,
+  private[sources] def candidateFiles(snap: Snapshot,
       ranges: Seq[(String, Double, Double)],
       valueEq: Seq[(String, String)]): Seq[String] = {
     val viaMulti = pruneFilesWhere(snap, ranges, valueEq).toSet
@@ -3679,7 +3677,7 @@ object TxTable {
     }
     val indexed = withIndex(next.copy(files = w.paths), index, w.data)
     commit(spark, table, cur.bloomCol.fold(indexed)(bc =>
-      indexed.copy(blooms = buildBlooms(spark, table, w.paths, bc))))
+      indexed.copy(blooms = buildBlooms(spark, table, w.data, bc))))
     next.version
   }
 

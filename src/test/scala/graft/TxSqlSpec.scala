@@ -1075,4 +1075,21 @@ class TxSqlSpec extends AnyFunSuite {
       .as[(Long, Long)].collect().sorted.toSeq === Seq((39L, 390L), (40L, 400L)))
     assert(TxTable.readRange(spark, dir, "cents", 11.0, 51.0).count() === 5L)
   }
+
+  test("SQL range scan of an overwriteIndexed table prunes by the single-column stats") {
+    val root = freshRoot()
+    val dir = s"$root/t"
+    TxTable.overwriteIndexed((1 to 40).map(i => (i.toLong, i * 10L))
+      .toDF("k", "cents"), dir, "cents")
+    val snap = TxTable.snapshot(spark, dir).get
+    assert(snap.files.size > 2 && snap.multiStats.isEmpty)
+    TxSql.installCatalog(spark, "txidxscan", root)
+    val q = spark.sql(
+      "SELECT k, cents FROM txidxscan.t WHERE cents BETWEEN 390 AND 400")
+    assert(q.as[(Long, Long)].collect().sorted.toSeq ===
+      Seq((39L, 390L), (40L, 400L)))
+    assert(scannedFiles(q) ===
+      TxTable.pruneFiles(snap, "cents", 390.0, 400.0).map(_.split('/').last).toSet)
+    assert(scannedFiles(q).size === 1)
+  }
 }

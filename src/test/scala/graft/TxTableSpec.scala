@@ -2175,4 +2175,81 @@ class TxTableSpec extends AnyFunSuite {
       .collect().toMap === Map("update_preimage" -> 5L,
         "update_postimage" -> 5L, "delete" -> 6L))
   }
+
+  test("overwriteIndexedBloom sizes its blooms without a count job; lookups still prune") {
+    val t = freshTable()
+    val src = spark.range(0, 5000)
+      .select(col("id").as("k"), (col("id") * 3).as("v"))
+    val jobs = jobsDuring(TxTable.overwriteIndexedBloom(src, t, "k"))
+    // the write (its shuffle stage and the write stage) and the bloom
+    // build; the row total comes from the write tasks
+    assert(jobs === 3, "overwriteIndexedBloom jobs")
+    val snap = TxTable.snapshot(spark, t).get
+    assert(snap.files.size >= 4 && snap.blooms.size === snap.files.size)
+    val owner = TxTable.read(spark, t).filter($"k" === 1234L)
+      .select(input_file_name()).as[String].collect().toSeq
+      .map(_.split('/').last)
+    val kept = TxTable.pruneFilesPoint(snap, "k", "1234")
+    assert(kept.map(_.split('/').last).contains(owner.head) &&
+      kept.size < snap.files.size, s"kept ${kept.size}/${snap.files.size}")
+    assert(TxTable.readPoint(spark, t, "k", "1234")
+      .select("v").as[Long].collect().toSeq === Seq(3702L))
+  }
+
+  test("racing maintainers: maintain, maintainPartitioned and maintainJoin apply every change once") {
+    import graft.sources.IncrementalView
+    val src = freshTable() // (k, g, v)
+    val dim = freshTable() // (k, grp)
+    val (sumV, partV, joinV) = (freshTable(), freshTable(), freshTable())
+    TxTable.enableChangeFeed(spark, src)
+    TxTable.enableChangeFeed(spark, dim)
+    TxTable.append((1 to 12).map(i => (i.toLong, s"g${i % 4}", i * 10L))
+      .toDF("k", "g", "v"), src)
+    TxTable.append((1 to 12).map(i => (i.toLong, s"d${i % 3}"))
+      .toDF("k", "grp"), dim)
+    /** Both threads run `verb` at once; returns what each returned. */
+    def race[T](verb: => T): Seq[T] = {
+      val barrier = new CyclicBarrier(2)
+      val tasks = (1 to 2).map { _ =>
+        val ft = new java.util.concurrent.FutureTask(() => {
+          barrier.await(); verb })
+        new Thread(ft).start(); ft
+      }
+      tasks.map(_.get())
+    }
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.as[(String, Long, Long)].collect().sorted.toSeq
+    def recomputed(df: org.apache.spark.sql.DataFrame, g: String) =
+      rows(df.groupBy(col(g)).agg(count(lit(1)), sum(col("v"))))
+    for (round <- 1 to 3) {
+      // a burst of source commits: append, update, delete on both sides
+      TxTable.append(Seq((100L + round, s"g$round", 7L * round),
+        (200L + round, "g9", 1L)).toDF("k", "g", "v"), src)
+      TxTable.updateWhere(spark, src, Seq(("k", round.toDouble,
+        round.toDouble)), Nil, Map("v" -> ($"v" + 1000L)))
+      TxTable.deleteWhere(spark, src, Seq(("k", round + 5.0, round + 5.0)))
+      TxTable.updateWhere(spark, dim, Seq(("k", round + 2.0, round + 2.0)),
+        Nil, Map("grp" -> lit(s"d$round")))
+      val srcHead = TxTable.snapshot(spark, src).get.version
+      val dimHead = TxTable.snapshot(spark, dim).get.version
+      assert(race(IncrementalView.maintain(spark, src, sumV, "g", "v"))
+        === Seq(srcHead, srcHead))
+      assert(race(IncrementalView.maintainPartitioned(
+        spark, src, partV, "g", "v")) === Seq(srcHead, srcHead))
+      assert(race(IncrementalView.maintainJoin(
+        spark, src, dim, joinV, "k", "grp", "v")) ===
+        Seq((srcHead, dimHead), (srcHead, dimHead)))
+      val expected = recomputed(TxTable.read(spark, src), "g")
+      assert(rows(TxTable.read(spark, sumV)) === expected, s"maintain, round $round")
+      assert(rows(TxTable.read(spark, partV)) === expected,
+        s"maintainPartitioned, round $round")
+      assert(rows(TxTable.read(spark, joinV)) === recomputed(
+        TxTable.read(spark, src).join(TxTable.read(spark, dim), "k"), "grp"),
+        s"maintainJoin, round $round")
+      def marks(view: String) = TxTable.snapshot(spark, view).get.txns
+      assert(marks(sumV) === Map("ivm" -> srcHead))
+      assert(marks(partV) === Map("ivm" -> srcHead))
+      assert(marks(joinV) === Map("ivmj:a" -> srcHead, "ivmj:b" -> dimHead))
+    }
+  }
 }
