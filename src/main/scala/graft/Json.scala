@@ -23,6 +23,18 @@ object Json {
     v
   }
 
+  /** `s` as a JSON string literal: quote and backslash escaped, every
+    * control char (< 0x20) as `\u00XX`. The one encoder of the JSON
+    * this library writes (TxTable manifests, column-mapping sidecars,
+    * Verify's and Bench's outputs); manifest bodies depend on it
+    * staying byte-for-byte the same. */
+  def quote(s: String): String = "\"" + s.flatMap {
+    case '"' => "\\\""
+    case '\\' => "\\\\"
+    case c if c < ' ' => f"\\u${c.toInt}%04x"
+    case c => c.toString
+  } + "\""
+
   /** `parse` + top-level object cast, the common shape. */
   def parseObject(s: String): Map[String, Any] = parse(s) match {
     case o: Map[_, _] => o.asInstanceOf[Map[String, Any]]

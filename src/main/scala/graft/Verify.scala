@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Correctness dump: each SparkEntry.queries result → parquet, plus
   * oracle_sql.json for the DuckDB compare and status.json, one entry
@@ -9,14 +8,7 @@ object Verify {
     val Array(sfDir, outDir) = args.take(2)
     // optional extra args = run only these queries (local dev loop)
     val only = args.drop(2).toSet
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = LocalSpark.session("graft-verify")
     new java.io.File(outDir).mkdirs()
     val status = SparkEntry.queries.toSeq
       .filter { case (name, _) => only.isEmpty || only(name) }
@@ -31,29 +23,14 @@ object Verify {
           s"failed: ${e.getMessage}"
         })
       }
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
-    val json = SparkEntry.oracleSql
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
-    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
+    def obj(kvs: Iterable[(String, String)]): String =
+      kvs.map { case (k, v) => s"${Json.quote(k)}: ${Json.quote(v)}" }.mkString("{", ",", "}")
+    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), obj(SparkEntry.oracleSql))
     // bench-only timed twins (no oracle BY DESIGN): lets a mechanical
     // correctness scan resolve their `no_oracle` entries against the
     // twin's verdict instead of flagging them
-    val twins = SparkEntry.timedTwinOf
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
-    Files.writeString(Paths.get(s"$outDir/timed_twins.json"), twins)
-    Files.writeString(Paths.get(s"$outDir/status.json"), status
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}"))
+    Files.writeString(Paths.get(s"$outDir/timed_twins.json"), obj(SparkEntry.timedTwinOf))
+    Files.writeString(Paths.get(s"$outDir/status.json"), obj(status))
     spark.stop()
     val failed = status.collect { case (k, v) if v != "ok" => k }
     if (failed.nonEmpty) {

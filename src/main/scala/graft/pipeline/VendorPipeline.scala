@@ -34,9 +34,10 @@ import org.apache.spark.sql.expressions.Window
   */
 object VendorPipeline extends QueryModule {
 
-  /** Overridable for the wide-schema volume probe (VendorProbe sets
-    * the property to a replicated copy BEFORE first access — `root`
-    * and the memoized `vendors` are both resolved lazily). Object
+  /** Overridable to run the vendor keys on generated data: write
+    * `perfbench/gen.py`'s `vendors(out, sizes, seed)` fixture and set
+    * `-Dgraft.vendor.root=<out>/datasets` BEFORE first access — `root`
+    * and the memoized `vendors` are both resolved lazily. Object
     * init reads no property and touches no file: a host without the
     * reference still builds the whole registry, and only the vendor
     * keys fail, by name, when they run. */
@@ -48,7 +49,7 @@ object VendorPipeline extends QueryModule {
   /** `<vendor>/<split>.parquet` under `root`: group 1 is the vendor
     * (the split file's parent directory), group 2 the split. The
     * trailing `(/[^/]*)?` also accepts a split written as a directory
-    * of part files (VendorProbe's copies). Java and RE2 read it alike,
+    * of part files (a split Spark wrote). Java and RE2 read it alike,
     * so the engine and the DuckDB oracle share this one rule. */
   private val splitPath = """/([^/]+)/(train|test)\.parquet(/[^/]*)?$"""
   private def fromPath(group: Int): Column =
@@ -414,19 +415,19 @@ object VendorPipeline extends QueryModule {
     // wide-to-long: top-5 pickup locations per vendor by trip count.
     // One-hot INVERSION instead of a 384-way unpivot: the unpivot
     // multiplies every row 384× and drops 383/384 of them on `v = 1`;
-    // since the pickup dummies are one-hot (audited by
-    // pipe_vendor_onehot), ONE array_position per row recovers the
-    // categorical, then a plain narrow grouped aggregation — no row
-    // fanout at any scale. Round-9 plan surgery: ONE multi-file scan
-    // with an EXPLICIT 385-field schema (vendor recovered from the
-    // path) replaces the old per-vendor unionByName of six 722-column
-    // relations — Catalyst no longer analyzes wide children, the six
-    // files are listed once, and no schema inference runs. (A
-    // column-group vertical-sum variant — 4 vectorized scans +
-    // per-vendor Σdummy / Σ td·dummy — measured the same ~2 s: this
-    // query's floor is stage scheduling, not decode, so the fewest-
-    // stage plan wins.) The ranking window input is schema-bounded
-    // (≤384 rows/vendor).
+    // each row explodes only its hot pickup dummies (one on a one-hot
+    // row, as pipe_vendor_onehot audits; each of them on a multi-hot
+    // row, as the oracle's UNPIVOT counts it), then a plain narrow
+    // grouped aggregation — no 384× row fanout at any scale. Round-9
+    // plan surgery: ONE multi-file scan with an EXPLICIT 385-field
+    // schema (vendor recovered from the path) replaces the old
+    // per-vendor unionByName of six 722-column relations — Catalyst no
+    // longer analyzes wide children, the six files are listed once,
+    // and no schema inference runs. (A column-group vertical-sum
+    // variant — 4 vectorized scans + per-vendor Σdummy / Σ td·dummy —
+    // measured the same ~2 s: this query's floor is stage scheduling,
+    // not decode, so the fewest-stage plan wins.) The ranking window
+    // input is schema-bounded (≤384 rows/vendor).
     "pipe_vendor_top_pickup" -> ((s, _) => {
       import s.implicits._
       // every vendor's train split carries the same 722 columns: read
@@ -438,16 +439,13 @@ object VendorPipeline extends QueryModule {
         Seq("train", "test").map(sp => s"$root/$v/$sp.parquet"))
       val gsch = org.apache.spark.sql.types.StructType(
         (pickupCols :+ "trip_duration").map(sch(_)))
-      val names = typedLit(pickupCols.map(_.stripPrefix("pickup_")))
-      val pos = array_position(
-        array(pickupCols.map(col(_).cast("int")): _*), 1)
+      val hot = filter(array(pickupCols.map(c =>
+        when(col(c).cast("int") === 1, lit(c.stripPrefix("pickup_")))): _*),
+        _.isNotNull)
       val w = Window.partitionBy($"vendor").orderBy($"trips".desc, $"loc".asc)
       s.read.schema(gsch).parquet(allPaths: _*)
         .withColumn("vendor", fromPath(1))
-        .select($"vendor", $"trip_duration", pos.as("p"))
-        .filter($"p" > 0)
-        .select($"vendor", element_at(names, $"p".cast("int")).as("loc"),
-          $"trip_duration")
+        .select($"vendor", explode(hot).as("loc"), $"trip_duration")
         .groupBy($"vendor", $"loc").agg(
           count(lit(1)).as("trips"),
           r4(avg($"trip_duration")).as("avg_duration"))

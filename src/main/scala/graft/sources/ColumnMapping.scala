@@ -1,5 +1,6 @@
 package graft.sources
 
+import graft.Json.quote
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions.col
 
@@ -116,11 +117,8 @@ object ColumnMapping {
 
   private[sources] def toJson(m: Mapping): String =
     "{\"cols\":[" + m.entries.map(e =>
-      "{\"l\":" + q(e.logical) + ",\"p\":" + q(e.physical) +
+      "{\"l\":" + quote(e.logical) + ",\"p\":" + quote(e.physical) +
         ",\"d\":" + e.dropped + "}").mkString(",") + "]}"
-
-  private def q(s: String): String =
-    "\"" + s.replace("\\", "\\\\").replace("\"", "\\\"") + "\""
 
   private[sources] def fromJson(body: String): Mapping = {
     val root = graft.Json.parseObject(body)

@@ -1,5 +1,6 @@
 package graft.sources
 
+import graft.Json.quote
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
@@ -515,18 +516,18 @@ object TxTable {
   private[graft] def encodeManifest(s: Snapshot): String = {
     def arr(xs: Iterable[String]) = xs.mkString("[", ",", "]")
     def obj(kvs: Iterable[(String, String)]) =
-      kvs.map { case (k, v) => jq(k) + ":" + v }.mkString("{", ",", "}")
+      kvs.map { case (k, v) => quote(k) + ":" + v }.mkString("{", ",", "}")
     val b = new StringBuilder(
-      s"""{"version":${s.version},"files":${arr(s.files.map(jq))}""")
-    if (s.op != "write") b ++= ",\"op\":" + jq(s.op)
+      s"""{"version":${s.version},"files":${arr(s.files.map(quote))}""")
+    if (s.op != "write") b ++= ",\"op\":" + quote(s.op)
     b ++= ",\"ts\":" + s.ts
-    if (s.changes.nonEmpty) b ++= ",\"cdc\":" + arr(s.changes.map(jq))
+    if (s.changes.nonEmpty) b ++= ",\"cdc\":" + arr(s.changes.map(quote))
     if (s.txns.nonEmpty) b ++= ",\"txns\":" +
       obj(s.txns.toSeq.sorted.map { case (a, e) => a -> e.toString })
     s.statsCol.filter(_ => s.stats.nonEmpty).foreach { c =>
-      b ++= ",\"statscol\":" + jq(c) + ",\"stats\":" + arr(
+      b ++= ",\"statscol\":" + quote(c) + ",\"stats\":" + arr(
         s.stats.toSeq.sortBy(_._1).map { case (p, (mn, mx)) =>
-          s"""{"path":${jq(p)},"min":$mn,"max":$mx}""" })
+          s"""{"path":${quote(p)},"min":$mn,"max":$mx}""" })
     }
     if (s.multiStats.nonEmpty || s.fileValues.nonEmpty)
       b ++= ",\"mstats\":" + arr(
@@ -534,14 +535,14 @@ object TxTable {
           val cols = obj(s.multiStats.getOrElse(p, Map.empty).toSeq
             .sortBy(_._1).map { case (c, (mn, mx)) => c -> s"[$mn,$mx]" })
           val vals = obj(s.fileValues.getOrElse(p, Map.empty).toSeq
-            .sortBy(_._1).map { case (c, vs) => c -> arr(vs.toSeq.sorted.map(jq)) })
-          s"""{"path":${jq(p)},"cols":$cols,"vals":$vals}"""
+            .sortBy(_._1).map { case (c, vs) => c -> arr(vs.toSeq.sorted.map(quote)) })
+          s"""{"path":${quote(p)},"cols":$cols,"vals":$vals}"""
         })
     s.bloomCol.filter(_ => s.blooms.nonEmpty).foreach { c =>
-      b ++= ",\"blooms\":{\"col\":" + jq(c) + ",\"files\":" + arr(
+      b ++= ",\"blooms\":{\"col\":" + quote(c) + ",\"files\":" + arr(
         s.blooms.toSeq.sortBy(_._1).map { case (p, bytes) =>
           val b64 = java.util.Base64.getEncoder.encodeToString(bytes)
-          s"""{"path":${jq(p)},"b64":"$b64"}""" }) + "}"
+          s"""{"path":${quote(p)},"b64":"$b64"}""" }) + "}"
     }
     // entries sharing a predicate body serialize ONCE with a "paths"
     // list (a merge's IN-set touches many files — repeating a 100k-key
@@ -557,13 +558,13 @@ object TxTable {
         s.dels.groupBy(d => (d.ranges, d.eqs, d.ins)).toSeq
           .sortBy(_._2.head.path).map { case ((rs, es, is), ds) =>
             val r = arr(rs.map { case (c, lo, hi) =>
-              arr(Seq(jq(c), jq(lo.toString), jq(hi.toString))) })
-            val e = arr(es.map { case (c, v) => arr(Seq(jq(c), jq(v))) })
+              arr(Seq(quote(c), quote(lo.toString), quote(hi.toString))) })
+            val e = arr(es.map { case (c, v) => arr(Seq(quote(c), quote(v))) })
             val i =
               if (is.isEmpty) ""
               else ",\"i\":" + arr(is.map { case (c, vs) =>
-                arr(Seq(jq(c), arr(vs.map(jq)))) })
-            s"""{"paths":${arr(ds.map(d => jq(d.path)))},"r":$r,"e":$e$i}"""
+                arr(Seq(quote(c), arr(vs.map(quote)))) })
+            s"""{"paths":${arr(ds.map(d => quote(d.path)))},"r":$r,"e":$e$i}"""
           })
     b += '}'
     b.result()
@@ -947,15 +948,6 @@ object TxTable {
 
   def changeFeedEnabled(spark: SparkSession, table: String): Boolean =
     fs(spark, logDir(table)).exists(cdfMarkerPath(table))
-
-  /** JSON string escape for manifest bodies — partition VALUES are
-    * data-derived, so quotes/backslashes/control chars must encode. */
-  private def jq(s: String): String = "\"" + s.flatMap {
-    case '"' => "\\\""
-    case '\\' => "\\\\"
-    case c if c < ' ' => f"\\u${c.toInt}%04x"
-    case c => c.toString
-  } + "\""
 
   /** Atomic commit of `next` as version `next.version` — the one
     * commit path of every writer. Per-file entries (stats, value sets,
@@ -1454,7 +1446,7 @@ object TxTable {
     if (cons.isEmpty) { f.delete(constraintsPath(table), false); () }
     else {
       val body = "{\"constraints\":[" + cons.map { case (n, e) =>
-        s"""{"name":${jq(n)},"expr":${jq(e)}}""" }.mkString(",") + "]}"
+        s"""{"name":${quote(n)},"expr":${quote(e)}}""" }.mkString(",") + "]}"
       val out = f.create(constraintsPath(table), true)
       try out.write(body.getBytes("UTF-8")) finally out.close()
     }

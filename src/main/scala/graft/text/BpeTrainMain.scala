@@ -1,7 +1,5 @@
 package graft.text
 
-import org.apache.spark.sql.SparkSession
-
 /** One-shot fixture generator: prints the trained merge table as the
   * Scala literal pinned into FixtureMerges. Kept in-tree so the
   * fixture is reproducible (`runMain graft.text.BpeTrainMain <sfDir>
@@ -10,10 +8,7 @@ object BpeTrainMain {
   def main(args: Array[String]): Unit = {
     val dir = args.headOption.getOrElse("/root/testdata/sf0.01")
     val ranks = args.lift(1).map(_.toInt).getOrElse(64)
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", 32)
-      .appName("bpe-train").getOrCreate()
+    val spark = graft.LocalSpark.session("bpe-train")
     val docs = graft.Tables.documents(spark, dir)
     val merges = Bpe.train(docs, "text", ranks)
     println("FIXTURE_BEGIN")

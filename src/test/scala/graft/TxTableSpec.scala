@@ -1177,6 +1177,16 @@ class TxTableSpec extends AnyFunSuite {
     // and renaming back to the physical name drops the mapping entry
     TxTable.renameColumn(spark, t, "tag", "v") // v5
     assert(TxTable.read(spark, t).columns.toSeq === Seq("k", "v"))
+    // a name with a tab and a newline round-trips through the mapping
+    // file, whose JSON escapes every control char
+    val odd = "tab\there\nnext"
+    TxTable.renameColumn(spark, t, "v", odd) // v6
+    assert(TxTable.read(spark, t).columns.toSeq === Seq("k", odd))
+    assert(TxTable.read(spark, t).as[(Int, String)].collect().sorted
+      .toSeq === Seq(1 -> "a", 2 -> "b", 3 -> "c"))
+    val sidecar = new String(Files.readAllBytes(
+      java.nio.file.Paths.get(t, "_graft_log", "_mapping_v6.json")), "UTF-8")
+    assert(!sidecar.exists(_ < ' '), sidecar)
   }
 
   test("renameColumn rekeys index metadata: pruning survives the rename") {
